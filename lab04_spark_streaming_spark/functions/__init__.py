@@ -1,1 +1,1 @@
-from lab04_spark_streaming_spark.functions.guards import guarded_avg, guarded_std, safe_zscore  # noqa: F401
+from lab04_spark_streaming_spark.functions.guards import safe_zscore  # noqa: F401

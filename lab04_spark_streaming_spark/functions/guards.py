@@ -1,4 +1,5 @@
-"""Null/NaN/zero guard expressions.
+"""Null/NaN/zero guards and the exact moment arithmetic behind every
+windowed avg/stddev.
 
 The reference guards every statistic it emits (sample stddev over a
 1-row group is NULL; a z-score with std 0/NULL/NaN would be ±inf/NaN):
@@ -7,6 +8,14 @@ The reference guards every statistic it emits (sample stddev over a
   * std  → ``when(isnull|isnan, 0.0)``     (moving_statistic.py:86-87)
   * z    → ``when(std bad, 0.0).otherwise((price-avg)/std)``
                                            (zscore_calculator.py:127-133)
+
+:func:`exact_avg`/:func:`exact_std` keep the avg/std guards' semantics
+but compute from exact decimal moments. This module is the only place
+that knows the moment format (:func:`exact_moments`) and the
+avg/std-from-moments arithmetic (:func:`stats_from_moments`): the
+window() union, the exploded variant and both prefix-sum paths
+(operators/moving_stats_fast.py) all go through them, and the DuckDB
+twins read the same decimal type strings.
 
 These are pure Catalyst expressions — they stay inside whole-stage
 codegen, cost nothing at scale, and are shared by the batch and
@@ -17,20 +26,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def guarded_avg(c: Column) -> Column:
-    """avg with the reference's null→0.0 coalesce (moving_statistic.py:84)."""
-    return F.coalesce(F.avg(c), F.lit(0.0))
-
-
-def guarded_std(c: Column) -> Column:
-    """Sample stddev with null/NaN→0.0 (moving_statistic.py:85-87).
-
-    Spark's ``stddev`` is ``stddev_samp`` — NULL for 1-row groups.
-    """
-    s = F.stddev(c)
-    return F.when(F.isnull(s) | F.isnan(s), F.lit(0.0)).otherwise(s)
 
 
 def bad_std(std: Column) -> Column:
@@ -54,29 +49,49 @@ def safe_zscore(value: Column, avg: Column, std: Column) -> Column:
 # identical inputs — so Spark and DuckDB produce bit-identical doubles
 # and no output rounding is needed at all. Still fully incremental
 # (sum/count/sumsq) → streaming- and partial-agg-friendly.
-
-def exact_avg(c: Column, scale: int = 4) -> Column:
-    """Order-independent avg == guarded_avg semantics (null→0.0)."""
-    n = F.count(c)
-    s = F.sum(c.cast(f"decimal(30,{scale})")).cast("double")
-    return F.when(n == 0, F.lit(0.0)).otherwise(s / n)
-
-
-def exact_std(c: Column, scale: int = 4) -> Column:
-    """Order-independent sample stddev == guarded_std semantics (1-row or
-    empty group → 0.0), via sqrt((Σv² − (Σv)²/n)/(n−1)) on exact moments."""
-    n = F.count(c)
-    s = F.sum(c.cast(f"decimal(30,{scale})")).cast("double")
-    sq = F.sum((c * c).cast(f"decimal(30,{2 * scale})")).cast("double")
-    var = (sq - s * s / n) / (n - F.lit(1))
-    return F.when(n <= 1, F.lit(0.0)).otherwise(F.sqrt(F.greatest(var, F.lit(0.0))))
+#
+# Moment format (one type string each, read by both engines): v at scale
+# 4, v·v at twice that scale so a 4-decimal value squares exactly.
+# Precision 30 leaves 22 integer digits for the square, so |v| < 1e11 —
+# BTCUSDT's ~1e5 prices included.
+_V_DEC = "DECIMAL(30,4)"
+_SQ_DEC = "DECIMAL(30,8)"
 
 
-def sql_exact_avg(col: str, scale: int = 4) -> str:
+def exact_moments(c: Column) -> tuple[Column, Column, Column]:
+    """The per-row moment sums (count(v), Σ v::decimal(30,4),
+    Σ (v·v)::decimal(30,8))."""
+    return F.count(c), F.sum(c.cast(_V_DEC)), F.sum((c * c).cast(_SQ_DEC))
+
+
+def stats_from_moments(n: Column, s: Column, sq: Column) -> tuple[Column, Column]:
+    """(avg, sample stddev) from exact moments (n, Σv, Σv²), guarded like
+    the reference: empty → avg 0.0; 1-row or empty → std 0.0. Std is
+    sqrt((Σv² − (Σv)²/n)/(n−1)), clamped at 0."""
+    sd = s.cast("double")
+    sqd = sq.cast("double")
+    avg = F.when(n == 0, F.lit(0.0)).otherwise(sd / n)
+    var = (sqd - sd * sd / n) / (n - F.lit(1))
+    std = F.when(n <= 1, F.lit(0.0)).otherwise(F.sqrt(F.greatest(var, F.lit(0.0))))
+    return avg, std
+
+
+def exact_avg(c: Column) -> Column:
+    """Order-independent avg with the reference's null→0.0 guard."""
+    return stats_from_moments(*exact_moments(c))[0]
+
+
+def exact_std(c: Column) -> Column:
+    """Order-independent sample stddev with the reference's guard (1-row
+    or empty group → 0.0)."""
+    return stats_from_moments(*exact_moments(c))[1]
+
+
+def sql_exact_avg(col: str) -> str:
     """DuckDB SQL mirroring :func:`exact_avg` expression-for-expression."""
     return (
         f"CASE WHEN COUNT({col}) = 0 THEN 0.0 "
-        f"ELSE CAST(SUM(CAST({col} AS DECIMAL(30,{scale}))) AS DOUBLE) / COUNT({col}) END"
+        f"ELSE CAST(SUM(CAST({col} AS {_V_DEC})) AS DOUBLE) / COUNT({col}) END"
     )
 
 
@@ -94,15 +109,15 @@ def sql_stable_round(col: str, digits: int = 4) -> str:
     """DuckDB SQL mirroring :func:`stable_round`. ``col`` is
     parenthesized before the scale multiply — a compound expression
     with a top-level +/- would otherwise bind only its last factor to
-    the scale (caught live on ``a - b * c / d``, round 8)."""
+    the scale (caught live on ``a - b * c / d``)."""
     p = float(10**digits)
     return f"floor(({col}) * {p} + 0.5) / {p}"
 
 
-def sql_exact_std(col: str, scale: int = 4) -> str:
+def sql_exact_std(col: str) -> str:
     """DuckDB SQL mirroring :func:`exact_std` expression-for-expression."""
-    s = f"CAST(SUM(CAST({col} AS DECIMAL(30,{scale}))) AS DOUBLE)"
-    sq = f"CAST(SUM(CAST({col} * {col} AS DECIMAL(30,{2 * scale}))) AS DOUBLE)"
+    s = f"CAST(SUM(CAST({col} AS {_V_DEC})) AS DOUBLE)"
+    sq = f"CAST(SUM(CAST({col} * {col} AS {_SQ_DEC})) AS DOUBLE)"
     n = f"COUNT({col})"
     return (
         f"CASE WHEN {n} <= 1 THEN 0.0 "

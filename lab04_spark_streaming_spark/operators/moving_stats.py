@@ -36,14 +36,12 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lab04_spark_streaming_spark.functions.guards import (
-    exact_avg,
-    exact_std,
-    guarded_avg,
-    guarded_std,
+    exact_moments,
+    stats_from_moments,
 )
 
 # Reference window set: moving_statistic.py:54-62 — all share a 10 s
@@ -59,23 +57,12 @@ REFERENCE_WINDOWS: tuple[tuple[str, str], ...] = (
 REFERENCE_SLIDE = "10 seconds"
 
 
-def parse_ticks(df: DataFrame, ts_col: str = "event_time") -> DataFrame:
-    """P2+P3: ISO8601 string → timestamp, drop unparseable rows
-    (reference: moving_statistic.py:44-46)."""
-    return df.withColumn(ts_col, F.to_timestamp(F.col(ts_col))).filter(
-        F.col(ts_col).isNotNull()
-    )
-
-
-def _stat_exprs(value_col: str, exact: bool):
-    """The two guarded statistics. ``exact=True`` (default) uses the
-    order-independent decimal-moment forms (functions/guards.py) so
-    results are bit-identical across engines/runs; ``exact=False`` keeps
-    the reference's literal avg/stddev calls (moving_statistic.py:83-87)."""
-    c = F.col(value_col)
-    if exact:
-        return exact_avg(c).alias("avg_value"), exact_std(c).alias("std_value")
-    return guarded_avg(c).alias("avg_value"), guarded_std(c).alias("std_value")
+def _stat_exprs(value_col: str):
+    """The two guarded statistics (reference: moving_statistic.py:83-87),
+    computed from exact decimal moments (functions/guards.py) so results
+    are bit-identical across engines and runs."""
+    avg, std = stats_from_moments(*exact_moments(F.col(value_col)))
+    return avg.alias("avg_value"), std.alias("std_value")
 
 
 def _one_window_stats(
@@ -86,10 +73,9 @@ def _one_window_stats(
     label: str,
     duration: str,
     slide: str,
-    exact: bool = True,
 ) -> DataFrame:
     """One sliding-window agg plan (reference: moving_statistic.py:67-91)."""
-    avg_e, std_e = _stat_exprs(value_col, exact)
+    avg_e, std_e = _stat_exprs(value_col)
     agged = df.groupBy(F.window(F.col(ts_col), duration, slide), *key_cols).agg(
         avg_e, std_e
     )
@@ -109,7 +95,6 @@ def moving_stats_flat(
     value_col: str,
     windows: Sequence[tuple[str, str]] = REFERENCE_WINDOWS,
     slide: str = REFERENCE_SLIDE,
-    exact: bool = True,
 ) -> DataFrame:
     """N sliding-window aggs unioned flat (reference: :67-97, T2+T3+A1).
 
@@ -117,7 +102,7 @@ def moving_stats_flat(
     row per (window-end, key, window-label).
     """
     plans = [
-        _one_window_stats(df, ts_col, key_cols, value_col, label, dur, slide, exact)
+        _one_window_stats(df, ts_col, key_cols, value_col, label, dur, slide)
         for label, dur in windows
     ]
     out = plans[0]
@@ -172,7 +157,7 @@ def moving_stats_exploded(
             )
         ),
     )
-    avg_e, std_e = _stat_exprs(value_col, exact=True)
+    avg_e, std_e = _stat_exprs(value_col)
     return (
         exploded.groupBy(
             F.col("_end_epoch"), F.col("_w.label").alias("window"), *key_cols
@@ -209,31 +194,9 @@ def nest_window_stats(
     )
 
 
-def moving_stats_nested(
-    df: DataFrame,
-    ts_col: str,
-    key_cols: Sequence[str],
-    value_col: str,
-    windows: Sequence[tuple[str, str]] = REFERENCE_WINDOWS,
-    slide: str = REFERENCE_SLIDE,
-) -> DataFrame:
-    """Full stage-2 shape: flat stats → nested array<struct> rows
-    (reference output schema, SURVEY.md §1.3 `btc-price-moving`)."""
-    flat = moving_stats_flat(df, ts_col, key_cols, value_col, windows, slide)
-    return nest_window_stats(flat, key_cols)
-
-
 def _duration_seconds(dur: str) -> int:
     """Parse '30 seconds' / '1 minute' / '1 hour' style durations."""
     n_str, unit = dur.split()
     n = int(n_str)
     unit = unit.rstrip("s")
     return n * {"second": 1, "minute": 60, "hour": 3600}[unit]
-
-
-def window_end_expr(ts: Column, slide_seconds: int) -> Column:
-    """Smallest slide-grid timestamp strictly greater than ``ts`` — the
-    end of the most recent window containing ``ts``. Used by the as-of
-    and exact-grid joins (operators/zscore.py)."""
-    epoch = F.unix_timestamp(ts)
-    return ((F.floor(epoch / slide_seconds) + 1) * slide_seconds).cast("timestamp")

@@ -18,19 +18,26 @@ This module computes identical results from per-slot prefix sums:
                 an as-of lookup into the sparse slot axis, implemented
                 as union + last_value(ignoreNulls) — still no expansion.
 
-avg/std derived from the same exact decimal moments as
-functions/guards.py, so results are bit-identical to the reference
-implementation (asserted in tests and against the DuckDB oracle).
+Moments and avg/std come from functions/guards.exact_moments and
+stats_from_moments — the same arithmetic as the window() union — so
+results are bit-identical to it (asserted in tests and against the
+DuckDB oracle) for values with at most 3 decimal places: the running
+Σv² sums are decimal(38,8), and Spark keeps only scale 7 when it adds
+or subtracts two of them, which rounds a 4-decimal value's square.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from lab04_spark_streaming_spark.functions.guards import safe_zscore
+from lab04_spark_streaming_spark.functions.guards import (
+    exact_moments,
+    safe_zscore,
+    stats_from_moments,
+)
 from lab04_spark_streaming_spark.operators.moving_stats import (
     REFERENCE_WINDOWS,
     _duration_seconds,
@@ -45,6 +52,10 @@ from lab04_spark_streaming_spark.operators.moving_stats import (
 # state across chunk boundaries. 16384 slots ≈ 1.9 days at 10 s.
 CHUNK_SLOTS = 16384
 
+# Moment suffixes: bucket columns _n/_s/_sq, running sums _cn/_cs/_csq.
+_MOMENTS = ("n", "s", "sq")
+_CUM_COLS = tuple(f"_c{m}" for m in _MOMENTS)
+
 
 def bucket_moments(
     df: DataFrame,
@@ -54,31 +65,12 @@ def bucket_moments(
     slide_s: int = 10,
 ) -> DataFrame:
     """Stage 1: exact moments per (key, slot). The only row-count-
-    proportional shuffle in the pipeline (with map-side partial agg).
-
-    r15 (verdict stretch item — zscore per-ROW cost; guide §2.3
-    narrower types): the per-tick casts are decimal(18,*), not (30,*).
-    Same scale ⇒ same quantum ⇒ identical values, sums and final
-    doubles (exceptAll 0/0 both ways at sf0.1; oracle MATCH — the
-    DuckDB twin keeps DECIMAL(30,*)), but precision ≤ 18 keeps Spark's
-    Decimal COMPACT (long-backed: primitive adds in the partial agg
-    instead of BigDecimal allocations, 8-byte inline UnsafeRow storage
-    instead of variable-length bytes in the bucket shuffle).  Bounds:
-    ticks carry |value| ≤ ~600 (vs the 10^14 cast capacity) and the
-    SUM buffer widens to decimal(28,*) — a per-(key, 10 s slot) bucket
-    would need ~10^17 rows of max-magnitude values to overflow, and
-    ANSI mode makes any overflow a loud error, never a wrong answer.
-    Measured: zscore_asof_join 4.35 → 4.14 s interleaved median at
-    sf0.1 (±5%; the separate-session read was 5.62 → 4.79)."""
-    v = F.col(value_col)
+    proportional shuffle in the pipeline (with map-side partial agg)."""
+    n, s, sq = exact_moments(F.col(value_col))
     return (
         df.withColumn("_slot", F.floor(F.unix_timestamp(F.col(ts_col)) / slide_s))
         .groupBy(*key_cols, "_slot")
-        .agg(
-            F.count(v).alias("_n"),
-            F.sum(v.cast("decimal(18,4)")).alias("_s"),
-            F.sum((v * v).cast("decimal(18,8)")).alias("_sq"),
-        )
+        .agg(n.alias("_n"), s.alias("_s"), sq.alias("_sq"))
     )
 
 
@@ -109,9 +101,7 @@ def cumulative_moments(
         return buckets.select(
             *key_cols,
             "_slot",
-            F.sum("_n").over(w).alias("_cn"),
-            F.sum("_s").over(w).alias("_cs"),
-            F.sum("_sq").over(w).alias("_csq"),
+            *[F.sum(f"_{m}").over(w).alias(f"_c{m}") for m in _MOMENTS],
         )
     # pin-bounded: occupied slots x keys (time-span, not tick count).
     # Two consumers below (partial cumsum + per-chunk totals); the
@@ -129,14 +119,10 @@ def cumulative_moments(
         *key_cols,
         "_chunk",
         "_slot",
-        F.sum("_n").over(win).alias("_cn"),
-        F.sum("_s").over(win).alias("_cs"),
-        F.sum("_sq").over(win).alias("_csq"),
+        *[F.sum(f"_{m}").over(win).alias(f"_c{m}") for m in _MOMENTS],
     )
     totals = b.groupBy(*key_cols, "_chunk").agg(
-        F.sum("_n").alias("_tn"),
-        F.sum("_s").alias("_ts"),
-        F.sum("_sq").alias("_tsq"),
+        *[F.sum(f"_{m}").alias(f"_t{m}") for m in _MOMENTS]
     )
     cw = (
         Window.partitionBy(*key_cols)
@@ -157,9 +143,7 @@ def cumulative_moments(
     return part.join(F.broadcast(carry), [*key_cols, "_chunk"]).select(
         *key_cols,
         "_slot",
-        (F.col("_cn") + F.col("_kn")).alias("_cn"),
-        (F.col("_cs") + F.col("_ks")).alias("_cs"),
-        (F.col("_csq") + F.col("_ksq")).alias("_csq"),
+        *[(F.col(f"_c{m}") + F.col(f"_k{m}")).alias(f"_c{m}") for m in _MOMENTS],
     )
 
 
@@ -181,8 +165,7 @@ def asof_cum_lookup(
     carry (the last bucket cum of any earlier chunk — an exclusive
     running window over the tiny one-row-per-chunk summary relation,
     broadcast back), so parallelism follows the time axis."""
-    cum_cols = ("_cn", "_cs", "_csq")
-    cum_types = {c: cums.schema[c].dataType for c in cum_cols}
+    cum_types = {c: cums.schema[c].dataType for c in _CUM_COLS}
     pay = [
         (f.name, f.dataType)
         for f in probes.schema.fields
@@ -193,17 +176,17 @@ def asof_cum_lookup(
         *key_cols,
         F.col("_slot").cast("long").alias("_slot"),
         F.lit(1).alias("_isb"),
-        *cum_cols,
+        *_CUM_COLS,
         *[F.lit(None).cast(t).alias(n) for n, t in pay],
     )
     p_side = probes.select(
         *key_cols,
         F.col("_slot").cast("long").alias("_slot"),
         F.lit(0).alias("_isb"),
-        *[F.lit(None).cast(cum_types[c]).alias(c) for c in cum_cols],
+        *[F.lit(None).cast(cum_types[c]).alias(c) for c in _CUM_COLS],
         *[F.col(n) for n, _ in pay],
     )
-    zero = {c: F.lit(0).cast(cum_types[c]) for c in cum_cols}
+    zero = {c: F.lit(0).cast(cum_types[c]) for c in _CUM_COLS}
 
     if chunk_slots is None:
         # _isb desc orders a bucket BEFORE probes at the same slot: the
@@ -223,7 +206,7 @@ def asof_cum_lookup(
                     F.coalesce(
                         F.last(c, ignorenulls=True).over(w), zero[c]
                     ).alias(c)
-                    for c in cum_cols
+                    for c in _CUM_COLS
                 ],
                 *[n for n, _ in pay],
             )
@@ -249,14 +232,14 @@ def asof_cum_lookup(
         "_slot",
         "_chunk",
         "_isb",
-        *[F.last(c, ignorenulls=True).over(w).alias(c) for c in cum_cols],
+        *[F.last(c, ignorenulls=True).over(w).alias(c) for c in _CUM_COLS],
         *[n for n, _ in pay],
     ).filter(F.col("_isb") == 0)
 
     summ = (
         cums.withColumn("_chunk", F.floor(F.col("_slot") / chunk_slots))
         .groupBy(*key_cols, "_chunk")
-        .agg(F.max(F.struct("_slot", *cum_cols)).alias("_m"))
+        .agg(F.max(F.struct("_slot", *_CUM_COLS)).alias("_m"))
     )
     chunk_domain = u.select(*key_cols, "_chunk").distinct()
     cw = (
@@ -274,21 +257,10 @@ def asof_cum_lookup(
         "_slot",
         *[
             F.coalesce(F.col(c), F.col(f"_carry.{c}"), zero[c]).alias(c)
-            for c in cum_cols
+            for c in _CUM_COLS
         ],
         *[n for n, _ in pay],
     )
-
-
-def _stats_from_moment_diff(n: Column, s: Column, sq: Column) -> tuple[Column, Column]:
-    """avg/std from moment differences — the exact same arithmetic as
-    functions/guards.exact_avg/exact_std, so results are bit-identical."""
-    sd = s.cast("double")
-    sqd = sq.cast("double")
-    avg = F.when(n == 0, F.lit(0.0)).otherwise(sd / n)
-    var = (sqd - sd * sd / n) / (n - F.lit(1))
-    std = F.when(n <= 1, F.lit(0.0)).otherwise(F.sqrt(F.greatest(var, F.lit(0.0))))
-    return avg, std
 
 
 def moving_stats_flat_fast(
@@ -342,16 +314,12 @@ def moving_stats_flat_fast(
     hi = looked.select(
         *key_cols,
         F.col("_slot").alias("_hi_slot"),
-        F.col("_cn").alias("_hn"),
-        F.col("_cs").alias("_hs"),
-        F.col("_csq").alias("_hsq"),
+        *[F.col(f"_c{m}").alias(f"_h{m}") for m in _MOMENTS],
     )
     lo = looked.select(
         *key_cols,
         F.col("_slot").alias("_lo_slot"),
-        F.col("_cn").alias("_ln"),
-        F.col("_cs").alias("_ls"),
-        F.col("_csq").alias("_lsq"),
+        *[F.col(f"_c{m}").alias(f"_l{m}") for m in _MOMENTS],
     )
     j = (
         ends.withColumn("_hi_slot", F.col("_end") - 1)
@@ -359,10 +327,8 @@ def moving_stats_flat_fast(
         .join(hi, [*key_cols, "_hi_slot"])
         .join(lo, [*key_cols, "_lo_slot"])
     )
-    n = F.col("_hn") - F.col("_ln")
-    s = F.col("_hs") - F.col("_ls")
-    sq = F.col("_hsq") - F.col("_lsq")
-    avg, std = _stats_from_moment_diff(n, s, sq)
+    n, s, sq = (F.col(f"_h{m}") - F.col(f"_l{m}") for m in _MOMENTS)
+    avg, std = stats_from_moments(n, s, sq)
     return (
         j.filter(n > 0)
         .select(
@@ -429,23 +395,13 @@ def zscore_asof_fast(
     # without lineage cuts the plan replayed the parquet scan 34 times
     # at sf0.1 (0 ReusedExchange: exchange reuse does not fire across
     # these differently-shaped subtrees). Occupied-slot-sized → cheap to
-    # materialize at any scale.
-    # pin-bounded: occupied slots x keys x offsets, see below.
-    # Pin-storage audit (r12 triage): every pin on this path (cums,
-    # resolved, the chunked fill union) is BOUNDED by occupied slots x
-    # keys x offsets — independent of tick count (the 1000x probe ran
-    # 1000x the events in 5.3x the time, exponent 0.24, with these pins
-    # deserialized). They stay at the fast deserialized default: the
-    # relations are read 2-4x each on the flagship hot path, and they
-    # grow only with the TIME SPAN (slots), which the chunked two-level
-    # prefix scan already partitions; a year-long span at 10 s slides
-    # is ~3.2M slots x keys — still far from the ~120M-row pin size
-    # that forced wave9's serialized conversion.
-    # pin-bounded: occupied slots x keys (see audit note above)
+    # materialize at any scale. Every pin on this path (cums, resolved,
+    # the chunked fill union) grows with the time span, not the tick
+    # count, so it keeps the fast deserialized default.
+    # pin-bounded: occupied slots x keys (time-span, not tick count)
     cums = cumulative_moments(
         buckets, key_cols, chunk_slots=chunk_slots
     ).localCheckpoint(eager=False)
-    cum_cols = ("_cn", "_cs", "_csq")
 
     offs = sorted(
         {1 + st for st in range(max_stale_slots + 1)}
@@ -499,7 +455,7 @@ def zscore_asof_fast(
         *key_cols,
         "_end0",
         (F.col("_off") - 1).alias("_st"),
-        *[F.col(c).alias(f"_h{c[1:]}") for c in cum_cols],
+        *[F.col(c).alias(f"_h{c[1:]}") for c in _CUM_COLS],
     )
     # _off → (window label, staleness) decode for the lo side
     # (off = 1 + st + dslots). NOT injective in general — two windows
@@ -523,13 +479,11 @@ def zscore_asof_fast(
         "_end0",
         "window",
         "_st",
-        *[F.col(c).alias(f"_l{c[1:]}") for c in cum_cols],
+        *[F.col(c).alias(f"_l{c[1:]}") for c in _CUM_COLS],
     )
     j = hi.join(lo, [*key_cols, "_end0", "_st"])
-    n = F.col("_hcn") - F.col("_lcn")
-    s = F.col("_hcs") - F.col("_lcs")
-    sq = F.col("_hcsq") - F.col("_lcsq")
-    avg, std = _stats_from_moment_diff(n, s, sq)
+    n, s, sq = (F.col(f"_h{c[1:]}") - F.col(f"_l{c[1:]}") for c in _CUM_COLS)
+    avg, std = stats_from_moments(n, s, sq)
     # Freshest (smallest staleness) non-empty window per (key, slot,
     # window). The join partitions on (key, _end0, _st) while this groupBy
     # clusters on (key, _end0, window), so Spark inserts one more exchange

@@ -1,8 +1,8 @@
 """Stage-3 operator: z-score of each tick against its moving statistics.
 
-Re-expression of the reference's ``zscore_calculator.py``: flatten the
-nested stats (``explode``, N2-N3), inner equi-join ticks to stats on
-(time, key) (T4), compute the guarded z-score (P4/P8), re-nest (A2).
+Re-expression of the reference's ``zscore_calculator.py``: inner
+equi-join ticks to the flat stats on (time, key) (T4), compute the
+guarded z-score (P4/P8), re-nest (A2).
 
 Two join semantics are provided:
 
@@ -23,8 +23,8 @@ Scale notes (100 TB):
   * Both joins are equi-joins on (time-slot, key) → hash-partitioned
     sort-merge join; AQE converts to broadcast when the stats side is
     small (it is: one row per (slot, key, window) — ~6 rows per key per
-    10 s). For a known-small stats side, callers can force
-    ``F.broadcast(stats)``; `zscore_exact_grid` takes a flag.
+    10 s). For a known-small stats side, callers can pass
+    ``F.broadcast(stats)``.
   * The as-of variant quantizes BOTH sides to the slide grid first, so
     it stays an equi-join (never a range-join explosion); the
     tie-break dedup is a per-key window function over at most D/S rows.
@@ -40,39 +40,21 @@ from pyspark.sql import functions as F
 from lab04_spark_streaming_spark.functions.guards import safe_zscore
 
 
-def flatten_window_stats(nested: DataFrame, key_cols: Sequence[str]) -> DataFrame:
-    """N2+N3: array<struct> stats → one flat row per window entry
-    (reference: zscore_calculator.py:84-97)."""
-    return nested.select(
-        "timestamp",
-        *key_cols,
-        F.explode(F.col("windows")).alias("window_data"),
-    ).select(
-        "timestamp",
-        *key_cols,
-        F.col("window_data.window").alias("window"),
-        F.col("window_data.avg_value").alias("avg_value"),
-        F.col("window_data.std_value").alias("std_value"),
-    )
-
-
 def zscore_exact_grid(
     ticks: DataFrame,
     stats_flat: DataFrame,
     ts_col: str,
     key_cols: Sequence[str],
     value_col: str,
-    broadcast_stats: bool = False,
 ) -> DataFrame:
     """Reference-literal join: tick time must EQUAL the stats window end
     (zscore_calculator.py:103-109 — see SURVEY.md §3.4 for why this only
     matches grid-aligned ticks). Output flat:
     (timestamp, *keys, window, zscore_value)."""
-    right = F.broadcast(stats_flat) if broadcast_stats else stats_flat
     cond = (F.col(f"t.{ts_col}") == F.col("s.timestamp")) & F.lit(True)
     for k in key_cols:
         cond = cond & (F.col(f"t.{k}") == F.col(f"s.{k}"))
-    joined = ticks.alias("t").join(right.alias("s"), cond, "inner")
+    joined = ticks.alias("t").join(stats_flat.alias("s"), cond, "inner")
     return joined.select(
         F.col("s.timestamp").alias("timestamp"),
         *[F.col(f"t.{k}").alias(k) for k in key_cols],

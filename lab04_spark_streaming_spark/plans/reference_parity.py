@@ -15,19 +15,20 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lab04_spark_streaming_spark.functions.guards import (
+    sql_exact_avg,
+    sql_exact_std,
     sql_stable_round,
     stable_round,
 )
-from lab04_spark_streaming_spark.operators.moving_stats import moving_stats_flat
-from lab04_spark_streaming_spark.operators.splits import restore_splits
-from lab04_spark_streaming_spark.operators.zscore import (
-    zscore_asof,
-    zscore_exact_grid,
+from lab04_spark_streaming_spark.operators.moving_stats import (
+    REFERENCE_WINDOWS,
+    _duration_seconds,
+    moving_stats_flat,
+    nest_window_stats,
 )
+from lab04_spark_streaming_spark.operators.splits import restore_splits
 from lab04_spark_streaming_spark.schemas import EVENT_PROPS_SCHEMA
 from lab04_spark_streaming_spark.sources.files import load_table
-
-from lab04_spark_streaming_spark.functions.guards import sql_exact_avg, sql_exact_std
 
 # Window subsets. Oracle queries bound their OUTPUT size so they stay
 # collectable under the driver's plain (default-heap) SparkSession at
@@ -35,16 +36,8 @@ from lab04_spark_streaming_spark.functions.guards import sql_exact_avg, sql_exac
 # set runs over a bounded time slice. Together they cover all six
 # durations. (Observed: unbounded 6-window flat output is ~4M rows at
 # sf0.01 — kills a 1 GiB driver during collect.)
-WINDOWS_SHORT = (("30s", 30), ("1m", 60), ("5m", 300))
-WINDOWS_ALL = WINDOWS_SHORT + (("15m", 900), ("30m", 1800), ("1h", 3600))
-SPARK_WINDOWS = {
-    "30s": "30 seconds",
-    "1m": "1 minute",
-    "5m": "5 minutes",
-    "15m": "15 minutes",
-    "30m": "30 minutes",
-    "1h": "1 hour",
-}
+WINDOWS_ALL = REFERENCE_WINDOWS
+WINDOWS_SHORT = REFERENCE_WINDOWS[:3]  # 30s, 1m, 5m
 
 
 def stats_cte(windows=WINDOWS_ALL, until: str | None = None) -> str:
@@ -53,7 +46,9 @@ def stats_cte(windows=WINDOWS_ALL, until: str | None = None) -> str:
     grid point in (t, t + dur]. avg/std are the exact decimal-moment
     expressions matching operators/moving_stats.py (bit-identical
     doubles, no rounding needed)."""
-    values = ", ".join(f"('{label}', {secs})" for label, secs in windows)
+    values = ", ".join(
+        f"('{label}', {_duration_seconds(dur)})" for label, dur in windows
+    )
     where = f"WHERE e.ts < TIMESTAMP '{until}'" if until else ""
     return f"""
   w(label, dur_s) AS (VALUES {values}),
@@ -92,10 +87,6 @@ def _events(
     return df
 
 
-def _spark_windows(windows) -> list[tuple[str, str]]:
-    return [(label, SPARK_WINDOWS[label]) for label, _ in windows]
-
-
 def _stats_flat(
     spark: SparkSession,
     sf_dir: str,
@@ -110,17 +101,15 @@ def _stats_flat(
 
     Measured at sf0.1: short windows over the full month favor naive
     (4.5 s vs 10.6 s), the 6-window set favors prefix sums (2.7 s vs
-    15.2 s) — so pick by the expansion factor Σ(D/S)."""
+    15.2 s) — so pick by the expansion factor Σ(D/S). The measurements
+    behind each branch are in OPTIMIZATION_r14.md and OPTIMIZATION_r15.md."""
     from lab04_spark_streaming_spark.operators.moving_stats_fast import (
+        CHUNK_SLOTS,
         moving_stats_flat_fast,
     )
 
-    from lab04_spark_streaming_spark.operators.moving_stats_fast import (
-        CHUNK_SLOTS,
-    )
-
     ev = _events(spark, sf_dir, until)
-    expansion = sum(secs // 10 for _, secs in windows)
+    expansion = sum(_duration_seconds(dur) // 10 for _, dur in windows)
     if expansion >= 100:
         # Chunk the prefix scans only when the slot axis is long enough
         # to amortize the extra two-level-scan stages: an `until`-bounded
@@ -130,54 +119,18 @@ def _stats_flat(
             "ts",
             ["event_type"],
             "value",
-            windows=_spark_windows(windows),
+            windows=windows,
             chunk_slots=None if until else CHUNK_SLOTS,
         )
-    # r14 optimization, RE-ADJUDICATED by the standing probe-on-change
-    # rule: an earlier r14 session served this branch via
-    # moving_stats_exploded over a round-robin repartition (sf0.1
-    # median 1.07 s vs the union's 2.07 in the same session), but the
-    # 10x probe read exponent 1.12 (14.4 s) against the union's flat
-    # history (0.15/0.14/0.40 across three decades) and the timings
-    # were erratic (3.4-23 s swings): the exploded form's sequence()
-    # explode ALLOCATES an array per input row (GC-bound at x39
-    # expansion), and the keyless repartition pays round-robin's
-    # sort-before-repartition (guide §2.5).  The window() union expands
-    # through allocation-free codegen Expand — measured stable and
-    # fastest at every probed tier — so it serves again, over a
-    # DETERMINISTIC-hash split restoration (guide §2.5 input skew /
-    # SPARK-38388) applied only when the scan cannot feed the cores
-    # (the one-row-group local fixture; at cluster scale inputs arrive
-    # with parts >= cores and this is a no-op).  AQE exchange reuse
-    # dedups the three branch subtrees to one shuffle write.
-    # r15 (ADVICE): hash the unique event_id directly — pmod(xxhash64,
-    # cores*100) collapsed the hash space to cores*100 buckets, adding
-    # ~10% expected partition-size variance for no benefit.  The guard
-    # (repartition only when the scan cannot feed the cores) now lives
-    # in the shared restore_splits helper.
-    #
-    # r15 (verdict item 5, measured): the split restoration is applied
-    # only to the UNBOUNDED full-table case.  For an `until`-bounded
-    # slice (nested's week) the repartition's extra exchange + barrier
-    # costs more than the single-split expand it parallelizes — 5-run
-    # sf0.1 medians: nested 2.46 with the repartition vs 1.66 without
-    # (the r13 shape the driver read at 1.95 s); flat (full month)
-    # keeps it per the r14 A/B (1.90 vs 2.07).  At cluster scale both
-    # branches are no-ops (multi-split inputs).
-    #
-    # A single-exchange "onepass" union variant (window() Expand in a
-    # projection, union BEFORE one groupBy) was built, measured and
-    # REJECTED this round: sf0.1 flat 2.10 -> 1.95 and nested 2.33 ->
-    # 1.85 looked good, but the same-fixture 100x A/B read 40.6 s vs
-    # the union's 13.4 s (exponent 0.64 vs 0.33) — the merged
-    # Union(Expand x3/x6/x30) map stage loses the per-leg codegen the
-    # separate aggregation legs get.  The union's committed probe
-    # history (0.15/0.14/0.40 across three decades) stands.
+    # The window() union expands through allocation-free codegen Expand
+    # (the exploded form allocates an array per row and scaled worse at
+    # 10x). Split restoration pays off only on the full-table scan; on
+    # an `until`-bounded slice the extra exchange costs more than the
+    # single-split expand it parallelizes. A single-exchange "onepass"
+    # union (one groupBy over the unioned Expands) lost at 100x.
     if until is None:
         ev = restore_splits(ev, "event_id")
-    return moving_stats_flat(
-        ev, "ts", ["event_type"], "value", windows=_spark_windows(windows)
-    )
+    return moving_stats_flat(ev, "ts", ["event_type"], "value", windows=windows)
 
 
 # --- A1+T2+T3: sliding windows avg/stddev, flat ---------------------------
@@ -314,14 +267,7 @@ def q_moving_stats_nested_json(spark: SparkSession, sf_dir: str) -> DataFrame:
         stable_round(F.col("avg_value")).alias("avg_value"),
         stable_round(F.col("std_value")).alias("std_value"),
     )
-    nested = flat.groupBy("timestamp", "event_type").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(F.col("window"), F.col("avg_value"), F.col("std_value"))
-            )
-        ).alias("windows")
-    )
-    return nested.select(
+    return nest_window_stats(flat, ["event_type"]).select(
         "timestamp", "event_type", F.to_json(F.col("windows")).alias("windows_json")
     )
 

@@ -84,8 +84,7 @@ def stage2_wire(ticks: DataFrame, **kwargs) -> DataFrame:
     (moving_statistic.py:20-21) and so must callers of this wire shape
     (call :func:`strict_parity_conf` first). The flat shape
     (``stage2_moving_stats(nested=False)``) needs no such flag and is
-    the recommended streaming output; downstream stage 3 consumes
-    either (it re-flattens the nested form anyway)."""
+    the recommended streaming output and the shape stage 3 consumes."""
     nested = stage2_moving_stats(ticks, **kwargs)
     key_cols = [c for c in nested.columns if c not in ("timestamp", "windows")]
     return nested.select(

@@ -86,12 +86,6 @@ def decode_json(df: DataFrame, schema: StructType) -> DataFrame:
     ).select("data.*")
 
 
-def encode_json(df: DataFrame, *cols: str) -> DataFrame:
-    """S6: to_json(struct(...)) as the Kafka ``value``
-    (reference: moving_statistic.py:116-118)."""
-    return df.select(F.to_json(F.struct(*[F.col(c) for c in cols])).alias("value"))
-
-
 def file_stream(
     spark: SparkSession,
     path: str,

@@ -12,82 +12,28 @@ from lab04_spark_streaming_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", SF_DIR)
 
-# --- Slow tier (r15, verdict item 2) ---------------------------------------
-# The full suite outgrew the driver's verify window (r14: 541 tests in
-# 40:10 quiet / 75:49 loaded; VERIFY_r14 tests_ok=false was a TIMEOUT at
-# ~87%, not a failure).  The tests below — measured >= 12 s each on a
-# quiet box (pytest --durations, /tmp-logged r15; together 1.7k s of the
-# 2.4k s total) — are SKIPPED by default and run with
-# SPARK_GRAFT_FULL_TESTS=1 (CI/tier runs; the r15 session ran the full
-# suite green before shipping this split).  Deliberately KEPT in the
-# default tier: the entire 280-query oracle-parity sweep (the
-# correctness gate proper — its three >= 12 s instances included) and
-# test_bench_smoke_one_run (guards the driver's bench contract).
-# Selection is by test FUNCTION name so new parametrizations of a slow
-# family inherit its tier.
-_SLOW_TIER = {
-    # hypothesis fuzz / randomized cross-engine parity (minutes each)
-    "test_random_events_timeseries_cross_engine_parity",
-    "test_random_embeddings_ann_cross_engine_parity",
-    "test_random_corpus_cross_engine_parity",
-    "test_r6_corpus_queries_random_parity",
-    "test_skyline_pareto_matches_bruteforce",
-    "test_random_corpus_wave9_parity",
-    "test_random_events_wave9_parity",
-    "test_random_events_wave10_parity",
-    "test_random_corpus_wave11_parity",
-    "test_random_events_wave12_parity",
-    "test_random_events_wave13_parity",
-    # brute-force equivalence checks over full fixtures
-    "test_ks_and_mwu_match_bruteforce",
-    "test_gini_matches_bruteforce",
-    "test_kcenter_matches_bruteforce",
-    "test_triangle_count_matches_bruteforce",
-    "test_ppr_and_bfs_match_bruteforce",
-    "test_triangle_pins_store_serialized",
-    "test_kcore_deduped_equals_peel_over_rep_graph",
-    "test_lpa_deduped_respects_components_of_rep_graph",
-    # naive-vs-fast full-fixture equality (operator-level; the serving
-    # paths are separately oracle-checked every round)
-    "test_moving_stats_flat_fast_equals_naive",
-    "test_zscore_asof_fast_equals_naive",
-    "test_zscore_grid_via_asof_stale0_equals_naive_grid",
-    "test_moving_stats_exploded_variant_agrees",
-    # registry-wide plan audits (build-time gates, not correctness)
-    "test_all_registered_queries_plan_hygiene",
-    "test_headline_plans_codegen_fallback_free",
-    # streaming micro-batch e2e (real StreamingQuery runs, 15-55 s each)
-    "test_watermark_drops_late_rows",
-    "test_sessionize_counter_ttl_expires",
-    "test_volume_anomaly_stream_multi_microbatch",
-    "test_stage2_stream_equals_batch",
-    "test_srm_stream_dedup_across_microbatches",
-    "test_stream_stream_left_outer_emits_unmatched",
-    "test_stage3_stream_stream_join",
-    "test_scd2_stream_watermark_boundary_semantics",
-    "test_stage2_wire_shape",
-    "test_first_crossing_out_of_order_tick_corrects_answer",
-    "test_scd2_stream_interleaved_late_arrival_rewrites_runs",
-    "test_srm_stream_checkpoint_stop_resume_dedup",
-    "test_stream_stream_left_outer_join_emits_unmatched",
-    "test_twap_stream_multi_microbatch_out_of_order",
-    "test_sessionize_rocksdb_checkpoint_stop_resume",
-    "test_sessionize_checkpoint_stop_resume_continues_state",
-    "test_kmv_stream_checkpoint_stop_resume_merges_state",
-    "test_interval_union_stream_twin_matches_batch",
-    "test_debounce_stream_twin_matches_batch",
-}
+# --- Slow tier ------------------------------------------------------------
+# Tests marked ``@pytest.mark.slow`` (each >= 12 s on a quiet 4-core box:
+# randomized cross-engine fuzz, brute-force equivalence checks over full
+# fixtures, registry-wide plan audits, streaming micro-batch e2e runs)
+# are skipped unless SPARK_GRAFT_FULL_TESTS=1, so the default run fits
+# the verify window. The 280-query oracle-parity sweep and the bench
+# smoke test stay in the default tier.
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "slow: skipped unless SPARK_GRAFT_FULL_TESTS=1 (>= 12 s each)",
+    )
 
 
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1":
         return
-    skip = pytest.mark.skip(
-        reason="slow tier — run with SPARK_GRAFT_FULL_TESTS=1 "
-        "(r15: default run must fit the driver's verify window)"
-    )
+    skip = pytest.mark.skip(reason="slow tier — run with SPARK_GRAFT_FULL_TESTS=1")
     for item in items:
-        if item.name.split("[", 1)[0] in _SLOW_TIER:
+        if item.get_closest_marker("slow"):
             item.add_marker(skip)
 
 

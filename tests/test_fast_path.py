@@ -11,7 +11,12 @@ from __future__ import annotations
 
 from collections import Counter
 
-from lab04_spark_streaming_spark.operators.moving_stats import moving_stats_flat
+import pytest
+
+from lab04_spark_streaming_spark.operators.moving_stats import (
+    REFERENCE_WINDOWS,
+    moving_stats_flat,
+)
 from lab04_spark_streaming_spark.operators.moving_stats_fast import (
     moving_stats_flat_fast,
     zscore_asof_fast,
@@ -20,6 +25,49 @@ from lab04_spark_streaming_spark.operators.zscore import zscore_asof
 from lab04_spark_streaming_spark.sources.files import load_table
 
 
+def test_fast_paths_equal_naive_on_btc_prices(spark):
+    """The reference's real price domain: BTCUSDT ticks above 1e5 (their
+    squares need 11 integer digits in the Σv² moment), one far above in a
+    later slot, and a second key with a negative value and single-tick
+    slots. Both prefix-sum paths must match the naive operators row for
+    row."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1)
+    ev = spark.createDataFrame(
+        [
+            (1, t0 + dt.timedelta(seconds=1), "BTCUSDT", 108000.0),
+            (2, t0 + dt.timedelta(seconds=4), "BTCUSDT", 108012.5),
+            (3, t0 + dt.timedelta(seconds=12), "BTCUSDT", 107990.25),
+            (4, t0 + dt.timedelta(seconds=95), "BTCUSDT", 250000.0),
+            (5, t0 + dt.timedelta(seconds=3), "ETHUSDT", -12.75),
+            (6, t0 + dt.timedelta(seconds=47), "ETHUSDT", 2500.5),
+        ],
+        "event_id long, ts timestamp, event_type string, value double",
+    )
+    # The three short reference windows: the 1h window()'s 360-way
+    # Expand alone would cost ~10 s per naive plan here.
+    wins = REFERENCE_WINDOWS[:3]
+    naive = moving_stats_flat(ev, "ts", ["event_type"], "value", windows=wins)
+    fast = moving_stats_flat_fast(ev, "ts", ["event_type"], "value", windows=wins)
+    naive_rows = naive.collect()
+    s = Counter(tuple(r) for r in naive_rows)
+    assert s == Counter(tuple(r) for r in fast.collect())
+    assert sum(s.values()) > 0
+
+    stats = spark.createDataFrame(naive_rows, naive.schema)
+    naive_z = zscore_asof(
+        ev, stats, "ts", ["event_type"], "value", id_col="event_id"
+    )
+    fast_z = zscore_asof_fast(
+        ev, "ts", ["event_type"], "value", windows=wins, id_col="event_id"
+    )
+    z = Counter(tuple(r) for r in naive_z.collect())
+    assert z == Counter(tuple(r) for r in fast_z.collect())
+    assert sum(z.values()) > 0
+
+
+@pytest.mark.slow
 def test_moving_stats_flat_fast_equals_naive(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     slow = moving_stats_flat(ev, "ts", ["event_type"], "value")
@@ -35,6 +83,7 @@ def test_moving_stats_flat_fast_equals_naive(spark, sf_dir):
     assert s == f
 
 
+@pytest.mark.slow
 def test_zscore_asof_fast_equals_naive(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     slow = zscore_asof(
@@ -135,6 +184,7 @@ def test_asof_join_carry_crosses_empty_chunks(spark):
     assert tol[2] == (None, None)
 
 
+@pytest.mark.slow
 def test_zscore_grid_via_asof_stale0_equals_naive_grid(spark, sf_dir):
     """The r7 rewiring of q_zscore_grid: exact-grid join == as-of with
     max_stale_slots=0 over slot-quantized ticks. Assert the served

@@ -295,6 +295,7 @@ def test_rep_docs_one_representative_per_cluster(spark, sf_dir):
     assert set(kept) == expected
 
 
+@pytest.mark.slow
 def test_kcore_deduped_equals_peel_over_rep_graph(spark, sf_dir):
     """The deduped k-core must equal the exact peel recomputed in
     Python over the edge relation built from the representative doc
@@ -421,6 +422,7 @@ def test_lpa_communities_respect_components(spark, sf_dir):
     assert n_communities >= n_components
 
 
+@pytest.mark.slow
 def test_lpa_deduped_respects_components_of_rep_graph(spark, sf_dir):
     """The deduped LPA must satisfy the same label/component invariant
     over the REPRESENTATIVE edge relation, and must label only

@@ -83,6 +83,7 @@ def test_dedup_shuffle_carries_hash_not_text(spark, sf_dir):
     assert ex and all("text" not in l for l in ex)
 
 
+@pytest.mark.slow
 def test_moving_stats_exploded_variant_agrees(spark, sf_dir):
     """The single-shuffle exploded variant (operators/moving_stats.py)
     must agree with the unioned variant."""
@@ -117,6 +118,7 @@ def test_entry_plan_has_no_wide_expand(spark):
     assert "Generate" in plan  # the explode(sequence) row enumeration
 
 
+@pytest.mark.slow
 def test_headline_plans_codegen_fallback_free(sf_dir):
     """No headline plan may fall back to interpreted evaluation: janino
     logs `ERROR CodeGenerator: Failed to compile` (method > 64 KB, e.g.
@@ -1101,6 +1103,7 @@ def test_r9_wave_plan_hygiene(spark, sf_dir):
     assert n_scans == 1, n_scans
 
 
+@pytest.mark.slow
 def test_all_registered_queries_plan_hygiene(spark, sf_dir):
     """GLOBAL gate over every registered query (the per-wave audits
     only cover their own wave): no CartesianProduct anywhere, ever;

@@ -63,6 +63,7 @@ _PROP_QUERIES = [
 ]
 
 
+@pytest.mark.slow
 @settings(
     max_examples=6,
     deadline=None,
@@ -153,6 +154,7 @@ def test_first_crossing_batch_matches_bruteforce(spark, offsets, vals, direction
 _EV_OFFSET_US = st.integers(min_value=0, max_value=3 * 3600 * 1_000_000)
 
 
+@pytest.mark.slow
 @settings(
     max_examples=6,
     deadline=None,
@@ -266,6 +268,7 @@ def test_random_events_timeseries_cross_engine_parity(
 
 
 # --- random embeddings through the ANN / k-means oracles --------------------
+@pytest.mark.slow
 @settings(
     max_examples=4,
     deadline=None,
@@ -338,6 +341,7 @@ def test_random_embeddings_ann_cross_engine_parity(
 _R6_CORPUS_QUERIES = "char_entropy word_repetition word_cooccurrence bpe_pair_counts heavy_hitters_cms dedup_incremental bloom_membership textrank_keywords".split()
 
 
+@pytest.mark.slow
 @settings(
     max_examples=5,
     deadline=None,
@@ -411,6 +415,7 @@ def test_global_row_number_property(spark, keys, nparts):
     assert got == expected
 
 
+@pytest.mark.slow
 @settings(
     max_examples=8,
     deadline=None,

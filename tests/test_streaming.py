@@ -58,6 +58,7 @@ def tick_dir(spark, tmp_path):
     return path
 
 
+@pytest.mark.slow
 def test_stage2_stream_equals_batch(spark, tick_dir):
     stream = file_stream(spark, tick_dir, TICK_SCHEMA)
     assert stream.isStreaming
@@ -80,6 +81,7 @@ def test_stage2_stream_equals_batch(spark, tick_dir):
     assert got == expected
 
 
+@pytest.mark.slow
 def test_stage2_wire_shape(spark, tick_dir):
     """The nested wire output chains window-agg → collect_list-agg —
     the exact multi-stateful pattern for which the reference disables
@@ -107,6 +109,7 @@ def test_stage2_wire_shape(spark, tick_dir):
     assert "T" not in msg["timestamp"]
 
 
+@pytest.mark.slow
 def test_watermark_drops_late_rows(spark, tmp_path):
     """Rows >10 s older than the committed watermark must not produce
     windows (T1/T5). Note Spark's late filter uses the watermark
@@ -183,6 +186,7 @@ def test_first_crossing_stream_matches_batch(spark, tmp_path, direction):
             assert expected[k] == pytest.approx(v, abs=1e-6)
 
 
+@pytest.mark.slow
 def test_stage3_stream_stream_join(spark, tmp_path):
     """Stage 3 end-to-end with BOTH sides streaming (T4): ticks stream
     ⋈ stage-2 stats stream on (grid time, symbol), append mode. Ticks
@@ -311,6 +315,7 @@ def test_stream_static_enrichment_join(spark, tmp_path):
     assert matched, "expected at least one enriched row"
 
 
+@pytest.mark.slow
 def test_first_crossing_out_of_order_tick_corrects_answer(spark, tmp_path):
     """Regression: a tick admissible under the 10s watermark arrives in
     a LATER micro-batch with an EARLIER crossing time. Eager resolution
@@ -515,6 +520,7 @@ def test_sessionize_stream_matches_batch(spark, tmp_path):
         assert expected[k] == v, (k, expected[k], v)
 
 
+@pytest.mark.slow
 def test_debounce_stream_twin_matches_batch(spark, tmp_path):
     """The wave-8 batch debounce (plans/wave8.q_debounce_keep_first) is
     a gap-chain with a finer key — so its streaming twin IS
@@ -611,6 +617,7 @@ def test_debounce_stream_twin_matches_batch(spark, tmp_path):
         assert streamed[k] == v, (k, v, streamed[k])
 
 
+@pytest.mark.slow
 def test_interval_union_stream_twin_matches_batch(spark, tmp_path):
     """Equal-width activity intervals make the union-of-intervals
     islands EXACTLY gap-W sessions (next start > running max end
@@ -688,6 +695,7 @@ def test_interval_union_stream_twin_matches_batch(spark, tmp_path):
             assert (sn, si, sa) == (bn, bi, ba), u
 
 
+@pytest.mark.slow
 def test_stream_stream_left_outer_join_emits_unmatched(spark, tmp_path):
     """Outer stream-stream join: matched left rows carry the right
     value; unmatched left rows must STILL emit (NULL right columns)
@@ -869,6 +877,7 @@ def test_sessionize_stream_rocksdb_state(spark, tmp_path):
     assert got[(1, 0)] == 3 and got[(1, 1)] == 2
 
 
+@pytest.mark.slow
 def test_sessionize_counter_ttl_expires(spark, tmp_path):
     """counter_ttl_s bounds sessionize state by the active-key set: an
     idle key's two-scalar ordinal counter is dropped once the watermark
@@ -973,6 +982,7 @@ def test_twap_stream_matches_batch(spark, tmp_path):
     assert len(streamed) >= len(expected) - 2
 
 
+@pytest.mark.slow
 def test_twap_stream_multi_microbatch_out_of_order(spark, tmp_path):
     """One hour's observations split across micro-batches, with the
     later batch delivering an EARLIER event time (admissible under a
@@ -1124,6 +1134,7 @@ def test_cms_counters_stream_matches_batch(spark, tmp_path):
     assert sum(streamed.values()) == sum(len(t.split()) for _, t in rows) * 4
 
 
+@pytest.mark.slow
 def test_stream_stream_left_outer_emits_unmatched(spark, tmp_path):
     """Left-outer stream-stream join (band ±30 s): matched left rows
     carry the right payload; unmatched ones are emitted with NULLs
@@ -1409,6 +1420,7 @@ def test_scd2_stream_matches_batch(spark, tmp_path):
     assert streamed == expected
 
 
+@pytest.mark.slow
 def test_scd2_stream_interleaved_late_arrival_rewrites_runs(spark, tmp_path):
     """The reason state retains RAW events: an admissible event that
     lands between pending events must rewrite the run structure.
@@ -1571,6 +1583,7 @@ def test_hll_dau_stream_matches_batch(spark, tmp_path):
         assert batch[hour] == est, (hour, batch[hour], est)
 
 
+@pytest.mark.slow
 def test_scd2_stream_watermark_boundary_semantics(spark, tmp_path):
     """Pins the MEASURED Spark 4 late-row semantics the scd2 finality
     rule depends on (probed empirically, r7): applyInPandasWithState
@@ -1656,6 +1669,7 @@ def test_scd2_stream_watermark_boundary_semantics(spark, tmp_path):
     ]
 
 
+@pytest.mark.slow
 def test_sessionize_checkpoint_stop_resume_continues_state(spark, tmp_path):
     """Operational recovery: a stateful streaming query stopped after a
     checkpointed availableNow run and RESTARTED from the same
@@ -1830,6 +1844,7 @@ def test_enrich_stream_temporal_rejects_colliding_dim_columns(spark):
         enrich_stream_temporal(stream, dim, ["user_id"], "ts")
 
 
+@pytest.mark.slow
 def test_sessionize_rocksdb_checkpoint_stop_resume(spark, tmp_path):
     """Stop/resume recovery on the RocksDB state store with changelog
     checkpointing — the 100 TB configuration (r6 wired it; this is the
@@ -1959,6 +1974,7 @@ def test_kmv_stream_matches_batch(spark, tmp_path):
     assert sub_k[0] == 7 and sub_k[2] == 7.0
 
 
+@pytest.mark.slow
 def test_kmv_stream_checkpoint_stop_resume_merges_state(spark, tmp_path):
     """Custom array-state restore: a KMV sketch built before a
     checkpointed stop must MERGE with post-restart arrivals for the
@@ -2113,6 +2129,7 @@ def test_volume_anomaly_stream_matches_batch(spark, tmp_path):
     assert streamed[("click", (day0 + dt.timedelta(days=9)).date())][2]
 
 
+@pytest.mark.slow
 def test_volume_anomaly_stream_multi_microbatch(spark, tmp_path):
     """Days arriving INCREMENTALLY across micro-batches (one 2-day
     file per batch) must finalize with the same trailing window and
@@ -2393,6 +2410,7 @@ def test_srm_stream_matches_batch(spark, tmp_path):
     assert streamed[t0 + dt.timedelta(hours=1)][2] is True
 
 
+@pytest.mark.slow
 def test_srm_stream_dedup_across_microbatches(spark, tmp_path):
     """A user re-appearing LATE in the same hour, in a LATER
     micro-batch, must still count once: the dedup horizon is
@@ -2517,6 +2535,7 @@ def test_srm_stream_rocksdb_state(spark, tmp_path):
     assert got[t0] == (20, 20, False)
 
 
+@pytest.mark.slow
 def test_srm_stream_checkpoint_stop_resume_dedup(spark, tmp_path):
     """Operational recovery for the SRM guardrail: a user first seen
     BEFORE a checkpointed stop and re-sent AFTER the restart must still

@@ -11,6 +11,7 @@ import math
 import os
 
 import duckdb
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -26,6 +27,7 @@ _EVENT_QUERIES = [
 ]
 
 
+@pytest.mark.slow
 @settings(
     max_examples=5,
     deadline=None,

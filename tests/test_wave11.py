@@ -12,6 +12,7 @@ import re
 from collections import Counter
 
 import duckdb
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -37,6 +38,7 @@ def _write_lineitem_edges(spark, d, edges):
     )
 
 
+@pytest.mark.slow
 @settings(
     max_examples=6,
     deadline=None,
@@ -184,6 +186,7 @@ _WORD = st.text(alphabet="abcdef 123.,", min_size=0, max_size=10)
 _DOC = st.lists(_WORD, min_size=0, max_size=12).map(" ".join)
 
 
+@pytest.mark.slow
 @settings(
     max_examples=5,
     deadline=None,

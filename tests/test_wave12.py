@@ -12,6 +12,7 @@ import re
 from fractions import Fraction
 
 import duckdb
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -28,6 +29,7 @@ _EVENT_QUERIES = [
 ]
 
 
+@pytest.mark.slow
 @settings(
     max_examples=5,
     deadline=None,

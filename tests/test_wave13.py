@@ -9,6 +9,7 @@ import math
 import os
 
 import duckdb
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -18,6 +19,7 @@ from tests.oracle_harness import compare_query
 _T0 = dt.datetime(2024, 6, 1, 0, 0, 0)
 
 
+@pytest.mark.slow
 @settings(
     max_examples=5,
     deadline=None,

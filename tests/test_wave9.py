@@ -42,6 +42,7 @@ _DOC_QUERIES = [
 ]
 
 
+@pytest.mark.slow
 @settings(
     max_examples=5,
     deadline=None,
@@ -117,6 +118,7 @@ _WORD = st.text(
 _DOC = st.lists(_WORD, min_size=0, max_size=15).map(" ".join)
 
 
+@pytest.mark.slow
 @settings(
     max_examples=5,
     deadline=None,
@@ -169,6 +171,7 @@ def _write_events(spark, d, vals_a, vals_b):
     )
 
 
+@pytest.mark.slow
 @settings(
     max_examples=8,
     deadline=None,
@@ -216,6 +219,7 @@ def test_ks_and_mwu_match_bruteforce(
     assert (row.na, row.nb, row.u2) == (na, nb, u2)
 
 
+@pytest.mark.slow
 @settings(
     max_examples=8,
     deadline=None,
@@ -258,6 +262,7 @@ def test_gini_matches_bruteforce(spark, tmp_path_factory, counts):
     assert abs(row.gini - num / (n * s)) < 1e-4
 
 
+@pytest.mark.slow
 @settings(
     max_examples=6,
     deadline=None,
@@ -304,6 +309,7 @@ def test_triangle_count_matches_bruteforce(spark, tmp_path_factory, edges):
     assert row.n_triangles == tri
 
 
+@pytest.mark.slow
 def test_triangle_pins_store_serialized(spark, sf_dir, monkeypatch):
     """The r11 pin-storage rule: triangle_count's row-proportional
     multi-consumer pins (pairs/oriented/adj) must store SERIALIZED —
@@ -576,6 +582,7 @@ def test_matryoshka_recall_bounds(spark, sf_dir):
         assert 0.0 <= r.recall_at_k <= 1.0
 
 
+@pytest.mark.slow
 @settings(
     max_examples=5,
     deadline=None,
