@@ -7,25 +7,25 @@ streaming-safe ``groupBy(window(ts, dur, slide), *keys)`` computing
 the per-window plans unioned, and optionally re-nested into one
 ``array<struct>`` row per (timestamp, key) via ``collect_list(struct)``.
 
-Mode-agnostic: the input may be a batch DataFrame (driver correctness
-harness over the ``events`` table) or a watermarked streaming DataFrame
-(Kafka pipeline, see streaming/pipeline.py) — the plan is identical;
-only the sink differs. This is the idiomatic Spark shape: one logical
-plan, Catalyst incrementalizes it for streaming.
-
-Scale notes (100 TB):
-  * Each window agg shuffles on (window, *keys). All N window plans
-    share the SAME slide, so they hash-partition on compatible keys;
-    Spark runs partial (map-side) aggregation before the exchange, so
-    the shuffle carries one partial row per (partition, window, key),
-    not raw ticks. With D/S windows per row the state is D/S rows per
-    key per window-kind — bounded, watermark-evicted in streaming.
-  * The union of N aggs is N independent shuffles of the SAME input
-    scan; Spark reuses the scan via ReusedExchange under AQE. For very
-    large N, the explode-based variant (`moving_stats_exploded`) does
-    ONE shuffle by materializing the (row × window) expansion first —
-    trade bandwidth (D/S dup rows) for shuffle count. Both provided;
-    bench picks per workload.
+``moving_stats_flat`` (that union) and ``moving_stats_exploded`` take a
+batch DataFrame (the oracle correctness harness over the ``events`` table)
+or a watermarked streaming DataFrame and emit the same rows; which one
+runs depends on the execution mode:
+  * Streaming (``streaming/pipeline.stage2_moving_stats``) uses
+    ``moving_stats_exploded``: one stateful aggregate over (window end,
+    label, *keys) memberships. The window() union plans an Expand of
+    D/S projections per window (3+6+30+90+180+360 = 669 for the
+    reference set) that a stream re-plans, ships and compiles on every
+    micro-batch, runs one scan and one state store per window, and its
+    1h/10s Expand is too large for whole-stage codegen.
+  * ``entry()`` serves ``moving_stats_exploded`` too, for the codegen
+    reason; the registry's batch queries run ``moving_stats_flat`` or
+    the prefix-sum paths of ``operators/moving_stats_fast.py``, as
+    ``plans/reference_parity._stats_flat`` picks per window set.
+  * Each window agg shuffles on (window, *keys) after a partial
+    (map-side) aggregation, so the shuffle carries one partial row per
+    (partition, window end, key), not raw ticks; the state is D/S rows
+    per key per window, watermark-evicted in streaming.
   * ``collect_list`` re-nesting shuffles on (timestamp, *keys); element
     order is non-deterministic so we ``sort_array`` for deterministic
     output (reference emits unsorted — documented deviation for
@@ -119,19 +119,27 @@ def moving_stats_exploded(
     windows: Sequence[tuple[str, str]] = REFERENCE_WINDOWS,
     slide: str = REFERENCE_SLIDE,
 ) -> DataFrame:
-    """Single-shuffle variant of :func:`moving_stats_flat`.
+    """Single-aggregate variant of :func:`moving_stats_flat`, same rows.
 
-    Expands each row to its (label, window_end) memberships with an
-    inline array + explode (no UDF, no extra scan), then does ONE
-    groupBy. At 100 TB this replaces N shuffles of partial aggregates
-    with one shuffle of D/S-duplicated rows — wins when N is large or
-    the input scan is the bottleneck; see bench.py.
+    Expands each row to its (label, window end) memberships with an
+    inline array + ``explode(sequence)`` (no UDF, no extra scan), then
+    runs ONE groupBy over (end, label, *keys). The plan's size does not
+    depend on Σ D/S, unlike the window() union's Expand.
 
-    Semantically identical to the unioned variant (verified in tests).
+    Streaming: the window end carries the time column's metadata (as
+    ``window()`` copies it onto its struct), so a watermark on
+    ``ts_col`` evicts state and drops late memberships by window end.
+    The end is the only time column the aggregate sees: with ``ts_col``
+    also there, Spark's late-row filter could pick it and drop a
+    partially late row whole. The output ``timestamp`` carries no
+    metadata, like the union's ``window.end``.
     """
     slide_s = _duration_seconds(slide)
-    exploded = df.withColumn(
-        "_w",
+    slot = F.floor(F.unix_timestamp(F.col(ts_col)) / slide_s) * slide_s
+    labelled = df.select(
+        slot.alias("_slot"),
+        *key_cols,
+        F.col(value_col),
         F.explode(
             F.array(
                 *[
@@ -142,29 +150,36 @@ def moving_stats_exploded(
                     for label, dur in windows
                 ]
             )
-        ),
+        ).alias("_w"),
     )
-    # Row with time t belongs to windows ending at e = ceil-to-grid
-    # offsets; enumerate ends e in (t, t + D] with e ≡ 0 (mod S).
-    exploded = exploded.withColumn(
-        "_end_epoch",
+    # A row at time t belongs to the windows ending at e in (t, t + D]
+    # with e ≡ 0 (mod S).
+    ends = labelled.select(
         F.explode(
             F.sequence(
-                (F.floor(F.unix_timestamp(F.col(ts_col)) / slide_s) + 1) * slide_s,
-                F.floor(F.unix_timestamp(F.col(ts_col)) / slide_s) * slide_s
-                + F.col("_w.dur_s"),
+                F.col("_slot") + slide_s,
+                F.col("_slot") + F.col("_w.dur_s"),
                 F.lit(slide_s),
             )
-        ),
+        ).alias("_end_epoch"),
+        *key_cols,
+        F.col("_w.label").alias("window"),
+        F.col(value_col),
+    )
+    memberships = ends.select(
+        F.col("_end_epoch")
+        .cast("timestamp")
+        .alias("timestamp", metadata=df.schema[ts_col].metadata),
+        *key_cols,
+        "window",
+        value_col,
     )
     avg_e, std_e = _stat_exprs(value_col)
     return (
-        exploded.groupBy(
-            F.col("_end_epoch"), F.col("_w.label").alias("window"), *key_cols
-        )
+        memberships.groupBy("timestamp", "window", *key_cols)
         .agg(avg_e, std_e)
         .select(
-            F.col("_end_epoch").cast("timestamp").alias("timestamp"),
+            F.col("timestamp").alias("timestamp", metadata={}),
             *key_cols,
             "window",
             "avg_value",

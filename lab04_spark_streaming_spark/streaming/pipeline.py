@@ -8,11 +8,12 @@ Stage 3 (reference: zscore_calculator.py): ticks ⋈ stats (stream-stream
 inner equi-join, both sides watermarked) → z-score → nest → JSON →
 Kafka `btc-price-zscore`, append mode, 5 s trigger.
 
-The transformation bodies are the SAME operator functions the batch
-path uses (operators/moving_stats.py, operators/zscore.py) — the
-streaming wrapper only adds watermarks and sinks. That is the designed
-invariant: one logical plan, two execution modes, and the batch oracle
-harness therefore validates the streaming semantics (SURVEY.md §5).
+The transformation bodies are operator functions the batch path also
+runs (operators/moving_stats.py, operators/zscore.py) — the streaming
+wrapper only adds watermarks and sinks. Stage 2 uses the one-aggregate
+variant, which emits the batch window() union's rows (asserted per
+micro-batch in tests/test_streaming.py), so the batch oracle harness
+validates the streaming semantics (SURVEY.md §5).
 
 The reference chains multiple stateful operators inside single queries
 and must disable Spark's correctness check
@@ -29,12 +30,12 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from lab04_spark_streaming_spark.operators.moving_stats import (
     REFERENCE_SLIDE,
     REFERENCE_WINDOWS,
-    moving_stats_flat,
+    moving_stats_exploded,
     nest_window_stats,
 )
 from lab04_spark_streaming_spark.operators.zscore import (
@@ -67,9 +68,15 @@ def stage2_moving_stats(
     nested: bool = True,
 ) -> DataFrame:
     """Watermarked 6-window stats (T1+T2+T3+A1+A2). Works on a
-    streaming OR batch DataFrame (withWatermark is a no-op in batch)."""
+    streaming OR batch DataFrame (withWatermark is a no-op in batch).
+
+    One stateful aggregate over (window end, keys, label) memberships
+    (``moving_stats_exploded``): the window() union would re-plan,
+    ship and compile a Σ D/S-projection Expand (669 for the reference
+    windows) and commit one state store per window on every
+    micro-batch. Emits the same rows, late drops and state rows."""
     wm = ticks.withWatermark(ts_col, watermark) if ticks.isStreaming else ticks
-    flat = moving_stats_flat(wm, ts_col, list(key_cols), value_col, windows, slide)
+    flat = moving_stats_exploded(wm, ts_col, list(key_cols), value_col, windows, slide)
     return nest_window_stats(flat, list(key_cols)) if nested else flat
 
 
@@ -78,7 +85,7 @@ def stage2_wire(ticks: DataFrame, **kwargs) -> DataFrame:
     string (Spark default format — reference moving_statistic.py:109),
     JSON value ready for Kafka.
 
-    Streaming callers note: the nested shape chains window-agg →
+    Streaming callers note: the nested shape chains stats-agg →
     collect_list-agg (two stateful operators), which Spark's
     correctness check rejects — the reference disables the check
     (moving_statistic.py:20-21) and so must callers of this wire shape
@@ -301,9 +308,10 @@ def foreach_batch_parquet(
     )
 
 
-def memory_sink_once(df: DataFrame, name: str, output_mode: str) -> None:
+def memory_sink_once(df: DataFrame, name: str, output_mode: str) -> StreamingQuery:
     """Test helper: run the stream to completion (availableNow) into an
-    in-memory table ``name`` and block until done."""
+    in-memory table ``name``, block until done and return the query
+    (its ``recentProgress`` holds the per-micro-batch metrics)."""
     q = (
         df.writeStream.format("memory")
         .queryName(name)
@@ -312,6 +320,7 @@ def memory_sink_once(df: DataFrame, name: str, output_mode: str) -> None:
         .start()
     )
     q.awaitTermination()
+    return q
 
 
 def enrich_stream(

@@ -81,7 +81,6 @@ def test_stage2_stream_equals_batch(spark, tick_dir):
     assert got == expected
 
 
-@pytest.mark.slow
 def test_stage2_wire_shape(spark, tick_dir):
     """The nested wire output chains window-agg → collect_list-agg —
     the exact multi-stateful pattern for which the reference disables
@@ -109,7 +108,22 @@ def test_stage2_wire_shape(spark, tick_dir):
     assert "T" not in msg["timestamp"]
 
 
-@pytest.mark.slow
+def _write_feed(spark, path, blocks):
+    """One parquet file per block under ``path/batch=i``, with file
+    times pinned in block order (the file source reads oldest first);
+    returns the glob to stream."""
+    import time as _time
+
+    now = _time.time()
+    for i, rows in enumerate(blocks):
+        sub = path / f"batch={i}"
+        spark.createDataFrame(rows, TICK_SCHEMA).coalesce(1).write.parquet(str(sub))
+        mtime = now - 300 + i * 10
+        for f in sub.iterdir():
+            os.utime(f, (mtime, mtime))
+    return str(path / "batch=*")
+
+
 def test_watermark_drops_late_rows(spark, tmp_path):
     """Rows >10 s older than the committed watermark must not produce
     windows (T1/T5). Note Spark's late filter uses the watermark
@@ -117,40 +131,117 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     batches after the fresh data that established the watermark
     (verified empirically: a late file in the very next batch is still
     accepted — batch N's filter runs on the watermark of batch N-1)."""
-    fresh = _ticks(n=60, start=T0)
-    fresh2 = _ticks(n=10, start=T0 + dt.timedelta(seconds=60))
     late = _ticks(n=10, start=T0 - dt.timedelta(seconds=3600))
-    path = tmp_path / "wm"
-    os.makedirs(path)
-    spark.createDataFrame(fresh, TICK_SCHEMA).coalesce(1).write.parquet(
-        str(path / "batch=0")
+    feed = _write_feed(
+        spark,
+        tmp_path / "wm",
+        [_ticks(n=60, start=T0), _ticks(n=10, start=T0 + dt.timedelta(seconds=60)), late],
     )
-    spark.createDataFrame(fresh2, TICK_SCHEMA).coalesce(1).write.parquet(
-        str(path / "batch=1")
-    )
-    spark.createDataFrame(late, TICK_SCHEMA).coalesce(1).write.parquet(
-        str(path / "batch=2")
-    )
-    # File source orders by modification time — pin the batch order.
-    import time as _time
-
-    now = _time.time()
-    for i, sub in enumerate(("batch=0", "batch=1", "batch=2")):
-        mtime = now - 300 + i * 100
-        for f in (path / sub).iterdir():
-            os.utime(f, (mtime, mtime))
-    stream = file_stream(
-        spark, str(path / "batch=*"), TICK_SCHEMA, max_files_per_trigger=1
-    )
+    stream = file_stream(spark, feed, TICK_SCHEMA, max_files_per_trigger=1)
     flat = stage2_moving_stats(
         stream, "event_time", ["symbol"], "price", nested=False
     )
-    memory_sink_once(flat, "wm_out", "update")
+    q = memory_sink_once(flat, "wm_out", "update")
     stamps = [r.timestamp for r in spark.table("wm_out").collect()]
     assert stamps
     # no window end at/before the late block's hour
     cutoff = T0 - dt.timedelta(seconds=1800)
     assert all(t > cutoff for t in stamps)
+    # Every window membership of the late block is dropped and counted.
+    # The state operator counts rows after the map-side partial
+    # aggregation, one per (window, end, key); the 10 late ticks share
+    # one 10 s slot, hence all their memberships: D/S per window,
+    # 3 + 6 + 30 + 90 + 180 + 360 = 669 for the six reference windows.
+    dropped = sum(
+        op.numRowsDroppedByWatermark
+        for p in q.recentProgress
+        for op in p.stateOperators
+    )
+    assert dropped == 669
+
+
+def _per_batch(df, checkpoint):
+    """Stream ``df`` to completion in update mode; returns
+    {batch id: Counter of emitted rows} and the query progress."""
+    from collections import Counter
+
+    out = {}
+
+    def collect(batch_df, batch_id):
+        out[batch_id] = Counter(tuple(r) for r in batch_df.collect())
+
+    q = (
+        df.writeStream.foreachBatch(collect)
+        .outputMode("update")
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return out, q.recentProgress
+
+
+def test_stage2_one_aggregate_matches_window_union_per_batch(spark, tmp_path):
+    """Stage 2 runs as ONE stateful aggregate over window memberships,
+    and per micro-batch it emits the same rows, drops the same late
+    memberships and keeps the same state rows as the window() union
+    over the same watermarked feed. Batch 2 carries ticks 5-14 s behind
+    the watermark (some of their windows still open) and ticks ~12 min
+    behind it (every window closed); batch 3 ticks 50-59 s behind."""
+    from lab04_spark_streaming_spark.operators.moving_stats import REFERENCE_WINDOWS
+    from lab04_spark_streaming_spark.streaming.pipeline import WATERMARK
+
+    def at(s):
+        return T0 + dt.timedelta(seconds=s)
+
+    feed = _write_feed(
+        spark,
+        tmp_path / "feed",
+        [
+            _ticks(n=60, start=at(0)),
+            _ticks(n=60, start=at(60)),
+            _ticks(n=10, start=at(95)) + _ticks(n=5, start=at(-600))
+            + _ticks(n=10, start=at(120)),
+            _ticks(n=10, start=at(60)) + _ticks(n=10, start=at(130), symbol="ETHUSDT"),
+        ],
+    )
+    windows = REFERENCE_WINDOWS[:3]
+    stage2 = stage2_moving_stats(
+        file_stream(spark, feed, TICK_SCHEMA, max_files_per_trigger=1),
+        "event_time",
+        ["symbol"],
+        "price",
+        windows=windows,
+        nested=False,
+    )
+    union = moving_stats_flat(
+        file_stream(spark, feed, TICK_SCHEMA, max_files_per_trigger=1).withWatermark(
+            "event_time", WATERMARK
+        ),
+        "event_time",
+        ["symbol"],
+        "price",
+        windows,
+    )
+    assert stage2.schema["timestamp"].metadata == {}
+    got, got_progress = _per_batch(stage2, str(tmp_path / "ck_stage2"))
+    want, want_progress = _per_batch(union, str(tmp_path / "ck_union"))
+
+    assert got == want
+    assert all(len(p.stateOperators) == 1 for p in got_progress)
+
+    def state(progress):
+        return {
+            p.batchId: (
+                sum(op.numRowsDroppedByWatermark for op in p.stateOperators),
+                sum(op.numRowsTotal for op in p.stateOperators),
+            )
+            for p in progress
+        }
+
+    per_batch = state(got_progress)
+    assert per_batch == state(want_progress)
+    assert per_batch[2][0] > 0 and per_batch[3][0] > 0  # both late blocks cut
 
 
 @pytest.mark.parametrize("direction", ["higher", "lower"])
