@@ -56,6 +56,11 @@ def safe_zscore(value: Column, avg: Column, std: Column) -> Column:
 # BTCUSDT's ~1e5 prices included.
 _V_DEC = "DECIMAL(30,4)"
 _SQ_DEC = "DECIMAL(30,8)"
+# Running (prefix) sums of Σv and Σv²: precision 37, one digit under
+# Spark's cap, so adding or subtracting two keeps every scale digit.
+# Two decimal(38,s) operands keep only max(38 − integer digits, min(s, 6))
+# of them: decimal(38,8) ± decimal(38,8) is decimal(38,7).
+RUNNING_DEC = {"s": "DECIMAL(37,4)", "sq": "DECIMAL(37,8)"}
 
 
 def exact_moments(c: Column) -> tuple[Column, Column, Column]:

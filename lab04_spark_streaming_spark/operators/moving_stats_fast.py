@@ -21,19 +21,21 @@ This module computes identical results from per-slot prefix sums:
 Moments and avg/std come from functions/guards.exact_moments and
 stats_from_moments — the same arithmetic as the window() union — so
 results are bit-identical to it (asserted in tests and against the
-DuckDB oracle) for values with at most 3 decimal places: the running
-Σv² sums are decimal(38,8), and Spark keeps only scale 7 when it adds
-or subtracts two of them, which rounds a 4-decimal value's square.
+DuckDB oracle). The running sums and chunk carries are held at
+guards.RUNNING_DEC (precision 37): Spark keeps only scale 7 when it adds
+or subtracts two decimal(38,8) values, which would round a 4-decimal
+value's square.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from lab04_spark_streaming_spark.functions.guards import (
+    RUNNING_DEC,
     exact_moments,
     safe_zscore,
     stats_from_moments,
@@ -55,6 +57,13 @@ CHUNK_SLOTS = 16384
 # Moment suffixes: bucket columns _n/_s/_sq, running sums _cn/_cs/_csq.
 _MOMENTS = ("n", "s", "sq")
 _CUM_COLS = tuple(f"_c{m}" for m in _MOMENTS)
+
+
+def _running(c: Column, moment: str) -> Column:
+    """A running sum of moment ``moment`` ("n", "s" or "sq") at its
+    running-sum type (guards.RUNNING_DEC), so that sums of and
+    differences between two running sums stay exact."""
+    return c.cast(RUNNING_DEC[moment]) if moment in RUNNING_DEC else c
 
 
 def bucket_moments(
@@ -101,7 +110,7 @@ def cumulative_moments(
         return buckets.select(
             *key_cols,
             "_slot",
-            *[F.sum(f"_{m}").over(w).alias(f"_c{m}") for m in _MOMENTS],
+            *[_running(F.sum(f"_{m}").over(w), m).alias(f"_c{m}") for m in _MOMENTS],
         )
     # pin-bounded: occupied slots x keys (time-span, not tick count).
     # Two consumers below (partial cumsum + per-chunk totals); the
@@ -119,7 +128,7 @@ def cumulative_moments(
         *key_cols,
         "_chunk",
         "_slot",
-        *[F.sum(f"_{m}").over(win).alias(f"_c{m}") for m in _MOMENTS],
+        *[_running(F.sum(f"_{m}").over(win), m).alias(f"_c{m}") for m in _MOMENTS],
     )
     totals = b.groupBy(*key_cols, "_chunk").agg(
         *[F.sum(f"_{m}").alias(f"_t{m}") for m in _MOMENTS]
@@ -132,18 +141,18 @@ def cumulative_moments(
     carry = totals.select(
         *key_cols,
         "_chunk",
-        F.coalesce(F.sum("_tn").over(cw), F.lit(0)).alias("_kn"),
-        F.coalesce(
-            F.sum("_ts").over(cw), F.lit(0).cast(totals.schema["_ts"].dataType)
-        ).alias("_ks"),
-        F.coalesce(
-            F.sum("_tsq").over(cw), F.lit(0).cast(totals.schema["_tsq"].dataType)
-        ).alias("_ksq"),
+        *[
+            _running(F.coalesce(F.sum(f"_t{m}").over(cw), F.lit(0)), m).alias(f"_k{m}")
+            for m in _MOMENTS
+        ],
     )
     return part.join(F.broadcast(carry), [*key_cols, "_chunk"]).select(
         *key_cols,
         "_slot",
-        *[(F.col(f"_c{m}") + F.col(f"_k{m}")).alias(f"_c{m}") for m in _MOMENTS],
+        *[
+            _running(F.col(f"_c{m}") + F.col(f"_k{m}"), m).alias(f"_c{m}")
+            for m in _MOMENTS
+        ],
     )
 
 

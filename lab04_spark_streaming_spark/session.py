@@ -73,24 +73,8 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # r15 RE-ADJUDICATION of the r14 64k coalescing floor (verdict
-        # item 1): r14 lowered the floor to 64k on noop A/Bs whose
-        # "before" baselines were load-inflated; the driver's own r14
-        # bench then read a ~10% regression across ten untouched
-        # queries and an 8-core run that BEAT the 32-core run.  Re-run
-        # clean this round (quiet box, driver methodology — cold
-        # session, median-of-5, all 24 headline queries, 3 interleaved
-        # rounds per setting, plans/r15/bench_r15_floor_*.json):
-        # totals 1m 47.39 s < 256k 48.13 s < 64k 49.62 s; per-query
-        # geomean 1m/64k = 1.020, and 1m wins exactly where the driver
-        # saw the r14 regressions (ann_ivfpq 3.88 vs 4.88 s,
-        # copurchase 2.23 vs 2.65, triangle 4.38 vs 4.87, zscore 5.65
-        # vs 6.14) while 64k's wins are confined to sub-2 s fixed-
-        # overhead queries.  At sf0.1 the whole headline set is
-        # per-task-overhead bound (the driver's scaling block: no
-        # query benefits from 32 cores over 8), so the byte-based
-        # coalescer's 1m default is the right floor — kept at the
-        # Spark default, still env-overridable for cluster tuning.
+        # At sf0.1 every query is per-task-overhead bound, and the byte
+        # coalescer's 1m default beat 64k/256k floors in an interleaved A/B.
         .config(
             "spark.sql.adaptive.coalescePartitions.minPartitionSize",
             os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m"),
@@ -101,6 +85,26 @@ def get_spark(
         # Streaming micro-batches keep their own checkpointing; make temp
         # checkpoints cleanable (reference: moving_statistic.py:13).
         .config("spark.sql.streaming.forceDeleteTempCheckpointLocation", "true")
+        # The one streaming state configuration. RocksDB keeps state off
+        # the heap with bounded memory (a heap-backed store is the first
+        # OOM on a large keyspace); changelog checkpointing keeps commit
+        # cost flat as state grows. Join state format 3 (Spark >= 4.1,
+        # RocksDB only) keeps a stream-stream join's four states in one
+        # store per partition instead of four: every store commit writes
+        # its own delta and checksum files, so a micro-batch's commit
+        # cost follows its store count. A checkpoint keeps the provider
+        # and join format it was started with (both restored from its
+        # offset log).
+        .config(
+            "spark.sql.streaming.stateStore.providerClass",
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        )
+        .config("spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage", "true")
+        .config(
+            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+            "true",
+        )
+        .config("spark.sql.streaming.join.stateFormatVersion", "3")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # GC-locker OOM guard (one-box artifact, observed twice at the
         # r11 100x/1000x scale tiers on this kernel/JDK 17.0.20 combo):
@@ -143,28 +147,3 @@ def kafka_jars_conf(jars_dir: str | None = None) -> dict[str, str]:
     )
     jars = sorted(glob.glob(os.path.join(d, "*.jar")))
     return {"spark.jars": ",".join(jars)} if jars else {}
-
-
-def rocksdb_state_conf() -> dict[str, str]:
-    """Streaming state store conf for large keyspaces (VERDICT r5 item
-    6): the default HDFSBackedStateStoreProvider keeps every key's
-    state on the executor HEAP — at 100 TB / high-cardinality keys
-    (sessionize per user, dedup-within-watermark per doc id) that is
-    the first OOM.  RocksDBStateStoreProvider (built into Spark ≥3.2)
-    spills state to local disk with bounded memory, and changelog
-    checkpointing keeps commit latency flat as state grows.  Pass as
-    ``get_spark(extra_conf=rocksdb_state_conf())`` or set per-query;
-    proven end-to-end in
-    tests/test_streaming.py::test_sessionize_stream_rocksdb_state."""
-    return {
-        "spark.sql.streaming.stateStore.providerClass": (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        ),
-        # Bound RocksDB block-cache + memtable memory per executor so
-        # state growth lands on disk, not the heap.
-        "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage": "true",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": (
-            "true"
-        ),
-    }

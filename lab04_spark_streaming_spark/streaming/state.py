@@ -647,8 +647,8 @@ def ewma_stream_tws(
     (the trade every arbitrary-state streaming op makes).
 
     Environment: needs google.protobuf (the transformWithState driver
-    worker imports it) and the RocksDB state store
-    (session.rocksdb_state_conf()); where protobuf is absent the
+    worker imports it) and the RocksDB state store (the default of
+    session.get_spark); where protobuf is absent the
     recursion logic is still covered by the stubbed-state unit test."""
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 

@@ -67,6 +67,32 @@ def test_fast_paths_equal_naive_on_btc_prices(spark):
     assert sum(z.values()) > 0
 
 
+@pytest.mark.parametrize("chunk_slots", [None, 4])
+def test_prefix_sums_exact_for_four_decimal_values(spark, chunk_slots):
+    """Values with 4 decimal places have 8-decimal squares. Adding or
+    subtracting two decimal(38,8) running Σv² sums keeps only scale 7, so
+    the prefix-sum path must hold its running sums (and chunk carries) at
+    precision 37. ``chunk_slots=4`` carries across 10 chunks."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1)
+    ev = spark.createDataFrame(
+        [(t0 + dt.timedelta(seconds=3 * i), "BTCUSDT", 1.2345 + 0.0007 * i)
+         for i in range(40)],
+        "ts timestamp, event_type string, value double",
+    )
+    wins = REFERENCE_WINDOWS[:2]
+    naive = Counter(
+        tuple(r)
+        for r in moving_stats_flat(ev, "ts", ["event_type"], "value", windows=wins).collect()
+    )
+    fast = moving_stats_flat_fast(
+        ev, "ts", ["event_type"], "value", windows=wins, chunk_slots=chunk_slots
+    )
+    assert naive == Counter(tuple(r) for r in fast.collect())
+    assert sum(naive.values()) == 31
+
+
 @pytest.mark.slow
 def test_moving_stats_flat_fast_equals_naive(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")

@@ -277,56 +277,120 @@ def test_first_crossing_stream_matches_batch(spark, tmp_path, direction):
             assert expected[k] == pytest.approx(v, abs=1e-6)
 
 
-@pytest.mark.slow
-def test_stage3_stream_stream_join(spark, tmp_path):
-    """Stage 3 end-to-end with BOTH sides streaming (T4): ticks stream
-    ⋈ stage-2 stats stream on (grid time, symbol), append mode. Ticks
-    are pre-quantized to the slide grid so the reference's exact-grid
-    key matches (SURVEY.md §3.4)."""
-    from lab04_spark_streaming_spark.operators.moving_stats import (
-        moving_stats_flat,
+def _on_grid(ticks):
+    """Ticks quantized to the 10 s slide grid, so the reference's
+    exact-grid join key matches (SURVEY.md §3.4)."""
+    return ticks.withColumn(
+        "event_time",
+        (F.floor(F.unix_timestamp("event_time") / 10) * 10).cast("timestamp"),
     )
+
+
+def _stage3_inputs(spark, tick_rows, stats_rows, tmp_path):
+    """Stage 3's two streams: the ticks of ``tick_rows`` on the slide
+    grid, and batch stage-2 output (three windows) over ``stats_rows``,
+    materialized and re-streamed. Returns them, the tick directory and
+    the expected z-score rows for ``stats_rows`` joined with themselves."""
+    from lab04_spark_streaming_spark.operators.moving_stats import REFERENCE_WINDOWS
     from lab04_spark_streaming_spark.operators.zscore import zscore_exact_grid
-    from lab04_spark_streaming_spark.streaming.pipeline import stage3_zscore
 
-    rows = _ticks(n=90)
-    tick_path = str(tmp_path / "t3_ticks")
-    spark.createDataFrame(rows, TICK_SCHEMA).coalesce(1).write.parquet(tick_path)
-
-    # Stats side: materialize batch stage-2 output, then re-stream it.
-    batch = spark.createDataFrame(rows, TICK_SCHEMA)
-    stats_flat = moving_stats_flat(batch, "event_time", ["symbol"], "price")
+    tick_dir = str(tmp_path / "t3_ticks")
+    spark.createDataFrame(tick_rows, TICK_SCHEMA).coalesce(1).write.parquet(tick_dir)
+    batch = spark.createDataFrame(stats_rows, TICK_SCHEMA)
+    stats_flat = moving_stats_flat(
+        batch, "event_time", ["symbol"], "price", windows=REFERENCE_WINDOWS[:3]
+    )
     stats_path = str(tmp_path / "t3_stats")
     stats_flat.coalesce(1).write.parquet(stats_path)
+    expected = _zscore_rows(
+        zscore_exact_grid(_on_grid(batch), stats_flat, "event_time", ["symbol"], "price")
+    )
+    return (
+        _on_grid(file_stream(spark, tick_dir, TICK_SCHEMA)),
+        file_stream(spark, stats_path, stats_flat.schema),
+        tick_dir,
+        expected,
+    )
 
-    tick_stream = file_stream(spark, tick_path, TICK_SCHEMA).withColumn(
-        "event_time",
-        (F.floor(F.unix_timestamp("event_time") / 10) * 10).cast("timestamp"),
-    )
-    stats_stream = file_stream(spark, stats_path, stats_flat.schema)
-    out = stage3_zscore(
-        tick_stream, stats_stream, "event_time", ["symbol"], "price", nested=False
-    )
-    memory_sink_once(out, "stage3_out", "append")
+
+def _zscore_rows(df):
+    """The multiset of a z-score relation's (timestamp, symbol, window,
+    zscore_value) rows."""
     from collections import Counter
 
-    got = Counter(
-        (r.timestamp, r.symbol, r.window, r.zscore_value)
-        for r in spark.table("stage3_out").collect()
+    return Counter(
+        (r.timestamp, r.symbol, r.window, r.zscore_value) for r in df.collect()
     )
-    assert got, "stream-stream join produced nothing"
 
-    ticks_q = batch.withColumn(
-        "event_time",
-        (F.floor(F.unix_timestamp("event_time") / 10) * 10).cast("timestamp"),
-    )
-    expected = Counter(
-        (r.timestamp, r.symbol, r.window, r.zscore_value)
-        for r in zscore_exact_grid(
-            ticks_q, stats_flat, "event_time", ["symbol"], "price"
-        ).collect()
-    )
+
+def test_stage3_stream_stream_join(spark, tmp_path):
+    """Stage 3 end-to-end with BOTH sides streaming (T4): ticks stream
+    ⋈ stage-2 stats stream on (grid time, symbol), append mode. The join
+    keeps its four states (two per side) in one state store per shuffle
+    partition."""
+    from lab04_spark_streaming_spark.streaming.pipeline import stage3_zscore
+
+    rows = _ticks(n=40)
+    ticks, stats, _, expected = _stage3_inputs(spark, rows, rows, tmp_path)
+    out = stage3_zscore(ticks, stats, "event_time", ["symbol"], "price", nested=False)
+    q = memory_sink_once(out, "stage3_out", "append")
+    got = _zscore_rows(spark.table("stage3_out"))
+    assert got, "stream-stream join produced nothing"
     assert got == expected
+    (join,) = q.lastProgress.stateOperators
+    assert join.numStateStoreInstances == join.numShufflePartitions
+
+
+def test_stage3_checkpoint_keeps_its_state_format(spark, tmp_path):
+    """A stage-3 checkpoint started on the heap-backed store with join
+    state format 2 (four stores per partition) resumes under the
+    session's defaults on its own provider and format, and its output
+    continues: Spark restores both from the checkpoint's offset log. A
+    file sink, because a memory sink in append mode cannot recover."""
+    from lab04_spark_streaming_spark.streaming.pipeline import stage3_zscore
+
+    first_half = _ticks(n=40)
+    second_half = _ticks(n=40, start=T0 + dt.timedelta(seconds=40))
+    ticks, stats, tick_dir, expected = _stage3_inputs(
+        spark, first_half, first_half + second_half, tmp_path
+    )
+    out_path = str(tmp_path / "t3_out")
+
+    def run_once():
+        q = (
+            stage3_zscore(ticks, stats, "event_time", ["symbol"], "price", nested=False)
+            .writeStream.format("parquet")
+            .option("path", out_path)
+            .option("checkpointLocation", str(tmp_path / "t3_ck"))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        (join,) = q.lastProgress.stateOperators
+        assert join.numStateStoreInstances == 4 * join.numShufflePartitions
+        return spark.read.parquet(out_path).count()
+
+    legacy = {
+        "spark.sql.streaming.stateStore.providerClass": (
+            "org.apache.spark.sql.execution.streaming.state."
+            "HDFSBackedStateStoreProvider"
+        ),
+        "spark.sql.streaming.join.stateFormatVersion": "2",
+    }
+    defaults = {k: spark.conf.get(k) for k in legacy}
+    for k, v in legacy.items():
+        spark.conf.set(k, v)
+    try:
+        first = run_once()
+    finally:
+        for k, v in defaults.items():
+            spark.conf.set(k, v)
+    spark.createDataFrame(second_half, TICK_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(tick_dir)
+    assert run_once() > first > 0
+    assert _zscore_rows(spark.read.parquet(out_path)) == expected
 
 
 def test_streaming_dedup_within_watermark(spark, tmp_path):
@@ -931,11 +995,10 @@ def test_kafka_jars_conf_empty_and_populated(tmp_path):
 
 
 def test_sessionize_stream_rocksdb_state(spark, tmp_path):
-    """The stateful sessionizer runs unchanged on
-    RocksDBStateStoreProvider (VERDICT r5 item 6) — the state-store
-    provider a 100 TB keyspace needs (disk-backed, bounded memory)
-    instead of the default heap-backed store."""
-    from lab04_spark_streaming_spark.session import rocksdb_state_conf
+    """The stateful sessionizer runs on the session's default state
+    store, RocksDBStateStoreProvider — the provider a 100 TB keyspace
+    needs (disk-backed, bounded memory) instead of the heap-backed
+    store."""
     from lab04_spark_streaming_spark.streaming.state import sessionize_stream
 
     rows = [
@@ -945,24 +1008,16 @@ def test_sessionize_stream_rocksdb_state(spark, tmp_path):
     path = str(tmp_path / "rocks_src")
     spark.createDataFrame(rows, EVENTLIKE_SCHEMA).coalesce(1).write.parquet(path)
 
-    conf = rocksdb_state_conf()
-    old = {k: spark.conf.get(k, None) for k in conf}
-    for k, v in conf.items():
-        spark.conf.set(k, v)
-    try:
-        stream = file_stream(spark, path, EVENTLIKE_SCHEMA)
-        out = sessionize_stream(stream, "ts", "user_id", gap_s=60)
-        memory_sink_once(out, "rocks_sess_out", "append")
-        got = {
-            (r.user_id, r.session_id): r.n_events
-            for r in spark.table("rocks_sess_out").collect()
-        }
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    stream = file_stream(spark, path, EVENTLIKE_SCHEMA)
+    out = sessionize_stream(stream, "ts", "user_id", gap_s=60)
+    q = memory_sink_once(out, "rocks_sess_out", "append")
+    got = {
+        (r.user_id, r.session_id): r.n_events
+        for r in spark.table("rocks_sess_out").collect()
+    }
+    # Only the RocksDB provider reports rocksdb* metrics.
+    (op,) = q.lastProgress.stateOperators
+    assert any(k.startswith("rocksdb") for k in op.customMetrics), op.customMetrics
     # Watermark finalizes the first two sessions (3 + 2 events); the
     # trailing event's session stays open in state.
     assert got[(1, 0)] == 3 and got[(1, 1)] == 2
@@ -1376,7 +1431,6 @@ def test_ewma_tws_end_to_end(spark, tmp_path):
     runs wherever protobuf is installed."""
     from pyspark.sql.types import DoubleType as _D
 
-    from lab04_spark_streaming_spark.session import rocksdb_state_conf
     from lab04_spark_streaming_spark.streaming.state import ewma_stream_tws
 
     schema = StructType(
@@ -1392,22 +1446,9 @@ def test_ewma_tws_end_to_end(spark, tmp_path):
     ]
     path = str(tmp_path / "ewma_tws_src")
     spark.createDataFrame(rows, schema).coalesce(1).write.parquet(path)
-    conf = rocksdb_state_conf()
-    old = {k: spark.conf.get(k, None) for k in conf}
-    for k, v in conf.items():
-        spark.conf.set(k, v)
-    try:
-        out = ewma_stream_tws(file_stream(spark, path, schema), alpha=0.1)
-        memory_sink_once(out, "ewma_tws_e2e", "append")
-        got = {
-            r.event_id: r.ewma for r in spark.table("ewma_tws_e2e").collect()
-        }
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    out = ewma_stream_tws(file_stream(spark, path, schema), alpha=0.1)
+    memory_sink_once(out, "ewma_tws_e2e", "append")
+    got = {r.event_id: r.ewma for r in spark.table("ewma_tws_e2e").collect()}
     prev = None
     for i in range(10):
         v = float(i % 7)
@@ -1942,7 +1983,6 @@ def test_sessionize_rocksdb_checkpoint_stop_resume(spark, tmp_path):
     first cross-restart exercise): the second run must reload state
     from the checkpoint's RocksDB snapshot+changelog and continue the
     ordinal numbering exactly like the heap-backed store does."""
-    from lab04_spark_streaming_spark.session import rocksdb_state_conf
     from lab04_spark_streaming_spark.streaming.state import sessionize_stream
 
     gap_s = 60
@@ -1952,11 +1992,6 @@ def test_sessionize_rocksdb_checkpoint_stop_resume(spark, tmp_path):
 
     def at(s):
         return T0 + dt.timedelta(seconds=s)
-
-    conf = rocksdb_state_conf()
-    old = {k: spark.conf.get(k, None) for k in conf}
-    for k, v in conf.items():
-        spark.conf.set(k, v)
 
     def run_once(rows):
         spark.createDataFrame(rows, EVENTLIKE_SCHEMA).coalesce(1).write.mode(
@@ -1978,21 +2013,12 @@ def test_sessionize_rocksdb_checkpoint_stop_resume(spark, tmp_path):
         )
         q.awaitTermination()
 
-    try:
-        run_once(
-            [(1, at(0), 0), (1, at(7), 1), (1, at(14), 2), (1, at(3600), 3)]
-        )
-        run_once([(1, at(7200), 4), (1, at(7207), 5), (1, at(14400), 6)])
-        got = {
-            (r.user_id, r.session_id): (r.n_events, r.session_start)
-            for r in spark.read.parquet(out_path).collect()
-        }
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    run_once([(1, at(0), 0), (1, at(7), 1), (1, at(14), 2), (1, at(3600), 3)])
+    run_once([(1, at(7200), 4), (1, at(7207), 5), (1, at(14400), 6)])
+    got = {
+        (r.user_id, r.session_id): (r.n_events, r.session_start)
+        for r in spark.read.parquet(out_path).collect()
+    }
     assert got == {
         (1, 0): (3, at(0)),
         (1, 1): (1, at(3600)),
@@ -2568,8 +2594,8 @@ def test_srm_stream_dedup_across_microbatches(spark, tmp_path):
 def test_srm_stream_rocksdb_state(spark, tmp_path):
     """The SRM guardrail's two state stores — the
     dropDuplicatesWithinWatermark dedup keys and the windowed count
-    aggregation — run unchanged on RocksDBStateStoreProvider, the
-    provider an unbounded (hour, user) dedup keyspace needs at scale."""
+    aggregation — run on the session's default RocksDBStateStoreProvider,
+    the provider an unbounded (hour, user) dedup keyspace needs at scale."""
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -2579,7 +2605,6 @@ def test_srm_stream_rocksdb_state(spark, tmp_path):
         TimestampType,
     )
 
-    from lab04_spark_streaming_spark.session import rocksdb_state_conf
     from lab04_spark_streaming_spark.streaming.pipeline import srm_stream
 
     schema = StructType(
@@ -2606,23 +2631,12 @@ def test_srm_stream_rocksdb_state(spark, tmp_path):
     path = str(tmp_path / "srm_rocks")
     spark.createDataFrame(rows, schema).coalesce(1).write.parquet(path)
 
-    conf = rocksdb_state_conf()
-    old = {k: spark.conf.get(k, None) for k in conf}
-    for k, v in conf.items():
-        spark.conf.set(k, v)
-    try:
-        out = srm_stream(file_stream(spark, path, schema), "ts", "user_id")
-        memory_sink_once(out, "srm_rocks_out", "append")
-        got = {
-            r.hour_start: (r.n0, r.n1, r.srm_flag)
-            for r in spark.table("srm_rocks_out").collect()
-        }
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    out = srm_stream(file_stream(spark, path, schema), "ts", "user_id")
+    memory_sink_once(out, "srm_rocks_out", "append")
+    got = {
+        r.hour_start: (r.n0, r.n1, r.srm_flag)
+        for r in spark.table("srm_rocks_out").collect()
+    }
     assert got[t0] == (20, 20, False)
 
 
