@@ -11,7 +11,8 @@ The reference guards every statistic it emits (sample stddev over a
 
 :func:`exact_avg`/:func:`exact_std` keep the avg/std guards' semantics
 but compute from exact decimal moments. This module is the only place
-that knows the moment format (:func:`exact_moments`) and the
+that knows the moment format (:func:`moment_terms`, summed by
+:func:`moment_sums`; :func:`exact_moments` composes the two) and the
 avg/std-from-moments arithmetic (:func:`stats_from_moments`): the
 window() union, the exploded variant and both prefix-sum paths
 (operators/moving_stats_fast.py) all go through them, and the DuckDB
@@ -63,10 +64,24 @@ _SQ_DEC = "DECIMAL(30,8)"
 RUNNING_DEC = {"s": "DECIMAL(37,4)", "sq": "DECIMAL(37,8)"}
 
 
+def moment_terms(c: Column) -> tuple[Column, Column]:
+    """The per-row moment terms (v::decimal(30,4), (v·v)::decimal(30,8))."""
+    return c.cast(_V_DEC), (c * c).cast(_SQ_DEC)
+
+
+def moment_sums(
+    c: Column, term_s: Column, term_sq: Column
+) -> tuple[Column, Column, Column]:
+    """The moments (count(v), Σ term_s, Σ term_sq) of per-row terms made
+    by :func:`moment_terms`. Computing the terms before a row is
+    replicated (an explode) casts each value once, not once per copy."""
+    return F.count(c), F.sum(term_s), F.sum(term_sq)
+
+
 def exact_moments(c: Column) -> tuple[Column, Column, Column]:
     """The per-row moment sums (count(v), Σ v::decimal(30,4),
     Σ (v·v)::decimal(30,8))."""
-    return F.count(c), F.sum(c.cast(_V_DEC)), F.sum((c * c).cast(_SQ_DEC))
+    return moment_sums(c, *moment_terms(c))
 
 
 def stats_from_moments(n: Column, s: Column, sq: Column) -> tuple[Column, Column]:

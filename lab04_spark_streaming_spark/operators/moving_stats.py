@@ -41,6 +41,8 @@ from pyspark.sql import functions as F
 
 from lab04_spark_streaming_spark.functions.guards import (
     exact_moments,
+    moment_sums,
+    moment_terms,
     stats_from_moments,
 )
 
@@ -136,10 +138,19 @@ def moving_stats_exploded(
     """
     slide_s = _duration_seconds(slide)
     slot = F.floor(F.unix_timestamp(F.col(ts_col)) / slide_s) * slide_s
-    labelled = df.select(
+    # A tick's slot and moment terms get a select of their own: a select
+    # that holds an explode evaluates its other columns after it, once
+    # per copy of the row (the casts would run once per membership).
+    term_s, term_sq = moment_terms(F.col(value_col))
+    ticks = df.select(
         slot.alias("_slot"),
         *key_cols,
         F.col(value_col),
+        term_s.alias("_term_s"),
+        term_sq.alias("_term_sq"),
+    )
+    labelled = ticks.select(
+        "*",
         F.explode(
             F.array(
                 *[
@@ -165,6 +176,8 @@ def moving_stats_exploded(
         *key_cols,
         F.col("_w.label").alias("window"),
         F.col(value_col),
+        "_term_s",
+        "_term_sq",
     )
     memberships = ends.select(
         F.col("_end_epoch")
@@ -173,11 +186,15 @@ def moving_stats_exploded(
         *key_cols,
         "window",
         value_col,
+        "_term_s",
+        "_term_sq",
     )
-    avg_e, std_e = _stat_exprs(value_col)
+    avg, std = stats_from_moments(
+        *moment_sums(F.col(value_col), F.col("_term_s"), F.col("_term_sq"))
+    )
     return (
         memberships.groupBy("timestamp", "window", *key_cols)
-        .agg(avg_e, std_e)
+        .agg(avg.alias("avg_value"), std.alias("std_value"))
         .select(
             F.col("timestamp").alias("timestamp", metadata={}),
             *key_cols,

@@ -940,25 +940,27 @@ def q_kcore_docs_deduped(spark: SparkSession, sf_dir: str) -> DataFrame:
 # inverted-index edge build over distinct 3-shingles with the
 # >= _KCORE_MIN_SHARED pair-count threshold, symmetrized, plus the
 # node set. One definition so the two graph oracles cannot drift.
+# MATERIALIZED: each CTE is read more than once, and DuckDB otherwise
+# inlines it, redoing the edge build per reference.
 def _sql_doc_graph_base(src: str = "documents") -> str:
     return f"""
-ex AS (
+ex AS MATERIALIZED (
   SELECT doc_id, u.sh
   FROM (SELECT doc_id, list_distinct({sql_shingles('toks')}) AS s
         FROM (SELECT doc_id, {_TOKS} AS toks FROM {src}) t(doc_id, toks)
         WHERE len(toks) >= 3) q, unnest(s) u(sh)
 ),
-shf AS (
+shf AS MATERIALIZED (
   SELECT sh FROM ex GROUP BY sh
   HAVING COUNT(*) BETWEEN 2 AND {_KCORE_DF_CAP}
 ),
-exf AS (SELECT ex.doc_id, ex.sh FROM ex JOIN shf USING (sh)),
-e0 AS (
+exf AS MATERIALIZED (SELECT ex.doc_id, ex.sh FROM ex JOIN shf USING (sh)),
+e0 AS MATERIALIZED (
   SELECT a.doc_id AS src, b.doc_id AS dst
   FROM exf a JOIN exf b ON a.sh = b.sh AND a.doc_id < b.doc_id
   GROUP BY 1, 2 HAVING COUNT(*) >= {_KCORE_MIN_SHARED}
 ),
-adj AS (SELECT src AS u, dst AS v FROM e0
+adj AS MATERIALIZED (SELECT src AS u, dst AS v FROM e0
         UNION ALL SELECT dst, src FROM e0)"""
 
 
@@ -990,13 +992,15 @@ repdocs AS MATERIALIZED (
 
 
 def _sql_kcore(prefix: str = "", src: str = "documents") -> str:
+    # Each peel round reads the previous one twice; inlined, every round
+    # would redo all the rounds before it (DuckDB ran out of memory).
     rounds = []
     prev = "a0"
     base = prefix + _sql_doc_graph_base(src) + """,
-a0 AS (SELECT DISTINCT u AS node FROM adj)"""
+a0 AS MATERIALIZED (SELECT DISTINCT u AS node FROM adj)"""
     for i in range(1, _KCORE_ROUNDS + 1):
         rounds.append(
-            f"""a{i} AS (
+            f"""a{i} AS MATERIALIZED (
   SELECT u AS node FROM adj
   WHERE u IN (SELECT node FROM {prev}) AND v IN (SELECT node FROM {prev})
   GROUP BY u HAVING COUNT(*) >= {_KCORE_K}

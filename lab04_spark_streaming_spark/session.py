@@ -105,6 +105,12 @@ def get_spark(
             "true",
         )
         .config("spark.sql.streaming.join.stateFormatVersion", "3")
+        # FileContext's local rename forks a `readlink` per checkpoint file.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # GC-locker OOM guard (one-box artifact, observed twice at the
         # r11 100x/1000x scale tiers on this kernel/JDK 17.0.20 combo):

@@ -15,6 +15,7 @@ import pytest
 
 from lab04_spark_streaming_spark.operators.moving_stats import (
     REFERENCE_WINDOWS,
+    moving_stats_exploded,
     moving_stats_flat,
 )
 from lab04_spark_streaming_spark.operators.moving_stats_fast import (
@@ -25,16 +26,15 @@ from lab04_spark_streaming_spark.operators.zscore import zscore_asof
 from lab04_spark_streaming_spark.sources.files import load_table
 
 
-def test_fast_paths_equal_naive_on_btc_prices(spark):
+def _btc_ticks(spark):
     """The reference's real price domain: BTCUSDT ticks above 1e5 (their
     squares need 11 integer digits in the Σv² moment), one far above in a
     later slot, and a second key with a negative value and single-tick
-    slots. Both prefix-sum paths must match the naive operators row for
-    row."""
+    slots."""
     import datetime as dt
 
     t0 = dt.datetime(2024, 1, 1)
-    ev = spark.createDataFrame(
+    return spark.createDataFrame(
         [
             (1, t0 + dt.timedelta(seconds=1), "BTCUSDT", 108000.0),
             (2, t0 + dt.timedelta(seconds=4), "BTCUSDT", 108012.5),
@@ -45,15 +45,23 @@ def test_fast_paths_equal_naive_on_btc_prices(spark):
         ],
         "event_id long, ts timestamp, event_type string, value double",
     )
+
+
+def test_fast_paths_equal_naive_on_btc_prices(spark):
+    """On BTCUSDT prices (:func:`_btc_ticks`), the exploded single
+    aggregate and both prefix-sum paths must match the naive operators
+    row for row."""
+    ev = _btc_ticks(spark)
     # The three short reference windows: the 1h window()'s 360-way
     # Expand alone would cost ~10 s per naive plan here.
     wins = REFERENCE_WINDOWS[:3]
     naive = moving_stats_flat(ev, "ts", ["event_type"], "value", windows=wins)
-    fast = moving_stats_flat_fast(ev, "ts", ["event_type"], "value", windows=wins)
     naive_rows = naive.collect()
     s = Counter(tuple(r) for r in naive_rows)
-    assert s == Counter(tuple(r) for r in fast.collect())
     assert sum(s.values()) > 0
+    for other in (moving_stats_flat_fast, moving_stats_exploded):
+        df = other(ev, "ts", ["event_type"], "value", windows=wins)
+        assert s == Counter(tuple(r) for r in df.collect()), other.__name__
 
     stats = spark.createDataFrame(naive_rows, naive.schema)
     naive_z = zscore_asof(
@@ -65,6 +73,23 @@ def test_fast_paths_equal_naive_on_btc_prices(spark):
     z = Counter(tuple(r) for r in naive_z.collect())
     assert z == Counter(tuple(r) for r in fast_z.collect())
     assert sum(z.values()) > 0
+
+
+def test_exploded_aggregate_sums_precast_moment_terms(spark):
+    """``moving_stats_exploded`` casts each tick's moment terms once,
+    below its explodes, and its aggregate sums those columns: a cast
+    inside the aggregate would run once per window membership (669 per
+    tick for the reference windows)."""
+    ev = _btc_ticks(spark)
+    df = moving_stats_exploded(ev, "ts", ["event_type"], "value")
+    plan = df._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    agg = [ln for ln in plan if ln.lstrip("+- :").startswith("Aggregate")]
+    assert len(agg) == 1
+    assert "sum(_term_s" in agg[0] and "sum(_term_sq" in agg[0]
+    assert "decimal(30," not in agg[0]
+    below = plan[max(i for i, ln in enumerate(plan) if "Generate" in ln) + 1:]
+    casts = ("as decimal(30,4)) AS _term_s", "as decimal(30,8)) AS _term_sq")
+    assert all(any(c in ln for ln in below) for c in casts)
 
 
 @pytest.mark.parametrize("chunk_slots", [None, 4])

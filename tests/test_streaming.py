@@ -58,27 +58,35 @@ def tick_dir(spark, tmp_path):
     return path
 
 
-@pytest.mark.slow
-def test_stage2_stream_equals_batch(spark, tick_dir):
-    stream = file_stream(spark, tick_dir, TICK_SCHEMA)
+def _stats_by_key(rows):
+    """{(timestamp, symbol, window): (avg, std)} of flat stage-2 rows; a
+    later row for a key replaces an earlier one, as update mode does."""
+    return {(ts, symbol, window): (avg, std) for ts, symbol, window, avg, std in rows}
+
+
+def test_stage2_stream_equals_batch(spark, tmp_path):
+    """Stage 2 as a stream emits the rows of the batch window() union
+    over the same ticks (the three short reference windows: the batch
+    side's 1h window() alone plans a 360-way Expand)."""
+    from lab04_spark_streaming_spark.operators.moving_stats import REFERENCE_WINDOWS
+
+    rows = _ticks(n=40)
+    path = str(tmp_path / "ticks")
+    spark.createDataFrame(rows, TICK_SCHEMA).coalesce(1).write.parquet(path)
+    windows = REFERENCE_WINDOWS[:3]
+    stream = file_stream(spark, path, TICK_SCHEMA)
     assert stream.isStreaming
     flat_stream = stage2_moving_stats(
-        stream, "event_time", ["symbol"], "price", nested=False
+        stream, "event_time", ["symbol"], "price", windows=windows, nested=False
     )
     memory_sink_once(flat_stream, "stage2_flat", "update")
-    got = {
-        (r.timestamp, r.symbol, r.window): (r.avg_value, r.std_value)
-        for r in spark.table("stage2_flat").collect()
-    }
+    got = _stats_by_key(spark.table("stage2_flat").collect())
 
-    batch = spark.createDataFrame(_ticks(), TICK_SCHEMA)
-    expected = {
-        (r.timestamp, r.symbol, r.window): (r.avg_value, r.std_value)
-        for r in moving_stats_flat(
-            batch, "event_time", ["symbol"], "price"
-        ).collect()
-    }
-    assert got == expected
+    batch = spark.createDataFrame(rows, TICK_SCHEMA)
+    expected = _stats_by_key(
+        moving_stats_flat(batch, "event_time", ["symbol"], "price", windows).collect()
+    )
+    assert got and got == expected
 
 
 def test_stage2_wire_shape(spark, tick_dir):
@@ -108,14 +116,14 @@ def test_stage2_wire_shape(spark, tick_dir):
     assert "T" not in msg["timestamp"]
 
 
-def _write_feed(spark, path, blocks):
-    """One parquet file per block under ``path/batch=i``, with file
-    times pinned in block order (the file source reads oldest first);
-    returns the glob to stream."""
+def _write_feed(spark, path, blocks, first=0):
+    """One parquet file per block under ``path/batch=i`` (i from
+    ``first``), with file times pinned in block order (the file source
+    reads oldest first); returns the glob to stream."""
     import time as _time
 
     now = _time.time()
-    for i, rows in enumerate(blocks):
+    for i, rows in enumerate(blocks, first):
         sub = path / f"batch={i}"
         spark.createDataFrame(rows, TICK_SCHEMA).coalesce(1).write.parquet(str(sub))
         mtime = now - 300 + i * 10
@@ -242,6 +250,67 @@ def test_stage2_one_aggregate_matches_window_union_per_batch(spark, tmp_path):
     per_batch = state(got_progress)
     assert per_batch == state(want_progress)
     assert per_batch[2][0] > 0 and per_batch[3][0] > 0  # both late blocks cut
+
+
+def test_stage2_restarts_on_its_checkpoint(spark, tmp_path):
+    """Stage 2 stopped mid-feed and restarted on the same checkpoint
+    ends with the rows of the batch union over the on-time ticks, and
+    drops as many late memberships as a run that was never stopped. A
+    late block (10 min behind, so all of its windows are closed) comes
+    before the stop and another right after the restart, where only the
+    restored watermark can cut it. The session writes checkpoint files
+    through the FileSystem API (no delete before a rename)."""
+    from lab04_spark_streaming_spark.operators.moving_stats import REFERENCE_WINDOWS
+
+    manager = spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
+    assert manager.endswith(".FileSystemBasedCheckpointFileManager")
+
+    def at(s, n=10, symbol="BTCUSDT"):
+        return _ticks(n=n, start=T0 + dt.timedelta(seconds=s), symbol=symbol)
+
+    before = [at(0, 60), at(60, 30), at(-600, 5) + at(90)]
+    after = [at(-500, 5) + at(100, 20, "ETHUSDT"), at(120, 20)]
+    windows = REFERENCE_WINDOWS[:3]
+
+    def run(blocks, name, first=0):
+        feed = _write_feed(spark, tmp_path / name, blocks, first)
+        stage2 = stage2_moving_stats(
+            file_stream(spark, feed, TICK_SCHEMA, max_files_per_trigger=1),
+            "event_time",
+            ["symbol"],
+            "price",
+            windows=windows,
+            nested=False,
+        )
+        out, progress = _per_batch(stage2, str(tmp_path / f"ck_{name}"))
+        dropped = sum(
+            op.numRowsDroppedByWatermark for p in progress for op in p.stateOperators
+        )
+        return out, dropped
+
+    first, dropped_first = run(before, "feed")
+    assert first and dropped_first > 0
+    # The restart streams the rest of the feed under the same glob.
+    second, dropped_second = run(after, "feed", first=len(before))
+    assert second and min(second) > max(first)
+    whole, dropped_whole = run(before + after, "whole")
+
+    def final(batches):
+        return _stats_by_key(row for bid in sorted(batches) for row in batches[bid])
+
+    on_time = [r for b in before + after for r in b if r[2] >= T0]
+    expected = _stats_by_key(
+        moving_stats_flat(
+            spark.createDataFrame(on_time, TICK_SCHEMA),
+            "event_time",
+            ["symbol"],
+            "price",
+            windows,
+        ).collect()
+    )
+    assert final({**first, **second}) == expected == final(whole)
+    assert dropped_second > 0
+    assert dropped_first + dropped_second == dropped_whole
 
 
 @pytest.mark.parametrize("direction", ["higher", "lower"])
