@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 # and full rationale live in operators/pinning.py (moved there r14 so
 # plan modules no longer import a dedup-private name for a storage
 # level).
-from lab04_spark_streaming_spark.operators.pinning import PIN_SER as _PIN_SER
+from lab04_spark_streaming_spark.operators.pinning import pin
 from lab04_spark_streaming_spark.operators.splits import restore_splits
 
 from lab04_spark_streaming_spark.operators.textops import (
@@ -157,11 +157,8 @@ def minhash_candidate_pairs(
     # The banded relation feeds BOTH self-join sides — without a pin
     # the whole signature pipeline (the expensive part) is computed
     # once PER SIDE (measured r14: 2 x 1.2 s single-task stages of a
-    # 3.0 s sf0.1 run; the simhash_pairs lesson).  n x bands rows
-    # (row-proportional) -> serialized (_PIN_SER).
-    bands = lsh_bands(minhash_signatures(docs, text_col, id_col), id_col).localCheckpoint(
-        eager=False, storageLevel=_PIN_SER
-    )
+    # 3.0 s sf0.1 run; the simhash_pairs lesson).
+    bands = pin(lsh_bands(minhash_signatures(docs, text_col, id_col), id_col))
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -234,16 +231,17 @@ def simhash_pairs(
     # the tiny (id, simhash, band, band_val) relation (the
     # jaccard_prefix_join lesson; was ~27 s of replays at sf0.1).
     sh = simhash(restore_splits(nonempty, id_col), text_col, id_col)
-    bands = sh.select(
-        F.col(id_col),
-        F.col("simhash"),
-        F.expr(
-            "inline(transform(sequence(0, 3), b -> "
-            "named_struct('band', b, "
-            "'band_val', cast(shiftright(simhash, b * 8) % 256 as int))))"
-        ),
-        # n x 4 band rows (row-proportional) -> serialized (r13 triage)
-    ).localCheckpoint(eager=False, storageLevel=_PIN_SER)
+    bands = pin(
+        sh.select(
+            F.col(id_col),
+            F.col("simhash"),
+            F.expr(
+                "inline(transform(sequence(0, 3), b -> "
+                "named_struct('band', b, "
+                "'band_val', cast(shiftright(simhash, b * 8) % 256 as int))))"
+            ),
+        )
+    )
     a, b = bands.alias("a"), bands.alias("b")
     cands = (
         a.join(
@@ -361,13 +359,10 @@ def dedup_clusters(
     # 12 rounds × the full SemDeDup pair cost (~95 s for a ~5 s graph)
     # at sf0.1. Iterative graph algorithms must cut lineage at the edge
     # relation; same reason labels are checkpointed per round.
-    edges = (
+    edges = pin(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct()
-        # PAIR-proportional (2x the near-dup pairs) → serialized pin
-        # (r12 triage; see _PIN_SER).
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     labels = ids.select(
         F.col(id_col).alias("node"), F.col(id_col).alias("label")
@@ -379,7 +374,9 @@ def dedup_clusters(
             .groupBy("src")
             .agg(F.min("label").alias("nlabel"))
         )
-        return (
+        # The next convergence count materializes every relaxation since
+        # the previous probe in ONE job; later rounds reuse the blocks.
+        return pin(
             lbl.join(neighbor_min, lbl["node"] == neighbor_min["src"], "left")
             .select(
                 "node",
@@ -387,16 +384,6 @@ def dedup_clusters(
                     F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
                 ).alias("label"),
             )
-            # Lazy checkpoint: the next convergence count materializes
-            # every relaxation since the previous probe in ONE job, and
-            # later rounds reuse the blocks. (An eager checkpoint costs
-            # an extra driver-synchronized job per round — the loop is
-            # scheduler-bound at lab scale, ~0.2 s fixed cost per job.)
-            # NODE-proportional, and up to 20 rounds' pins coexist →
-            # serialized so the aggregate footprint unrolls through
-            # chunked byte buffers and spills instead of holding every
-            # round's row objects on heap (r12 triage; see _PIN_SER).
-            .localCheckpoint(eager=False, storageLevel=_PIN_SER)
         )
 
     # Two relaxations per convergence probe: halves the driver round
@@ -460,7 +447,7 @@ def jaccard_pairs(
     replay (3 single-threaded tokenize passes over 10x the corpus,
     measured 138 s vs 17 s with the pin); same lesson as
     jaccard_prefix_join / decontamination (r6)."""
-    sh0 = (
+    sh0 = pin(
         restore_splits(df, id_col)
         .select(F.col(id_col), F.expr(expr_tokens(text_col)).alias("_toks"))
         .select(
@@ -469,7 +456,6 @@ def jaccard_pairs(
                 F.array_distinct(F.expr(expr_shingles("_toks")))
             ).alias("shingle"),
         )
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     sh = sh0
     if max_df is not None:
@@ -479,9 +465,7 @@ def jaccard_pairs(
             .filter(F.col("_df") <= max_df)
             .select("shingle")
         )
-        sh = sh0.join(keep, "shingle", "left_semi").localCheckpoint(
-            eager=False, storageLevel=_PIN_SER
-        )
+        sh = pin(sh0.join(keep, "shingle", "left_semi"))
     # Candidate generation is PREFIX-FILTERED (PPJoin, Xiao et al.
     # 2008 — the same lossless pruning plans/mining.q_jaccard_prefix_
     # join uses at t=0.8, instantiated here at the caller's
@@ -510,13 +494,12 @@ def jaccard_pairs(
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     # Full capped sets for verification — feeds BOTH candidate-verify
     # sides; sorted arrays so array_intersect is a merge.
-    sets = (
+    sets = pin(
         sh.groupBy(id_col)
         .agg(F.array_sort(F.collect_list("shingle")).alias("_set"))
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     dford = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_odf"))
-    pref = (
+    pref = pin(
         sh.join(sizes, id_col)
         .join(dford, "shingle")
         .withColumn(
@@ -532,7 +515,6 @@ def jaccard_pairs(
             + 1
         )
         .select(id_col, "n_sh", "shingle", "_pos")
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     a, b = pref.alias("a"), pref.alias("b")
     # POSITIONAL filter (PPJoin Lemma 1) as a join predicate: a match

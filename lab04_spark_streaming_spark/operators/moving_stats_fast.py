@@ -44,6 +44,7 @@ from lab04_spark_streaming_spark.operators.moving_stats import (
     REFERENCE_WINDOWS,
     _duration_seconds,
 )
+from lab04_spark_streaming_spark.operators.pinning import pin
 
 
 # Slot-range chunk width for parallel prefix scans. A per-key ordered
@@ -112,13 +113,10 @@ def cumulative_moments(
             "_slot",
             *[_running(F.sum(f"_{m}").over(w), m).alias(f"_c{m}") for m in _MOMENTS],
         )
-    # pin-bounded: occupied slots x keys (time-span, not tick count).
     # Two consumers below (partial cumsum + per-chunk totals); the
     # bucket relation is occupied-slot-sized, so a lazy lineage cut is
     # cheap at any scale and halves the upstream scan/agg replay.
-    b = buckets.withColumn(
-        "_chunk", F.floor(F.col("_slot") / chunk_slots)
-    ).localCheckpoint(eager=False)
+    b = pin(buckets.withColumn("_chunk", F.floor(F.col("_slot") / chunk_slots)))
     win = (
         Window.partitionBy(*key_cols, "_chunk")
         .orderBy("_slot")
@@ -223,13 +221,11 @@ def asof_cum_lookup(
             .drop("_isb")
         )
 
-    # pin-bounded: slot/probe rows (time-span, not tick count).
     # Consumed by the fill window AND the chunk-domain distinct —
     # cut lineage once.
-    u = (
+    u = pin(
         b_side.unionByName(p_side)
         .withColumn("_chunk", F.floor(F.col("_slot") / chunk_slots))
-        .localCheckpoint(eager=False)
     )
     w = (
         Window.partitionBy(*key_cols, "_chunk")
@@ -404,13 +400,8 @@ def zscore_asof_fast(
     # without lineage cuts the plan replayed the parquet scan 34 times
     # at sf0.1 (0 ReusedExchange: exchange reuse does not fire across
     # these differently-shaped subtrees). Occupied-slot-sized → cheap to
-    # materialize at any scale. Every pin on this path (cums, resolved,
-    # the chunked fill union) grows with the time span, not the tick
-    # count, so it keeps the fast deserialized default.
-    # pin-bounded: occupied slots x keys (time-span, not tick count)
-    cums = cumulative_moments(
-        buckets, key_cols, chunk_slots=chunk_slots
-    ).localCheckpoint(eager=False)
+    # materialize at any scale.
+    cums = pin(cumulative_moments(buckets, key_cols, chunk_slots=chunk_slots))
 
     offs = sorted(
         {1 + st for st in range(max_stale_slots + 1)}
@@ -443,12 +434,9 @@ def zscore_asof_fast(
         .withColumn("_off", F.explode(F.array(*[F.lit(o) for o in offs])))
         .withColumn("_slot", (F.col("_end0") - F.col("_off")).cast("long"))
     )
-    # pin-bounded: probes × offsets rows (slot-bounded) — hi and lo
-    # both consume the resolved probes; cut lineage so the fill pass
+    # hi and lo both consume the resolved probes; cut lineage so the fill pass
     # runs once.
-    resolved = asof_cum_lookup(
-        cums, probes, key_cols, chunk_slots=chunk_slots
-    ).localCheckpoint(eager=False)
+    resolved = pin(asof_cum_lookup(cums, probes, key_cols, chunk_slots=chunk_slots))
 
     # Assemble window stats RELATIONALLY instead of via a wide pivoted
     # when-tree: the earlier pivot variants (42 max-when aggregates, or

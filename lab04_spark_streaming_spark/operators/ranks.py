@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from lab04_spark_streaming_spark.operators.pinning import PIN_SER as _PIN_SER
+from lab04_spark_streaming_spark.operators.pinning import pin
 
 __all__ = ["global_row_number", "global_ntile"]
 
@@ -54,12 +54,9 @@ def global_row_number(
     # the two consumers' partition ids MUST agree; RangePartitioner
     # samples its boundaries, so pin one materialization rather than
     # trusting exchange reuse across re-executions.
-    ranged = (
+    ranged = pin(
         df.repartitionByRange(n, *cols)
         .withColumn("_pid", F.spark_partition_id())
-        # full-input pin (row-proportional) -> serialized (r13 triage;
-        # operators/dedup._PIN_SER)
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     local = ranged.withColumn(
         "_lrk",
@@ -122,9 +119,8 @@ def global_ntile(
         raise ValueError(
             f"global_ntile: input already has column(s) {sorted(clash)}"
         )
-    # Both consumers (rank + count) read one pinned materialization;
-    # full-input pin (row-proportional) -> serialized (r13 triage).
-    base = df.localCheckpoint(eager=False, storageLevel=_PIN_SER)
+    # Both consumers (rank + count) read one pinned materialization.
+    base = pin(df)
     ranked = global_row_number(
         base, *order, rank_col="_gnt_rk", num_partitions=num_partitions
     )

@@ -27,7 +27,7 @@ import hashlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lab04_spark_streaming_spark.operators.pinning import PIN_SER as _PIN_SER
+from lab04_spark_streaming_spark.operators.pinning import pin
 from lab04_spark_streaming_spark.operators.textops import expr_hash_int
 
 
@@ -344,17 +344,18 @@ def srp_banded_pairs(
     # 3-plane × dim dot products must run once, in parallel — restore
     # split parallelism off a single-row-group scan, then pin the tiny
     # (id, band, band_key) relation (the jaccard_prefix_join lesson).
-    b = srp_banded_buckets(
-        emb.repartition(
-            emb.sparkSession.sparkContext.defaultParallelism, id_col
-        ),
-        planes_per_band,
-        bands,
-        dim,
-        id_col,
-        vec_col,
-        # n x bands rows -> serialized (r13 triage; _PIN_SER)
-    ).localCheckpoint(eager=False, storageLevel=_PIN_SER)
+    b = pin(
+        srp_banded_buckets(
+            emb.repartition(
+                emb.sparkSession.sparkContext.defaultParallelism, id_col
+            ),
+            planes_per_band,
+            bands,
+            dim,
+            id_col,
+            vec_col,
+        )
+    )
     a, c = b.alias("a"), b.alias("b")
     return (
         a.join(
@@ -484,13 +485,10 @@ def kmeans_assign(
     pos = _kmeans_pos(emb, id_col, vec_col)
     cent = _kmeans_seed(pos, k, id_col)
     for _ in range(iters - 1):
-        # pin-bounded: k·d rows (params, not input size) — kept
-        # deserialized; checkpointing per iteration keeps the plan
-        # flat (otherwise iteration i's plan nests all of 1..i-1
-        # and Catalyst analysis grows superlinearly with iters).
-        cent = _kmeans_update(
-            pos, _kmeans_assign_round(pos, cent, id_col), id_col
-        ).localCheckpoint(eager=False)
+        # Checkpointing per iteration keeps the plan flat (otherwise
+        # iteration i's plan nests all of 1..i-1 and Catalyst analysis
+        # grows superlinearly with iters).
+        cent = pin(_kmeans_update(pos, _kmeans_assign_round(pos, cent, id_col), id_col))
     assign = _kmeans_assign_round(pos, cent, id_col)
     return assign.select(
         F.col(id_col),
@@ -542,12 +540,9 @@ def kmeans_assign_packed(
     # so per-row cost is k·d interpreted ops — a one-row-group parquet
     # fixture would run the whole fold on 1-2 threads; production
     # inputs arrive pre-split). Checkpointed: every round reuses it.
-    vecs = (
+    vecs = pin(
         emb.select(F.col(id_col), F.expr(_expr_quantize(vec_col)).alias("qv"))
         .repartition(emb.sparkSession.sparkContext.defaultParallelism)
-        # n rows x 64-long array (~0.5 KB/row) -> serialized
-        # (r13 triage; _PIN_SER)
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
 
     d2 = (
@@ -611,10 +606,7 @@ def kmeans_assign_packed(
         .agg(F.array_sort(F.collect_list(F.struct("cid", "carr"))).alias("cents"))
     )
     for _ in range(iters - 1):
-        # pin-bounded: ONE row (the packed k·d codebook)
-        packed = pack(update(assign_round(packed))).localCheckpoint(
-            eager=False
-        )
+        packed = pin(pack(update(assign_round(packed))))
     return assign_round(packed).select(
         F.col(id_col),
         F.col("_p.cid").alias("cluster"),
@@ -623,11 +615,9 @@ def kmeans_assign_packed(
 
 
 def _kmeans_pos(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    return (
+    return pin(
         _quantized_pos(emb, id_col, vec_col)
         .select(id_col, "pos", "x")
-        # n·d rows (row-proportional) -> serialized (r13 triage)
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
 
 
@@ -674,10 +664,7 @@ def kmeans_centroids(
     pos = _kmeans_pos(emb, id_col, vec_col)
     cent = _kmeans_seed(pos, k, id_col)
     for _ in range(updates):
-        # pin-bounded: k·d rows (params, not input size)
-        cent = _kmeans_update(
-            pos, _kmeans_assign_round(pos, cent, id_col), id_col
-        ).localCheckpoint(eager=False)
+        cent = pin(_kmeans_update(pos, _kmeans_assign_round(pos, cent, id_col), id_col))
     return cent
 
 
@@ -846,7 +833,7 @@ def _pq_pos(
     """Quantized positions + subspace key (sub = pos div sub_dim),
     checkpointed once — every training round, the encode pass and the
     query LUT reuse this relation."""
-    return (
+    return pin(
         _quantized_pos(emb, id_col, vec_col)
         .select(
             id_col,
@@ -854,8 +841,6 @@ def _pq_pos(
             (F.col("pos") / F.lit(sub_dim)).cast("int").alias("sub"),
             "x",
         )
-        # n·d rows (row-proportional) -> serialized (r13 triage)
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
 
 
@@ -911,7 +896,7 @@ def _pq_train_from_pos(
     for _ in range(updates):
         assign = _pq_assign_round(pos, cent, id_col)
         members = pos.join(assign.select(id_col, "sub", "cid"), [id_col, "sub"])
-        cent = (
+        cent = pin(
             members.groupBy("sub", "cid", "pos")
             .agg(
                 F.floor(
@@ -920,8 +905,6 @@ def _pq_train_from_pos(
                 .cast("long")
                 .alias("c")
             )
-            # pin-bounded: m·k·sub_dim = 64·k codebook rows
-            .localCheckpoint(eager=False)
         )
     return cent
 
@@ -962,11 +945,12 @@ def ann_pq_adc_topk(
     deterministic and oracle-checkable. Emits (vec_id, adc) ascending
     (smaller = closer), ties → lower id."""
     sub_dim = 64 // m
-    # pin-bounded: 64·codes codebook rows
-    cent = pq_codebooks(
-        emb, m=m, k=codes, updates=updates, id_col=id_col, vec_col=vec_col,
-        sub_dim=sub_dim,
-    ).localCheckpoint(eager=False)
+    cent = pin(
+        pq_codebooks(
+            emb, m=m, k=codes, updates=updates, id_col=id_col, vec_col=vec_col,
+            sub_dim=sub_dim,
+        )
+    )
     pos = _pq_pos(emb, sub_dim, id_col, vec_col)
     enc = pq_encode(emb, cent, id_col=id_col, vec_col=vec_col, sub_dim=sub_dim)
     lut = (
@@ -1021,18 +1005,13 @@ def ann_ivfpq_topk(
     sub_dim = 64 // m
     pos = _kmeans_pos(emb, id_col, vec_col)
     cent = _kmeans_seed(pos, n_cells, id_col)
-    # pin-bounded: n_cells·d centroid rows
-    cent = _kmeans_update(
-        pos, _kmeans_assign_round(pos, cent, id_col), id_col
-    ).localCheckpoint(eager=False)
-    assign = (
+    cent = pin(_kmeans_update(pos, _kmeans_assign_round(pos, cent, id_col), id_col))
+    assign = pin(
         _kmeans_assign_round(pos, cent, id_col)
         .select(id_col, F.col("_p.cid").alias("cell"))
-        # n rows (row-proportional) -> serialized (r13 triage)
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     cellc = cent.select(F.col("cid").alias("cell"), "pos", "c")
-    rpos = (
+    rpos = pin(
         pos.join(assign, id_col)
         .join(F.broadcast(cellc), ["cell", "pos"])
         .select(
@@ -1042,13 +1021,8 @@ def ann_ivfpq_topk(
             (F.col("pos") / F.lit(sub_dim)).cast("int").alias("sub"),
             (F.col("x") - F.col("c")).alias("x"),
         )
-        # n·d residual rows (row-proportional) -> serialized (r13)
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
-    # pin-bounded: 64·codes codebook rows
-    books = _pq_train_from_pos(rpos, codes, 1, id_col).localCheckpoint(
-        eager=False
-    )
+    books = pin(_pq_train_from_pos(rpos, codes, 1, id_col))
     enc = _pq_assign_round(rpos, books, id_col).select(
         id_col, "sub", F.col("cid").alias("code")
     )
@@ -1124,11 +1098,9 @@ def cell_pair_cosines(
     sides; the per-pair work is a pure multiply-add fold in codegen.
     Pair volume is Σ|cell|²·d — bounded by the clustering, never
     n²·d. The cell pin is one row per vector carrying the 64-long
-    quantized array (~0.5 KB/row) — row-proportional and wide, the
-    deserialized-unroll OOM class — so it stores serialized
-    (operators/dedup._PIN_SER; r13 triage)."""
+    quantized array (~0.5 KB/row)."""
     qq = "cast(floor(cast(x as double) * 10000000.0 + 0.5) as bigint)"
-    cells = (
+    cells = pin(
         emb.join(assign, id_col)
         .select(
             id_col,
@@ -1143,7 +1115,6 @@ def cell_pair_cosines(
                 "aggregate(_q, cast(0 as bigint), (acc, x) -> acc + x * x)"
             ).alias("_n2"),
         )
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     a = cells.select(
         F.col(id_col).alias("id_a"),

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lab04_spark_streaming_spark.operators.pinning import PIN_SER as _PIN_SER
+from lab04_spark_streaming_spark.operators.pinning import pin
 from lab04_spark_streaming_spark.operators.textops import (
     expr_hash_int,
     expr_norm_digest,
@@ -38,10 +38,6 @@ _SPARK_NORM_H = expr_norm_digest("text")
 _SQL_NORM_H = sql_norm_digest("text")
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
 # --- incremental snapshot dedup --------------------------------------------
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-snapshot incremental dedup — the shape of every recurring
@@ -53,7 +49,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a pre-bucketed digest index so the probe is a co-located join.
     Kept rows are deduplicated within the incoming batch too (min
     doc_id wins), exactly like a real admission pass."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     base = (
         docs.filter(F.col("doc_id") % 2 == 0)
         .select(F.expr(_SPARK_NORM_H).alias("digest"))
@@ -117,7 +113,7 @@ def q_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"CASE WHEN length(text) = 0 THEN CAST(NULL AS DOUBLE) ELSE "
         f"floor(({raw}) * 10000.0 + 0.5) / 10000.0 END"
     )
-    return _docs(spark, sf_dir).select(
+    return load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.length("text").cast("long").alias("n_chars_actual"),
         F.expr(ent).alias("char_entropy"),
@@ -159,14 +155,13 @@ def q_word_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Split restoration + pin: the tokenize→explode pass feeds BOTH
     # self-join sides, and the fixture corpus is one parquet row-group
     # (the jaccard_prefix_join lesson; measured 8.3 → ~2 s at sf0.1).
-    t = (
-        _docs(spark, sf_dir)
+    t = pin(
+        load_table(spark, sf_dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .select(
             "doc_id",
             F.explode(F.expr(f"array_distinct({_SPARK_TOKS})")).alias("w"),
         )
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     top = (
         t.alias("a")
@@ -216,7 +211,7 @@ def q_word_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     via min_by on a (count DESC, word ASC) struct. All outputs are
     single divisions of exact integers — bit-identical, no rounding."""
     wc = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .select("doc_id", F.explode(F.expr(_SPARK_TOKS)).alias("w"))
         .groupBy("doc_id", "w")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -295,7 +290,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     over data."""
     k1, b = _BM25_K1, _BM25_B
     terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
-    docs = _docs(spark, sf_dir).select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.expr(_SPARK_TOKS).alias("_toks")
     )
     dl = docs.select(
@@ -440,7 +435,7 @@ def q_contamination_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
-    d = _docs(spark, sf_dir).select("doc_id", "source")
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     return (
         d.join(contaminated, "doc_id", "left")
         .groupBy("source")
@@ -482,7 +477,7 @@ def q_token_budget_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     order) until the source's running token total exceeds the budget.
     One window shuffle on the source key; the cumulative sum is exact
     integers, so the cut is reproducible under any partitioning."""
-    t = _docs(spark, sf_dir).select(
+    t = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
         F.expr(f"cast(size({_SPARK_TOKS}) as bigint)").alias("n_tokens"),
@@ -529,7 +524,7 @@ def q_dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     ints)."""
     from lab04_spark_streaming_spark.operators import dedup as dd
 
-    docs = _docs(spark, sf_dir).filter(
+    docs = load_table(spark, sf_dir, "documents").filter(
         F.expr(f"size({_SPARK_TOKS}) >= 3")
     )
     bands = dd.lsh_bands(dd.minhash_signatures(docs))
@@ -581,7 +576,7 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary relation (vocab-bounded, corpus-size-independent)."""
     from lab04_spark_streaming_spark.functions.guards import stable_round
 
-    toks = _docs(spark, sf_dir).select(
+    toks = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.explode(F.expr(_SPARK_TOKS)).alias("w")
     )
     freq = toks.groupBy("w").agg(F.count(F.lit(1)).alias("tf"))
@@ -626,7 +621,7 @@ def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs; the pair aggregate is alphabet²-bounded. Exact integers,
     deterministic rank (count DESC, pair)."""
     wc = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .select(F.explode(F.expr(_SPARK_TOKS)).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -696,7 +691,7 @@ def q_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast side (bits/8 bytes, corpus-size-independent); only the
     filter build touches the base."""
     m, k = _BLOOM_BITS, _BLOOM_K
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     base = (
         docs.filter(F.col("doc_id") % 2 == 0)
         .select(F.expr(_SPARK_NORM_H).alias("digest"))
@@ -839,7 +834,7 @@ def q_curation_master(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy("_digest")
     flags = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .select(
             "doc_id",
             "lang",
@@ -929,7 +924,7 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     degrees and per-iteration rank vectors are tiny at any corpus
     size; each iteration is one join + one aggregate on the word
     key."""
-    t = _docs(spark, sf_dir).select(
+    t = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.explode(F.expr(f"array_distinct({_SPARK_TOKS})")).alias("w"),
     )
@@ -1034,7 +1029,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree moments. All counts are exact integers; the coefficient
     3T/W is one double division. Edge/degree relations are
     vocab²-bounded — tiny at any corpus scale."""
-    t = _docs(spark, sf_dir).select(
+    t = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.explode(F.expr(f"array_distinct({_SPARK_TOKS})")).alias("w"),
     )
@@ -1140,7 +1135,7 @@ def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed count-distinct at 100 TB. Exact count emitted
     alongside for the error-bound read-off."""
     m = _HLL_M
-    docs = _docs(spark, sf_dir).select(
+    docs = load_table(spark, sf_dir, "documents").select(
         F.expr(_SPARK_NORM_H).alias("digest")
     )
     h = "cast(conv(substring(md5(concat('hll|', digest)), 1, 8), 16, 10) as bigint)"
@@ -1276,7 +1271,7 @@ def q_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     error-bound sketch oracles in plans/analytics.py)."""
     w_, d_ = _CMS_WIDTH, _CMS_DEPTH
     wc = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .select(F.explode(F.expr(_SPARK_TOKS)).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from lab04_spark_streaming_spark.operators import dedup as dd
 from lab04_spark_streaming_spark.operators import multimodal as mm
 from lab04_spark_streaming_spark.operators import similarity as sim
+from lab04_spark_streaming_spark.operators.pinning import pin
 from lab04_spark_streaming_spark.operators.textops import (
     expr_norm_digest,
     expr_shingles,
@@ -24,25 +25,15 @@ from lab04_spark_streaming_spark.operators.textops import (
     sql_shingles,
     sql_tokens,
 )
-
-_SPARK_TOKS = expr_tokens("text")
 from lab04_spark_streaming_spark.sources.files import load_table
 
+_SPARK_TOKS = expr_tokens("text")
 _TOKS = sql_tokens("text")
-_SHINGLES = sql_shingles("t.toks")
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings")
 
 
 # --- exact dedup -----------------------------------------------------------
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dd.exact_dedup(_docs(spark, sf_dir))
+    return dd.exact_dedup(load_table(spark, sf_dir, "documents"))
 
 
 SQL_DEDUP_EXACT = """
@@ -58,7 +49,7 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     string: the driver's pandas canonicalizer can't hash list cells.
     Null slots (docs with <3 tokens have an empty shingle set, so every
     array_min is NULL) print as 'null' in both engines."""
-    sigs = dd.minhash_signatures(_docs(spark, sf_dir))
+    sigs = dd.minhash_signatures(load_table(spark, sf_dir, "documents"))
     return sigs.select(
         "doc_id",
         F.expr(
@@ -98,7 +89,7 @@ FROM sigs
 
 # --- MinHash-LSH candidate pairs ------------------------------------------
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dd.minhash_candidate_pairs(_docs(spark, sf_dir))
+    return dd.minhash_candidate_pairs(load_table(spark, sf_dir, "documents"))
 
 
 def _sql_bands() -> str:
@@ -132,7 +123,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # split restoration only (single-row-group fixture; pre-split in
     # production) — the per-doc 32-bit fold is the whole cost.
     return dd.simhash(
-        _docs(spark, sf_dir).repartition(
+        load_table(spark, sf_dir, "documents").repartition(
             spark.sparkContext.defaultParallelism, "doc_id"
         )
     )
@@ -160,7 +151,7 @@ FROM tok
 
 # --- n-gram Jaccard pairs --------------------------------------------------
 def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dd.jaccard_pairs(_docs(spark, sf_dir))
+    return dd.jaccard_pairs(load_table(spark, sf_dir, "documents"))
 
 
 # max_df mirrors dedup.jaccard_pairs' stop-shingle cap (default 1000):
@@ -193,7 +184,9 @@ WHERE n_inter / (sa.n_sh + sb.n_sh - n_inter) >= 0.4
 
 # --- embedding cosine top-k ------------------------------------------------
 def q_knn_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sim.exact_cosine_topk_vs_id(_emb(spark, sf_dir), query_id=0, k=10)
+    return sim.exact_cosine_topk_vs_id(
+        load_table(spark, sf_dir, "embeddings"), query_id=0, k=10
+    )
 
 
 def q_knn_fold_topk_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -206,7 +199,9 @@ def q_knn_fold_topk_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality vs the anchor). Emits (vec_id, rank)."""
     from pyspark.sql import Window
 
-    top = sim.cosine_topk_vs_id_fold(_emb(spark, sf_dir), query_id=0, k=10)
+    top = sim.cosine_topk_vs_id_fold(
+        load_table(spark, sf_dir, "embeddings"), query_id=0, k=10
+    )
     w = Window.orderBy(F.desc("cosine"), "vec_id")
     return top.select("vec_id", F.row_number().over(w).alias("rank"))
 
@@ -278,7 +273,9 @@ def q_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle; on the fixture corpus the two emit identical output
     (deterministic 100% recall, asserted in tests/test_plans.py::
     test_embedding_pairs_lsh_shape_and_recall)."""
-    return sim.embedding_near_dup_pairs_lsh(_emb(spark, sf_dir), threshold=0.4)
+    return sim.embedding_near_dup_pairs_lsh(
+        load_table(spark, sf_dir, "embeddings"), threshold=0.4
+    )
 
 
 def _sql_banded_srp(planes_per_band: int = 3, bands: int = 24, dim: int = 64):
@@ -349,7 +346,7 @@ WHERE dot / (sqrt(na.n2) * sqrt(nb.n2)) >= 0.4
 
 # --- SRP-LSH ANN buckets ---------------------------------------------------
 def q_srp_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sim.srp_buckets(_emb(spark, sf_dir), planes=8)
+    return sim.srp_buckets(load_table(spark, sf_dir, "embeddings"), planes=8)
 
 
 def _sql_srp() -> str:
@@ -381,12 +378,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # symmetrization, two in the id union) before dedup_clusters' own
     # edge checkpoint — pin it once (the jaccard_prefix_join lesson;
     # also serves every composer: cluster_sizes / keep_best / golden).
-    pairs = (
-        dd.jaccard_pairs(_docs(spark, sf_dir))
+    pairs = pin(
+        dd.jaccard_pairs(load_table(spark, sf_dir, "documents"))
         .select("id_a", "id_b")
-        # pair-proportional pin → serialized (r12 triage; see
-        # operators/dedup._PIN_SER for the unroll-OOM rationale)
-        .localCheckpoint(eager=False, storageLevel=dd._PIN_SER)
     )
     ids = (
         pairs.select(F.col("id_a").alias("doc_id"))
@@ -443,7 +437,7 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenize once, explode chunk starts, slice. Output size ≈
     tokens/stride, the expansion a chunker inherently produces."""
     return (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .select("doc_id", F.expr(_SPARK_TOKS).alias("_toks"))
         .select(
             "doc_id",
@@ -485,7 +479,7 @@ def q_text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     stopword/digit ratios — all JVM-side expressions."""
     toks = "array_remove(split(lower(text), '[^a-z0-9]+'), '')"
     stop = "array('the', 'a', 'of', 'and', 'to', 'in', 'is', 'it')"
-    return _docs(spark, sf_dir).select(
+    return load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.expr(f"cast(size({toks}) as bigint)").alias("n_tokens"),
         F.length("text").cast("long").alias("n_chars_actual"),
@@ -551,7 +545,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         for lang in _LANG_MARKERS
     )
     total = " + ".join(scores.values())
-    return _docs(spark, sf_dir).select(
+    return load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.expr(f"cast({scores['en']} as bigint)").alias("score_en"),
         F.expr(f"CASE WHEN {total} = 0 THEN 'und' {whens} ELSE 'und' END").alias(
@@ -601,7 +595,7 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .select("doc_id", F.expr(expr_tokens("text")).alias("_toks"))
         .select(
             "doc_id",
@@ -634,7 +628,7 @@ def q_tf_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     dependent, so the oracle checks the exact integer moments)."""
     toks = "array_remove(split(lower(text), '[^a-z0-9]+'), '')"
     tf = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .select("doc_id", F.explode(F.expr(toks)).alias("token"))
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -663,7 +657,7 @@ def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     metrics query feeding a filter + aggregate) rather than a new
     primitive."""
     m = q_text_metrics(spark, sf_dir)
-    d = _docs(spark, sf_dir).select("doc_id", "lang")
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     keep = (
         (F.col("n_tokens") >= 10)
         & (F.col("avg_word_len") >= 3.0)
@@ -712,7 +706,7 @@ GROUP BY lang
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed-metadata projection over the media table (binary column
     untouched — column pruning drops it from the scan)."""
-    media = mm.media_from_documents(_docs(spark, sf_dir))
+    media = mm.media_from_documents(load_table(spark, sf_dir, "documents"))
     return media.select(
         "media_id",
         "kind",
@@ -741,7 +735,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     is unpacked into scalars (raw arrays crash the driver's
     canonicalizer). The mean is an exact integer byte-sum followed by
     one double division — bit-identical across engines."""
-    media = mm.media_from_documents(_docs(spark, sf_dir))
+    media = mm.media_from_documents(load_table(spark, sf_dir, "documents"))
     feats = mm.decode_stub(media)
     return feats.select(
         "media_id",
@@ -783,7 +777,8 @@ def q_multimodal_feature_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     a zip_with/aggregate fold on COLUMNS — no driver .collect(), so the
     whole chain is one job. Rows-only check (decode is Python-side by
     design); demonstrates the decode→embed→search composition."""
-    feats = mm.decode_stub(mm.media_from_documents(_docs(spark, sf_dir))).filter(
+    media = mm.media_from_documents(load_table(spark, sf_dir, "documents"))
+    feats = mm.decode_stub(media).filter(
         F.col("n_bytes") > 0  # zero-vectors have no cosine (oracle mirrors)
     )
     qf = feats.filter(F.col("media_id") == 0).select(
@@ -850,13 +845,15 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     toks = "array_remove(split(lower(text), '[^a-z0-9]+'), '')"
     tf = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .select("doc_id", F.explode(F.expr(toks)).alias("token"))
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     df_ = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    n_docs = _docs(spark, sf_dir).agg(F.count(F.lit(1)).alias("n_docs"))
+    n_docs = load_table(spark, sf_dir, "documents").agg(
+        F.count(F.lit(1)).alias("n_docs")
+    )
     scored = (
         tf.join(df_, "token")
         .crossJoin(F.broadcast(n_docs))
@@ -957,7 +954,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     members. The scale path next to the brute-force recall oracle
     `knn_cosine_topk` (operators/similarity.ivf_topk for plan notes)."""
     return sim.ivf_topk(
-        _emb(spark, sf_dir), query_id=0, k=10, n_cells=16, n_probe=4
+        load_table(spark, sf_dir, "embeddings"), query_id=0, k=10, n_cells=16, n_probe=4
     )
 
 
@@ -1017,7 +1014,7 @@ LIMIT 10
 
 # --- SimHash hamming near-dup pairs ----------------------------------------
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dd.simhash_pairs(_docs(spark, sf_dir), max_hamming=3)
+    return dd.simhash_pairs(load_table(spark, sf_dir, "documents"), max_hamming=3)
 
 
 SQL_SIMHASH_PAIRS = f"""
@@ -1045,7 +1042,7 @@ WHERE bit_count(xor(sa, sb)) <= 3
 # --- cross-source decontamination ------------------------------------------
 def q_decontamination_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.cross_source_overlap(
-        _docs(spark, sf_dir), group_col="source", n=5, min_shared=3
+        load_table(spark, sf_dir, "documents"), group_col="source", n=5, min_shared=3
     )
 
 
@@ -1057,7 +1054,7 @@ def q_dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan shape as dedup_exact: per-row projection into one md5-keyed
     shuffle; only the 32-char digest moves, never the text."""
     return (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .groupBy(F.expr(expr_norm_digest("text")).alias("_h"))
         .agg(
             F.min("doc_id").alias("doc_id"),
@@ -1088,8 +1085,8 @@ def q_decontamination_containment(spark: SparkSession, sf_dir: str) -> DataFrame
     # off the single-row-group fixture scan and pin ONE
     # tokenize→shingle pass (the jaccard_prefix_join lesson,
     # plans/mining.py: measured 6x single-threaded replays before).
-    sh0 = (
-        _docs(spark, sf_dir)
+    sh0 = pin(
+        load_table(spark, sf_dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .select(
             "doc_id",
@@ -1098,9 +1095,6 @@ def q_decontamination_containment(spark: SparkSession, sf_dir: str) -> DataFrame
                 F.array_distinct(F.expr(expr_shingles(_SPARK_TOKS, 5)))
             ).alias("shingle"),
         )
-        # shingle-EXPLODED (docs x shingles rows — the repo's biggest
-        # pin class) → serialized (r12 triage; operators/dedup._PIN_SER)
-        .localCheckpoint(eager=False, storageLevel=dd._PIN_SER)
     )
     keep = (
         sh0.groupBy("shingle")
@@ -1108,9 +1102,7 @@ def q_decontamination_containment(spark: SparkSession, sf_dir: str) -> DataFrame
         .filter(F.col("_df") <= 1000)
         .select("shingle")
     )
-    sh = sh0.join(keep, "shingle", "left_semi").localCheckpoint(
-        eager=False, storageLevel=dd._PIN_SER
-    )
+    sh = pin(sh0.join(keep, "shingle", "left_semi"))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -1199,7 +1191,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Redact URLs / emails / phone-shaped spans and count what was
     removed — the standard pre-training scrub pass. Pure JVM regex
     per row; at 100 TB this pipelines into the scan with zero shuffle."""
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     n = lambda p: F.size(F.regexp_extract_all(F.col("text"), F.lit(p), F.lit(0)))  # noqa: E731
     return d.select(
         "doc_id",
@@ -1246,7 +1238,7 @@ _BPE_PAT = r"'[a-z]+| ?[a-z]+| ?[0-9]+| ?[^a-z0-9 ]+"
 
 
 def q_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         F.size(
@@ -1282,7 +1274,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate = f"20 + pmod({expr_hash_int('source')}, 60)"
     keep = f"pmod({expr_hash_int(row_key)}, 100)"
     return (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .filter(F.expr(f"{keep} < {rate}"))
         .select("doc_id", "source")
     )
@@ -1304,7 +1296,7 @@ def q_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts → top-k with a total-order tie-break (count desc, token
     asc), (2) the tiny vocab broadcast back for a map-side membership
     probe; OOV fraction is an exact int ratio."""
-    toks = _docs(spark, sf_dir).select(
+    toks = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.explode(F.expr(_SPARK_TOKS)).alias("tok")
     )
     vocab = (

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lab04_spark_streaming_spark.operators.pinning import PIN_SER as _PIN_SER
+from lab04_spark_streaming_spark.operators.pinning import pin
 from lab04_spark_streaming_spark.functions.guards import (
     exact_avg,
     sql_exact_avg,
@@ -51,10 +51,6 @@ from lab04_spark_streaming_spark.sources.files import load_table
 
 _SPARK_TOKS = expr_tokens("text")
 _TOKS = sql_tokens("text")
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
 
 
 # --- C4-style repeated-span removal ----------------------------------------
@@ -97,11 +93,10 @@ def q_span_dedup_c4(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency groupBy); document text never moves."""
     # span relation feeds the banned-frequency branch AND the rebuild
     # branch: split-restore + checkpoint = one tokenize/span pass.
-    docs = (
-        _docs(spark, sf_dir)
+    docs = pin(
+        load_table(spark, sf_dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .select("doc_id", F.expr(_expr_spans(_SPARK_TOKS)).alias("spans"))
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     banned = (
         docs.select(F.explode("spans").alias("span"))
@@ -191,8 +186,8 @@ def q_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenize→shingle→distinct pass runs ONCE (measured 45 s → ~3 s at
     sf0.1, which was six single-threaded recomputations)."""
     spark_ = spark
-    docs = (
-        _docs(spark, sf_dir)
+    docs = pin(
+        load_table(spark, sf_dir, "documents")
         .repartition(spark_.sparkContext.defaultParallelism, "doc_id")
         .select("doc_id", F.expr(_SPARK_TOKS).alias("toks"))
         .filter(F.expr("size(toks) >= 3"))
@@ -200,7 +195,6 @@ def q_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.expr(f"array_distinct({expr_shingles('toks')})").alias("s"),
         )
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     ex = docs.select(
         "doc_id", F.size("s").alias("L"), F.explode("s").alias("sh")
@@ -321,22 +315,21 @@ def q_minhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer counts with single double divisions, so even the ERROR of
     the approximation is hash-checked cross-engine. Candidate-bounded:
     the exact verify touches only LSH survivors, never all pairs."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     pairs = dd.minhash_candidate_pairs(docs)
     eligible = docs.filter(F.expr(f"size({_SPARK_TOKS}) >= 3"))
     # sigs and sets each feed BOTH sides of the pair join — checkpoint
     # so the signature/shingle passes run once per relation.
-    sigs = dd.minhash_signatures(eligible).localCheckpoint(eager=False, storageLevel=_PIN_SER)
+    sigs = pin(dd.minhash_signatures(eligible))
     # staged projections (tokens, then shingles) — inlining the token
     # split into the shingle lambda re-splits per element (see the
     # minhash_signatures docstring, operators/dedup.py).
-    sets = (
+    sets = pin(
         eligible.select("doc_id", F.expr(_SPARK_TOKS).alias("toks"))
         .select(
             "doc_id",
             F.expr(f"array_distinct({expr_shingles('toks')})").alias("s"),
         )
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     a = sigs.select(F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"))
     b = sigs.select(F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b"))
@@ -484,7 +477,7 @@ def score_documents(docs: DataFrame) -> DataFrame:
 
 
 def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return score_documents(_docs(spark, sf_dir))
+    return score_documents(load_table(spark, sf_dir, "documents"))
 
 
 SQL_QUALITY_CLASSIFIER = f"""
@@ -514,11 +507,10 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # token relation feeds the bigram explode AND the unigram counts:
     # split-restore + checkpoint = one tokenize pass (same lineage-cut
     # rationale as q_jaccard_prefix_join).
-    toks = (
-        _docs(spark, sf_dir)
+    toks = pin(
+        load_table(spark, sf_dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .select("doc_id", F.expr(_SPARK_TOKS).alias("toks"))
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     bg = toks.select(
         "doc_id",
@@ -808,8 +800,8 @@ def _kcore_edges(
     # the pair self-join, so the tokenize→shingle pass is checkpointed
     # rather than recomputed per side.  ``docs`` lets the deduped
     # variants build the graph over a representative subset (r14).
-    ex = (
-        (docs if docs is not None else _docs(spark, sf_dir))
+    ex = pin(
+        (docs if docs is not None else load_table(spark, sf_dir, "documents"))
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .select("doc_id", F.expr(_SPARK_TOKS).alias("toks"))
         .filter(F.expr("size(toks) >= 3"))
@@ -819,7 +811,6 @@ def _kcore_edges(
                 F.expr(f"array_distinct({expr_shingles('toks')})")
             ).alias("sh"),
         )
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     keep = (
         ex.groupBy("sh")
@@ -847,10 +838,9 @@ def _kcore_edges(
 def _kcore_peel(edges: DataFrame) -> DataFrame:
     """The k-core peel loop over a prebuilt edge list — shared by the
     exact-graph and dedup-before-graph variants (r14)."""
-    adj = (
+    adj = pin(
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .union(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     alive = adj.select(F.col("u").alias("node")).distinct()
     deg = None
@@ -899,7 +889,7 @@ def _rep_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduplicating first is the semantic lever — replica families
     become one node, so the graph the peel/LPA loops see grows with
     CONTENT, not with replication."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     from lab04_spark_streaming_spark.plans.llm import q_dedup_clusters
 
     # (doc_id, cluster_id) for docs in >= 1 verified pair; the labels
@@ -1203,7 +1193,7 @@ def _hll_estimate(full: DataFrame, key: str) -> DataFrame:
 def q_hll_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lab04_spark_streaming_spark.plans.corpus import _SPARK_NORM_H
 
-    docs = _docs(spark, sf_dir).select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "source", F.expr(_SPARK_NORM_H).alias("digest")
     )
     regs = (
@@ -1325,7 +1315,7 @@ def q_snm_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     positions). One exchange on the block key serves both the sort
     window and the neighbor self-join."""
     docs = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .select("doc_id", F.expr(_SPARK_TOKS).alias("toks"))
         .filter(F.expr("size(toks) >= 3"))
         .select(
@@ -1337,12 +1327,14 @@ def q_snm_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pos feeds both sides of the neighbor self-join: checkpoint so the
     # tokenize/shingle/sort pipeline runs once.
-    pos = docs.withColumn(
-        "pos",
-        F.row_number().over(
-            Window.partitionBy("blk").orderBy("skey", "doc_id")
-        ),
-    ).localCheckpoint(eager=False, storageLevel=_PIN_SER)
+    pos = pin(
+        docs.withColumn(
+            "pos",
+            F.row_number().over(
+                Window.partitionBy("blk").orderBy("skey", "doc_id")
+            ),
+        )
+    )
     a, b = pos.alias("a"), pos.alias("b")
     return (
         a.join(
@@ -1404,10 +1396,9 @@ _LPA_ROUNDS = 4
 def _lpa_label(edges: DataFrame) -> DataFrame:
     """The synchronous LPA rounds over a prebuilt edge list — shared
     by the exact-graph and dedup-before-graph variants (r14)."""
-    adj = (
+    adj = pin(
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .union(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     labels = adj.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
@@ -1709,7 +1700,7 @@ _FUZZY_NUM, _FUZZY_DEN = 2, 10  # match when dist <= 0.2 * max prefix len
 def q_snm_fuzzy_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     norm = f"substring({expr_norm_text('text')}, 1, {_FUZZY_PREFIX})"
     docs = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .select("doc_id", F.expr(norm).alias("k"))
         .filter(F.length("k") > 0)
     )
@@ -1773,23 +1764,18 @@ def q_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lab04_spark_streaming_spark.operators.similarity import (
         kmeans_assign_packed,
     )
-    from lab04_spark_streaming_spark.sources.files import load_table as _lt
 
-    emb = _lt(spark, sf_dir, "embeddings")
-    assign = (
+    emb = load_table(spark, sf_dir, "embeddings")
+    assign = pin(
         kmeans_assign_packed(emb, k=8, iters=2)
         .select("vec_id", F.col("cluster").alias("kcluster"))
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     from lab04_spark_streaming_spark.operators.similarity import (
         cell_pair_cosines,
     )
 
-    pairs = (
-        cell_pair_cosines(emb, assign)
-        # feeds both direction branches of the symmetrization
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
-    )
+    # feeds both direction branches of the symmetrization
+    pairs = pin(cell_pair_cosines(emb, assign))
     sym = pairs.select(
         F.col("id_a").alias("anchor"), F.col("id_b").alias("other"), "cos"
     ).unionByName(
@@ -1870,7 +1856,7 @@ def q_scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate is the ONLY candidate — no range join needed. The probe
     grid is a broadcast literal cross join (users × 4 probes/day is a
     fan-out of the small user relation, never the events)."""
-    hist = q_scd2_intervals(spark, sf_dir).localCheckpoint(eager=False, storageLevel=_PIN_SER)
+    hist = pin(q_scd2_intervals(spark, sf_dir))
     ev = load_table(spark, sf_dir, "events")
     bounds = ev.agg(
         F.expr("min(date_trunc('day', ts))").alias("d0"),
@@ -1972,7 +1958,7 @@ ASOF LEFT JOIN hist h
 # iteration's ranked pair counts — stay hash-exact.
 def q_bpe_second_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     wc = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .select(F.explode(F.expr(_SPARK_TOKS)).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -2167,7 +2153,7 @@ def q_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lab04_spark_streaming_spark.plans.llm import q_dedup_clusters
 
     comp = q_dedup_clusters(spark, sf_dir)
-    docs = _docs(spark, sf_dir).select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "lang", F.length("text").alias("_len"),
         F.md5("text").alias("_digest"),
     )
@@ -2389,9 +2375,7 @@ def q_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The "existing dimension": SCD-2 over the pre-cutoff events only.
     # (In production this is a stored table; deriving it here keeps the
     # query self-contained without changing the shape being tested.)
-    old_dim = _scd2_build(ev.filter(F.col("ts") < cutoff)).localCheckpoint(
-        eager=False, storageLevel=_PIN_SER
-    )
+    old_dim = pin(_scd2_build(ev.filter(F.col("ts") < cutoff)))
     closed = old_dim.filter(~F.col("is_current"))
     seeds = old_dim.filter(F.col("is_current")).select(
         "user_id",
@@ -2518,7 +2502,7 @@ def q_pca_power_top(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sxy")
         )
     )
-    gram = (
+    gram = pin(
         sumxy.join(
             F.broadcast(stats.select(F.col("pos").alias("i"), F.col("s").alias("si"))),
             "i",
@@ -2536,8 +2520,6 @@ def q_pca_power_top(spark: SparkSession, sf_dir: str) -> DataFrame:
                 - F.col("si").cast("decimal(38,0)") * F.col("sj").cast("decimal(38,0)")
             ).alias("g"),
         )
-        # pin-bounded: d^2 = 64x64 gram-matrix rows
-        .localCheckpoint(eager=False)
     )
     dims = gram.select(F.col("i").alias("pos")).distinct()
     v = dims.select("pos", F.lit(_PCA_VSCALE).cast("long").alias("v"))

@@ -22,7 +22,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lab04_spark_streaming_spark.operators.pinning import PIN_SER as _PIN_SER
+from lab04_spark_streaming_spark.operators.pinning import pin
 from lab04_spark_streaming_spark.operators.similarity import _expr_quantize
 from lab04_spark_streaming_spark.operators.textops import (
     expr_hash_int,
@@ -38,14 +38,6 @@ _SPARK_TOKS = expr_tokens("text")
 _TOKS = sql_tokens("text")
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings")
-
-
 # --- deterministic train/valid/test split ----------------------------------
 def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """80/10/10 split by md5 hash bucket of doc_id — the standard
@@ -53,7 +45,7 @@ def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     order or partitioning, no state to persist). Pure per-row
     expression: zero shuffle, scales embarrassingly."""
     h = expr_hash_int("cast(doc_id as string)", seed="split")
-    return _docs(spark, sf_dir).select(
+    return load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.expr(f"cast(pmod({h}, 100) as int)").alias("bucket"),
         F.expr(
@@ -89,7 +81,7 @@ def q_domain_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = expr_hash_int("cast(doc_id as string)", seed="quota")
     w = Window.partitionBy("source").orderBy(F.expr(h), F.col("doc_id"))
     return (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .select("doc_id", "source", F.row_number().over(w).alias("rk"))
         .filter(F.col("rk") <= 10)
     )
@@ -124,7 +116,7 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-level chunked scan used in moving_stats_fast.cumulative_moments
     (chunk by doc_id range, per-chunk totals, tiny carry relation), so
     parallelism follows corpus position, not the source count."""
-    d = _docs(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
         F.expr(f"size({_SPARK_TOKS})").alias("n_tokens"),
@@ -181,7 +173,7 @@ def q_ngram_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.lit(None).cast("double"))
     )
     return (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .select("doc_id", F.expr(_SPARK_TOKS).alias("_toks"))
         .select(
             "doc_id",
@@ -257,7 +249,7 @@ def q_embedding_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ELSE cast(x as double) / sqrt(cast(_n2 as double)) END)"
     )
     return (
-        _emb(spark, sf_dir)
+        load_table(spark, sf_dir, "embeddings")
         .select(F.col("vec_id"), F.expr(qv).alias("qv"))
         .select("vec_id", "qv", F.expr(norm2).alias("_n2"))
         .select(
@@ -305,7 +297,7 @@ def q_ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmeans_centroids,
     )
 
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     cent = kmeans_centroids(emb, k=8, updates=1)
     ivf = ivf_topk(
         emb, query_id=0, k=10, n_cells=8, n_probe=2, centroids=cent
@@ -356,7 +348,7 @@ def q_embedding_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cast(0 as bigint), (acc, x) -> acc + x)"
     )
     return (
-        _emb(spark, sf_dir)
+        load_table(spark, sf_dir, "embeddings")
         .select("vec_id", F.expr(qv).alias("_qv"))
         .withColumn("_amax", F.expr(amax))
         .withColumn("_codes", F.expr(codes))
@@ -415,7 +407,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lab04_spark_streaming_spark.plans.llm import q_dedup_clusters
 
     clusters = q_dedup_clusters(spark, sf_dir)
-    docs = _docs(spark, sf_dir).select("doc_id", "n_chars")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     joined = clusters.join(docs, "doc_id")
     w = Window.partitionBy("cluster_id").orderBy(
         F.col("n_chars").desc(), F.col("doc_id").asc()
@@ -459,7 +451,7 @@ def q_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered top-k — no global sort, no text column past the scan
     stage. Ties are broken on the shingle string so the top-k is fully
     deterministic cross-engine."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     # Split restoration only (the jaccard_prefix_join rationale): the
     # fixture corpus is one parquet row-group, so the heavy
     # tokenize→shingle pass would otherwise run on a single thread
@@ -525,7 +517,7 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmeans_assign_packed,
     )
 
-    return kmeans_assign_packed(_emb(spark, sf_dir), k=8, iters=2)
+    return kmeans_assign_packed(load_table(spark, sf_dir, "embeddings"), k=8, iters=2)
 
 
 # Shared CTE prefix: quantized positions → seed c0 → one Lloyd round →
@@ -642,7 +634,7 @@ def q_ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmeans_centroids,
     )
 
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     cent = kmeans_centroids(emb, k=8, updates=1)
     return ivf_topk(
         emb, query_id=0, k=10, n_cells=8, n_probe=2, centroids=cent
@@ -708,13 +700,13 @@ def q_substring_dedup_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(pairs) — boilerplate-heavy corpora fan into the same per-doc
     aggregation instead of a hot self-join."""
     n = 5
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     # sh feeds THREE consumers (shared-set agg, the semi-join probe,
     # per-doc sizes) — restore split parallelism off the
     # single-row-group fixture scan and pin ONE tokenize→shingle pass
     # (the jaccard_prefix_join lesson; was ~40 s of single-threaded
     # replays at sf0.1).
-    sh = (
+    sh = pin(
         docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .select(
             "doc_id",
@@ -723,7 +715,6 @@ def q_substring_dedup_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr(expr_shingles(_SPARK_TOKS, n))
             ).alias("pos", "shingle"),
         )
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     shared = (
         sh.groupBy("shingle")
@@ -811,7 +802,7 @@ def q_semdedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from lab04_spark_streaming_spark.sources.files import parquet_row_count
 
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     # k = smallest integer with k² ≥ n (exact-integer ceil(√n), no
     # float sqrt whose perfect-square rounding could differ from the
     # oracle's subquery).
@@ -826,12 +817,9 @@ def q_semdedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vector instead of an n·d·k-row positional join — with k = √n the
     # join form's ROW volume is n^1.5·d, which the 10x probe measured
     # as 50 s of a 57 s run.
-    assign = (
+    assign = pin(
         kmeans_assign_packed(emb, k=k, iters=2)
         .select("vec_id", F.col("cluster").alias("kcluster"))
-        # n-row relation (narrow, but row-proportional) read by the
-        # pair stage and the final join -> serialized (r13 triage).
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     # Within-cell pairs via a cell-bucketed join of WHOLE vectors with a
     # quantized zip_with fold per pair — the same int64 moments as a
@@ -851,15 +839,12 @@ def q_semdedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         cell_pair_cosines,
     )
 
-    pairs = (
+    # The component stage symmetrizes pairs via a 2-branch union; cut
+    # lineage here so the within-cell self-join runs once.
+    pairs = pin(
         cell_pair_cosines(emb, assign)
         .filter(F.col("cos") >= 0.4)
         .select("id_a", "id_b")
-        # The component stage symmetrizes pairs via a 2-branch union;
-        # cut lineage here so the within-cell self-join runs once.
-        # Pair-proportional pin → serialized (r12 triage; see
-        # operators/dedup._PIN_SER).
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     comp = dedup_clusters(pairs, emb.select("vec_id"), id_col="vec_id")
     return (
@@ -931,7 +916,7 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_encode,
     )
 
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     books = pq_codebooks(emb, m=4, k=16, updates=1)
     return pq_encode(emb, books, sub_dim=16)
 
@@ -946,7 +931,7 @@ def q_ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ann_pq_adc_topk,
     )
 
-    return ann_pq_adc_topk(_emb(spark, sf_dir), query_id=0, k=10)
+    return ann_pq_adc_topk(load_table(spark, sf_dir, "embeddings"), query_id=0, k=10)
 
 
 # Shared unrolled PQ SQL: per-subspace quantized positions → seeds →
@@ -1022,7 +1007,7 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled DuckDB twin."""
     from lab04_spark_streaming_spark.operators.similarity import ann_ivfpq_topk
 
-    return ann_ivfpq_topk(_emb(spark, sf_dir), query_id=0, k=10)
+    return ann_ivfpq_topk(load_table(spark, sf_dir, "embeddings"), query_id=0, k=10)
 
 
 SQL_ANN_IVFPQ_TOPK = f"""

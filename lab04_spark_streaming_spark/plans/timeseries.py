@@ -26,10 +26,6 @@ from pyspark.sql import functions as F
 from lab04_spark_streaming_spark.sources.files import load_table
 
 
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events")
-
-
 # --- funnel analysis -------------------------------------------------------
 def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered funnel view → click → purchase per user: each stage's
@@ -37,7 +33,7 @@ def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage (not just any co-occurrence). Every join is on the user key —
     one shuffle partitioning reused across all three stages; stage
     relations are per-user aggregates, so no row blowup."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     users = ev.select("user_id").distinct()
     v = (
         ev.filter(F.col("event_type") == "view")
@@ -112,7 +108,7 @@ def q_moving_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     one). Per-user partitions, single window shuffle; both engines use
     the same lower+(upper-lower)·frac interpolation on identical
     doubles, so no rounding is needed."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -166,7 +162,7 @@ def q_ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"({j}, CAST({w} AS DECIMAL(7,6)))" for j, w in enumerate(_ewma_weights())
     )
     wtab = spark.sql(f"SELECT lag_j, w FROM (VALUES {weights}) AS t(lag_j, w)")
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     rn = F.row_number().over(
         Window.partitionBy("user_id").orderBy("ts", "event_id")
     )
@@ -271,7 +267,7 @@ def twap_hourly(
 def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly TWAP per user over the events table — see
     :func:`twap_hourly` for the plan shape."""
-    return twap_hourly(_events(spark, sf_dir))
+    return twap_hourly(load_table(spark, sf_dir, "events"))
 
 
 SQL_TIME_WEIGHTED_AVG = """
@@ -304,7 +300,7 @@ def q_gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN — same <= tie rule."""
     from lab04_spark_streaming_spark.operators.asof import asof_join
 
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     grid = (
         ev.groupBy("user_id")
         .agg(
@@ -351,7 +347,7 @@ def q_gap_fill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolation arithmetic are identical IEEE doubles cross-engine."""
     from lab04_spark_streaming_spark.operators.asof import asof_join
 
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     grid = (
         ev.groupBy("user_id")
         .agg(
@@ -439,7 +435,7 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentiles with a broadcast join of the tiny per-type medians in
     between — the classic two-pass robust-statistics shape (a mean/std
     z-score would let the outliers poison the threshold)."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     med = ev.groupBy("event_type").agg(
         F.expr("percentile(value, 0.5)").alias("med")
     )
@@ -507,7 +503,7 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning; the final count-distinct groups by (cohort, offset)
     whose cardinality is days² — tiny at any data scale, so the last
     exchange never skews. All outputs are exact integers/timestamps."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     d0 = ev.groupBy("user_id").agg(
         F.date_trunc("day", F.min("ts")).alias("cohort_day")
     )
@@ -555,7 +551,7 @@ def q_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate with map-side partials), high/low/count alongside, and
     the hour's value sum in exact decimal so the double is
     bit-identical cross-engine. One shuffle on (user, hour)."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     base = ev.select(
         "user_id",
         F.date_trunc("hour", F.col("ts")).alias("h"),
@@ -607,7 +603,7 @@ def q_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     binary round diverge on exact halves — verify-skill gotcha)."""
     from lab04_spark_streaming_spark.functions.guards import stable_round
 
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     lagv = F.lag("value", 1).over(w)
     pairs = ev.select("user_id", "value", lagv.alias("_prev"))
@@ -641,7 +637,7 @@ def q_event_type_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimals."""
     from lab04_spark_streaming_spark.functions.guards import stable_round
 
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     hourly = ev.groupBy(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("h")
     ).agg(
@@ -691,7 +687,7 @@ def q_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     CONSTANT ×7 expansion of the small relation, never of the event
     stream), and the count-distinct groups by day. Exact integers
     throughout."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     du = ev.select(
         "user_id", F.date_trunc("day", F.col("ts")).alias("d")
     ).distinct()
@@ -746,7 +742,7 @@ def q_winsorize_p01_p99(spark: SparkSession, sf_dir: str) -> DataFrame:
     values are either raw 2-decimal inputs or the percentile bounds,
     so a decimal(14,6) per-row cast is exact and the final double is
     bit-identical cross-engine."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     bounds = ev.groupBy("event_type").agg(
         F.expr("percentile(value, 0.01)").alias("p01"),
         F.expr("percentile(value, 0.99)").alias("p99"),
@@ -804,7 +800,7 @@ def q_user_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines), and slope/intercept are the same two IEEE divisions
     everywhere. One shuffle on the user key (min-ts pass + moment pass
     share it)."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     t0 = ev.groupBy("user_id").agg(F.min("ts").alias("_t0"))
     base = ev.join(t0, "user_id").select(
         "user_id",
@@ -887,7 +883,7 @@ def q_session_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     Confidences are exact integer divisions; lift multiplies exact
     ints BEFORE its single double division — bit-identical
     cross-engine, no rounding."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = ev.select(
         "user_id",
@@ -1054,7 +1050,7 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     in cents. One window shuffle on the user key; the per-user argmax
     is a (|dev| DESC, t) rank. The normalized magnitude is one exact
     double division at the end."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     base = ev.select(
         "user_id",
@@ -1148,7 +1144,7 @@ def q_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     numerator and denominator, ONE double division — not as a sum of
     per-key double shares (order-dependent). Two tiny aggregations;
     the key-count relation is |keys|-bounded."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     per_key = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_i"))
     return per_key.agg(
         F.count(F.lit(1)).alias("n_keys"),
@@ -1188,7 +1184,7 @@ def q_range_frame_trailing_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     seconds in BOTH engines, so frame membership (including second-
     level ties, where RANGE takes all peers) is identical; the sum
     runs in exact decimal → order-free, bit-identical."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.col("ts").cast("long"))
@@ -1223,7 +1219,7 @@ def q_mode_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     (count DESC, value ASC) tie-break — the built-in mode() is
     tie-UNSPECIFIED in both engines, so the deterministic form is the
     only oracle-able one. Two |types|×|buckets|-bounded aggregates."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     counts = (
         ev.select("event_type", F.floor("value").cast("long").alias("v"))
         .groupBy("event_type", "v")
@@ -1272,7 +1268,7 @@ def q_zorder_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer arithmetic — zero shuffle on the data path, bit-identical
     cross-engine. The layout win is quantified in
     tests/test_storage_layout.py."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     bounds = ev.agg(
         F.min("user_id").alias("_minu"),
         F.max("user_id").alias("_maxu"),

@@ -19,24 +19,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lab04_spark_streaming_spark.operators.pinning import PIN_SER as _PIN_SER
+from lab04_spark_streaming_spark.operators.pinning import pin
 from lab04_spark_streaming_spark.functions.guards import (
     sql_stable_round,
     stable_round,
 )
 from lab04_spark_streaming_spark.sources.files import load_table
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events")
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
-def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings")
 
 
 # --- daily volume anomaly ---------------------------------------------------
@@ -57,7 +45,7 @@ def q_volume_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the day-grid relation is bounded by days × types; windows
     are type-partitioned trailing frames over that grid."""
     daily = (
-        _events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .groupBy("event_type", F.to_date("ts").alias("day"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -149,7 +137,7 @@ def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: everything after the per-user first/last aggregate lives
     on the DURATION GRID (bounded by the observation span in days,
     not by users)."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     span = ev.agg(F.max(F.to_date("ts")).alias("end_day"))
     users = (
         ev.groupBy("user_id")
@@ -268,14 +256,11 @@ def q_item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("ok"), F.col("o_custkey").alias("ck")
     )
-    cp = (
+    cp = pin(
         li.join(orders, "ok")
         .select("ck", "pk")
         .distinct()
         .repartition(spark.sparkContext.defaultParallelism, "ck")
-        # lineitem-proportional pin (distinct customer x part) →
-        # serialized (r12 triage; see operators/dedup._PIN_SER)
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     marg = cp.groupBy("pk").agg(F.count(F.lit(1)).alias("n_u"))
     pairs = (
@@ -379,7 +364,7 @@ def q_feature_info_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one posexplode pass → (dim, bucket, label) counts (d·4·L
     rows — tiny); H(label) is a broadcast 1-row relation."""
-    emb = _embeddings(spark, sf_dir).select("vec_id", "label", "embedding")
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
     pos = emb.select(
         "label",
         F.posexplode("embedding").alias("dim", "xf"),
@@ -409,7 +394,7 @@ def q_feature_info_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("dim")
         .agg(F.sum(-(pb * pl * F.log2(pl))).alias("h_cond"))
     )
-    lab = _embeddings(spark, sf_dir).groupBy("label").agg(
+    lab = load_table(spark, sf_dir, "embeddings").groupBy("label").agg(
         F.count(F.lit(1)).alias("c")
     )
     pl0 = F.col("c").cast("double") / F.col("n").cast("double")
@@ -496,7 +481,7 @@ def q_rendezvous_sharding(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the shard grid is a broadcast {n1}-row relation; the
     fan-out is map-side; one (doc → argmax) aggregate shuffles doc
     keys once."""
-    docs = _docs(spark, sf_dir).select("doc_id")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     shards = spark.range(_RDV_SHARDS + 1).select(F.col("id").alias("s"))
     h = F.expr(
         "cast(conv(substring(md5(concat('rdv|', cast(doc_id as string),"
@@ -581,7 +566,7 @@ def q_quantile_merge_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks only sources×{k} summary points; the exact-rank audit runs
     on the value GRID (distinct values + counts), chunk-carryable at
     petabyte scale like every ordered scan here."""
-    docs = _docs(spark, sf_dir).select("source", "n_chars")
+    docs = load_table(spark, sf_dir, "documents").select("source", "n_chars")
     wsrc = Window.partitionBy("source").orderBy("n_chars")
     per = docs.withColumn("r", F.row_number().over(wsrc))
     counts = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
@@ -741,14 +726,12 @@ def q_seasonal_naive_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two aligned scans of the hour-grid aggregate joined on
     (type, hour − {l}d); the evaluation relation is hours-bounded."""
-    ev = _events(spark, sf_dir)
-    hourly = (
+    ev = load_table(spark, sf_dir, "events")
+    hourly = pin(
         ev.groupBy(
             "event_type", F.date_trunc("hour", "ts").alias("hour")
         )
         .agg(F.count(F.lit(1)).alias("cnt"))
-        # pin-bounded: hour-grid x types (time-span, not row count)
-        .localCheckpoint(eager=False)
     )
     end = ev.agg(
         F.date_trunc("hour", F.max("ts")).alias("end_hour")

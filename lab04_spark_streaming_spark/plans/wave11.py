@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lab04_spark_streaming_spark.operators.pinning import PIN_SER as _PIN_SER
+from lab04_spark_streaming_spark.operators.pinning import pin
 from lab04_spark_streaming_spark.functions.guards import (
     sql_stable_round,
     stable_round,
@@ -38,14 +38,6 @@ from lab04_spark_streaming_spark.sources.files import load_table
 
 _SPARK_TOKS = expr_tokens("text")
 _TOKS = sql_tokens("text")
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events")
 
 
 # --- shared co-purchase graph ------------------------------------------------
@@ -67,12 +59,11 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.pk").alias("u"), F.col("b.pk").alias("v"))
         .distinct()
     )
-    return (
+    return pin(
         pairs.select(F.col("u").alias("src"), F.col("v").alias("dst"))
         .unionAll(
             pairs.select(F.col("v").alias("src"), F.col("u").alias("dst"))
         )
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
 
 
@@ -119,10 +110,9 @@ def q_ppr_related_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # nodes (deg × seed) is re-joined every iteration — pin it once or
     # each round re-runs the degree aggregate AND the seed TakeOrdered
-    nodes = (
+    nodes = pin(
         deg.select(F.col("src").alias("x"), "deg")
         .crossJoin(F.broadcast(seed))
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     pr = nodes.select(
         "x",
@@ -142,7 +132,7 @@ def q_ppr_related_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("dst")
             .agg(F.sum("_c").alias("_s"))
         )
-        pr = (
+        pr = pin(
             nodes.join(
                 agg.select(F.col("dst").alias("x"), "_s"), "x", "left"
             )
@@ -158,7 +148,6 @@ def q_ppr_related_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
                     + F.expr("(85 * coalesce(_s, cast(0 as bigint))) div 100")
                 ).alias("pr"),
             )
-            .localCheckpoint(eager=False, storageLevel=_PIN_SER)
         )
     top = (
         pr.filter(F.col("x") != F.col("seed"))
@@ -240,8 +229,7 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(1)
         .select(F.col("src").alias("x"), F.lit(0).alias("dist"))
     )
-    # pin-bounded: ONE seed row (loop rebinds to the serialized union below)
-    dist = seed.localCheckpoint(eager=False)
+    dist = pin(seed)
     for _ in range(_BFS_MAX_HOPS):
         expanded = (
             edges.join(dist.withColumnRenamed("x", "src"), "src")
@@ -249,11 +237,10 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("dst").alias("x"), (F.col("dist") + 1).alias("dist")
             )
         )
-        dist = (
+        dist = pin(
             dist.unionByName(expanded)
             .groupBy("x")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False, storageLevel=_PIN_SER)
         )
     hops = dist.groupBy("dist").agg(F.count(F.lit(1)).alias("n_parts"))
     n_nodes = deg.agg(F.count(F.lit(1)).alias("n_nodes"))
@@ -325,7 +312,7 @@ def q_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fingerprint relation is the bounded selected set."""
     from lab04_spark_streaming_spark.operators.textops import expr_shingles
 
-    docs = _docs(spark, sf_dir).repartition(
+    docs = load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )
     grams = docs.withColumn("_toks", F.expr(_SPARK_TOKS)).select(
@@ -458,12 +445,10 @@ def q_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: hour-grid relations throughout; the calibration rank
     window is per-type over calibration hours."""
-    ev = _events(spark, sf_dir)
-    hourly = (
+    ev = load_table(spark, sf_dir, "events")
+    hourly = pin(
         ev.groupBy("event_type", F.date_trunc("hour", "ts").alias("hour"))
         .agg(F.count(F.lit(1)).alias("cnt"))
-        # pin-bounded: hour-grid x types (time-span, not row count)
-        .localCheckpoint(eager=False)
     )
     end = ev.agg(F.date_trunc("hour", F.max("ts")).alias("end_hour"))
     pred = hourly.select(
@@ -608,17 +593,19 @@ def q_fs_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pairs enumerate within prefix blocks only (the
     blocking_eval-measured candidate space); field stats are 3
     constant-size aggregates; the pattern relation is ≤ 2³ rows."""
-    docs = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.expr(expr_norm_digest("text")).alias("dg"),
-        F.substring("text", 1, _FS_BLOCK_CHARS).alias("blk"),
-        (F.col("n_chars") / _FS_LEN_BUCKET).cast("long").alias("lenb"),
-        (F.expr(f"size({_SPARK_TOKS})") / _FS_TOK_BUCKET)
-        .cast("long")
-        .alias("tokb"),
-        F.expr(f"try_element_at({_SPARK_TOKS}, 1)").alias("w1"),
-    ).localCheckpoint(eager=False, storageLevel=_PIN_SER)
-    pairs = (
+    docs = pin(
+        load_table(spark, sf_dir, "documents").select(
+            "doc_id",
+            F.expr(expr_norm_digest("text")).alias("dg"),
+            F.substring("text", 1, _FS_BLOCK_CHARS).alias("blk"),
+            (F.col("n_chars") / _FS_LEN_BUCKET).cast("long").alias("lenb"),
+            (F.expr(f"size({_SPARK_TOKS})") / _FS_TOK_BUCKET)
+            .cast("long")
+            .alias("tokb"),
+            F.expr(f"try_element_at({_SPARK_TOKS}, 1)").alias("w1"),
+        )
+    )
+    pairs = pin(
         docs.alias("a")
         .join(docs.alias("b"), "blk")
         .filter(F.col("a.doc_id") < F.col("b.doc_id"))
@@ -630,7 +617,6 @@ def q_fs_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.coalesce(F.col("a.w1") == F.col("b.w1"), F.lit(False))
             ).alias("g3"),
         )
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     stats = pairs.groupBy().agg(
         F.sum(F.when(F.col("is_match"), 1).otherwise(0)).alias("nm"),
@@ -744,10 +730,10 @@ def q_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: bigram fan-out is one per adjacent token pair; all LM
     relations are vocab- or bigram-type-bounded; continuation counts
     are two grouped aggregates on the bigram-type relation."""
-    toks = _docs(spark, sf_dir).repartition(
+    toks = load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     ).withColumn("_toks", F.expr(_SPARK_TOKS))
-    bi = (
+    bi = pin(
         toks.select(
             F.explode(
                 F.expr(
@@ -761,7 +747,6 @@ def q_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("b.w1", "b.w2")
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c12"))
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     c1 = bi.groupBy("w1").agg(F.sum("c12").alias("c1"))
     n1a = bi.groupBy("w1").agg(F.count(F.lit(1)).alias("n1a"))
@@ -855,11 +840,11 @@ def q_media_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     media = media_from_documents(
-        _docs(spark, sf_dir).repartition(
+        load_table(spark, sf_dir, "documents").repartition(
             spark.sparkContext.defaultParallelism, "doc_id"
         )
     )
-    ph = phash_stub(media).localCheckpoint(eager=False, storageLevel=_PIN_SER)
+    ph = pin(phash_stub(media))
     bands = ph.select(
         "media_id",
         "phash",

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lab04_spark_streaming_spark.operators.pinning import PIN_SER as _PIN_SER
+from lab04_spark_streaming_spark.operators.pinning import pin
 from lab04_spark_streaming_spark.functions.guards import (
     sql_stable_round,
     stable_round,
@@ -32,14 +32,6 @@ from lab04_spark_streaming_spark.sources.files import load_table
 
 _SPARK_TOKS = expr_tokens("text")
 _TOKS = sql_tokens("text")
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events")
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
 
 
 # --- sample-ratio-mismatch check ---------------------------------------------
@@ -61,7 +53,7 @@ def q_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one distinct-user aggregate on (day, arm) — bounded by
     days × 2."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.select(
             F.to_date("ts").alias("day"),
@@ -141,7 +133,7 @@ def q_obrien_fleming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one grouped pass builds per-day moments; the look relation
     is a 3-row broadcast; cumulative sums join days ≤ look day."""
-    ev = _events(spark, sf_dir).filter(
+    ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin(_OBF_ARM_A, _OBF_ARM_B)
     )
     dec = F.col("value").cast("decimal(30,6)")
@@ -153,7 +145,7 @@ def q_obrien_fleming(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(dec2).alias("sq"),
         F.count(F.lit(1)).alias("n"),
     )
-    day0 = _events(spark, sf_dir).agg(
+    day0 = load_table(spark, sf_dir, "events").agg(
         F.min(F.to_date("ts")).alias("d0")
     )
     looks = spark.createDataFrame(_OBF_LOOKS, ["look_day", "bound"])
@@ -268,7 +260,7 @@ def q_qte_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-arm rank windows; at petabyte scale the same decision
     is a merged quantile summary (quantile_merge_eval is the audited
     path); here it's the exact rank."""
-    ev = _events(spark, sf_dir).filter(
+    ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin(_OBF_ARM_A, _OBF_ARM_B)
     )
     w = Window.partitionBy("event_type").orderBy("value", "event_id")
@@ -350,7 +342,7 @@ def q_stratified_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic, never a single-task window over the per-user relation
     (one row per user is still billions on a web-scale log).
     Bit-identical to the oracle's ntile."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     users = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(30,6)")).alias("sv"),
@@ -482,15 +474,19 @@ def q_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     k1, b = _BM25_K1, _BM25_B
     terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", F.expr(_SPARK_TOKS).alias("_toks")
-    ).localCheckpoint(eager=False, storageLevel=_PIN_SER)
-    rel = docs.select(
-        "doc_id",
-        F.expr(
-            f"size(array_intersect(array_distinct(_toks), array({terms})))"
-        ).cast("long").alias("rel"),
-    ).localCheckpoint(eager=False, storageLevel=_PIN_SER)
+    docs = pin(
+        load_table(spark, sf_dir, "documents").select(
+            "doc_id", F.expr(_SPARK_TOKS).alias("_toks")
+        )
+    )
+    rel = pin(
+        docs.select(
+            "doc_id",
+            F.expr(
+                f"size(array_intersect(array_distinct(_toks), array({terms})))"
+            ).cast("long").alias("rel"),
+        )
+    )
     dl = docs.select(
         "doc_id", F.expr("cast(size(_toks) as bigint)").alias("dl")
     )

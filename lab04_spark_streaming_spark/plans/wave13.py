@@ -20,7 +20,7 @@ from lab04_spark_streaming_spark.functions.guards import (
     sql_stable_round,
     stable_round,
 )
-from lab04_spark_streaming_spark.operators.pinning import PIN_SER as _PIN_SER
+from lab04_spark_streaming_spark.operators.pinning import pin
 from lab04_spark_streaming_spark.operators.textops import (
     expr_tokens,
     sql_tokens,
@@ -29,14 +29,6 @@ from lab04_spark_streaming_spark.sources.files import load_table
 
 _SPARK_TOKS = expr_tokens("text")
 _TOKS = sql_tokens("text")
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events")
 
 
 # --- Good–Turing frequency smoothing -----------------------------------------
@@ -57,20 +49,16 @@ def q_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
     observed count rows) after the vocab-bounded word count."""
     # wc feeds N_r AND the token total; nr feeds the filter AND its
     # own shifted self — pin both (multi-consumer rule)
-    wc = (
-        _docs(spark, sf_dir)
+    wc = pin(
+        load_table(spark, sf_dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .select(F.explode(F.expr(_SPARK_TOKS)).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("r"))
-        # pin-bounded: vocab-bounded (w, r) counts
-        .localCheckpoint(eager=False)
     )
-    nr = (
+    nr = pin(
         wc.groupBy("r")
         .agg(F.count(F.lit(1)).alias("n_r"))
-        # pin-bounded: <= max observed count rows
-        .localCheckpoint(eager=False)
     )
     tot = wc.agg(F.sum("r").alias("n_tokens"))
     nxt = nr.select((F.col("r") - 1).alias("r"), F.col("n_r").alias("n_r1"))
@@ -147,13 +135,11 @@ def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: everything after the word→first-decile aggregate is a
     ≤{s}-row relation."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     n_docs = docs.agg(F.count(F.lit(1)).alias("nd"))
     # the token stream feeds first-decile AND per-decile counts —
-    # split-restore + pin once; exploded per-token rows are
-    # corpus-token-proportional, so the pin stores serialized
-    # (operators/dedup._PIN_SER; r13 triage)
-    toks = (
+    # split-restore + pin once.
+    toks = pin(
         docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .crossJoin(F.broadcast(n_docs))
         .select(
@@ -163,7 +149,6 @@ def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("dec"),
             F.explode(F.expr(_SPARK_TOKS)).alias("w"),
         )
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     first_dec = toks.groupBy("w").agg(F.min("dec").alias("fd"))
     new_terms = first_dec.groupBy("fd").agg(
@@ -365,17 +350,18 @@ def q_tukey_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-type rank windows; at petabyte scale the quantile pick
     is a merged-summary cut (quantile_merge_eval's audited path). The
     ranked pin is one row per events row (read 4 times: q1/q3/fences
-    join/outlier count), so it stores serialized
-    (operators/dedup._PIN_SER; r13 triage)."""
-    ev = _events(spark, sf_dir).select("event_type", "value", "event_id")
+    join/outlier count)."""
+    ev = load_table(spark, sf_dir, "events").select("event_type", "value", "event_id")
     w = Window.partitionBy("event_type").orderBy("value", "event_id")
     n = Window.partitionBy("event_type")
-    ranked = ev.select(
-        "event_type",
-        "value",
-        F.row_number().over(w).alias("r"),
-        F.count(F.lit(1)).over(n).alias("n"),
-    ).localCheckpoint(eager=False, storageLevel=_PIN_SER)
+    ranked = pin(
+        ev.select(
+            "event_type",
+            "value",
+            F.row_number().over(w).alias("r"),
+            F.count(F.lit(1)).over(n).alias("n"),
+        )
+    )
     q1 = (
         ranked.filter(F.col("r") * 4 >= F.col("n"))
         .groupBy("event_type")
@@ -457,7 +443,7 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: (cohort_week × age_week)-bounded relations after one
     grouped pass; the cumulative window is per-cohort over the
     age grid."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     first = ev.groupBy("user_id").agg(
         F.date_trunc("week", F.min("ts")).alias("cohort_week")
     )
@@ -547,7 +533,7 @@ def q_time_decay_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the touch join is a per-user range join bounded by the
     7-day window; credits aggregate on the tiny channel key."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "user_id",
         F.col("event_id").alias("p_id"),

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lab04_spark_streaming_spark.operators.pinning import PIN_SER as _PIN_SER
+from lab04_spark_streaming_spark.operators.pinning import pin
 from lab04_spark_streaming_spark.functions.guards import (
     sql_stable_round,
     stable_round,
@@ -35,18 +35,6 @@ from lab04_spark_streaming_spark.sources.files import load_table
 
 _SPARK_TOKS = expr_tokens("text")
 _TOKS = sql_tokens("text")
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events")
-
-
-def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings")
 
 
 # --- Lorenz concentration curve ---------------------------------------------
@@ -68,7 +56,7 @@ def q_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-user spend shuffles on user_id; the ntile is the
     range-partitioned two-pass rank; the cumulative window runs over
     the {n}-row bucket relation only."""
-    users = _events(spark, sf_dir).groupBy("user_id").agg(
+    users = load_table(spark, sf_dir, "events").groupBy("user_id").agg(
         F.sum(F.col("value").cast("decimal(30,6)")).alias("s")
     )
     bucketed = global_ntile(
@@ -154,7 +142,7 @@ def q_t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two grouped counts (cell×bin, bin) + a broadcast
     |cells|×{b}-row grid; every window is over the fixed bin grid."""
-    ev = _events(spark, sf_dir).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.least(
             (
@@ -301,7 +289,7 @@ def q_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             return F.sum(F.when(cond, dec))
         return F.count(F.when(cond, F.lit(1)))
 
-    agg = _events(spark, sf_dir).agg(
+    agg = load_table(spark, sf_dir, "events").agg(
         cell(1, 0, "s").alias("s_t_pre"),
         cell(1, 0, "n").alias("n_t_pre"),
         cell(1, 1, "s").alias("s_t_post"),
@@ -397,7 +385,7 @@ def q_jackknife_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one grouped aggregate to {g} bucket rows; everything
     after is arithmetic over the broadcast {g}-row relation."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     buckets = ev.groupBy((F.col("user_id") % _JK_BUCKETS).alias("b")).agg(
         F.sum(
             F.when(
@@ -541,8 +529,8 @@ def q_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one grouped pass builds per-user flags; the sketch is a
     TakeOrdered bottom-k (per-partition heaps); everything after is
     arithmetic over ≤ k rows."""
-    users = (
-        _events(spark, sf_dir)
+    users = pin(
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(
             F.max(
@@ -560,7 +548,6 @@ def q_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " 16, 10) as bigint)"
             ),
         )
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     exact = users.agg(
         F.sum("in_a").alias("n_a_exact"),
@@ -683,7 +670,7 @@ def q_ipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one per-user aggregate, the distributed two-pass ntile,
     one 10-row broadcast of bucket propensities, one reduction."""
-    users = _events(spark, sf_dir).groupBy("user_id").agg(
+    users = load_table(spark, sf_dir, "events").groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(30,6)")).alias("sv"),
     )
@@ -819,9 +806,11 @@ def q_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     k1, b = _BM25_K1, _BM25_B
     terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", F.expr(_SPARK_TOKS).alias("_toks")
-    ).localCheckpoint(eager=False, storageLevel=_PIN_SER)
+    docs = pin(
+        load_table(spark, sf_dir, "documents").select(
+            "doc_id", F.expr(_SPARK_TOKS).alias("_toks")
+        )
+    )
     rel = docs.select(
         "doc_id",
         F.expr(
@@ -994,9 +983,11 @@ def q_ql_dirichlet_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lab04_spark_streaming_spark.plans.corpus import _BM25_TERMS
 
     terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", F.expr(_SPARK_TOKS).alias("_toks")
-    ).localCheckpoint(eager=False, storageLevel=_PIN_SER)
+    docs = pin(
+        load_table(spark, sf_dir, "documents").select(
+            "doc_id", F.expr(_SPARK_TOKS).alias("_toks")
+        )
+    )
     dl = docs.select(
         "doc_id", F.expr("cast(size(_toks) as bigint)").alias("dl")
     )
@@ -1127,7 +1118,7 @@ def q_ece_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lab04_spark_streaming_spark.plans.corpus import _BM25_TERMS
 
     terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
-    per_doc = _docs(spark, sf_dir).select(
+    per_doc = load_table(spark, sf_dir, "documents").select(
         F.expr(f"cast(size({_SPARK_TOKS}) as bigint)").alias("dl"),
         F.expr(
             f"cast(size(array_intersect(array_distinct({_SPARK_TOKS}),"
@@ -1284,7 +1275,7 @@ def q_mmd_rff(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(f, _MMD_B[f]) for f in range(_MMD_D)], "f int, b double"
     )
     comps = (
-        _embeddings(spark, sf_dir)
+        load_table(spark, sf_dir, "embeddings")
         .filter(F.col("label").isin(_MMD_LABEL_A, _MMD_LABEL_B))
         .select(
             "vec_id",
@@ -1392,8 +1383,6 @@ GROUP BY a.n, b.n
 
 
 # --- Holt linear-trend one-step backtest ---------------------------------------
-_HOLT_ALPHA = 0.5  # exact binary rationals: the recursion is
-_HOLT_BETA = 0.5  # bit-identical across engines at any eval order
 _HOLT_H = 24
 
 
@@ -1424,7 +1413,7 @@ def q_holt_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     MATERIALIZED — without it DuckDB re-evaluates the aggregate in
     every one of the ~720 recursion steps, 14x slower.)"""
     hourly = (
-        _events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .groupBy(
             "event_type", F.date_trunc("hour", F.col("ts")).alias("h")
         )
@@ -1483,7 +1472,7 @@ def q_holt_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     series = hourly.groupBy("event_type").agg(
         F.array_sort(F.collect_list(F.struct("h", "y"))).alias("_hy")
     )
-    rec = (
+    rec = pin(
         series.select("event_type", F.explode(F.expr(_fold)).alias("_r"))
         .select(
             "event_type",
@@ -1493,9 +1482,6 @@ def q_holt_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("_r.l").alias("l"),
             F.col("_r.b").alias("b"),
         )
-        # pin-bounded: types x (_HOLT_H + 1) rows (constant per series
-        # since the r15 sliding-window fold)
-        .localCheckpoint(eager=False)
     )
     n = rec.groupBy("event_type").agg(F.max("rn").alias("n_hours"))
     tail = rec.join(n, "event_type").filter(

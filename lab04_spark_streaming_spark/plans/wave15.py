@@ -22,11 +22,8 @@ from lab04_spark_streaming_spark.functions.guards import (
     sql_stable_round,
     stable_round,
 )
+from lab04_spark_streaming_spark.operators.pinning import pin
 from lab04_spark_streaming_spark.sources.files import load_table
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events")
 
 
 _SPLIT = "2024-01-16 00:00:00"
@@ -51,7 +48,7 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two grouped counts + a broadcast |cells|×{bb}-bin grid;
     nothing wider than (type, bin) ever shuffles."""
-    ev = _events(spark, sf_dir).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         (F.col("ts") < F.lit(_SPLIT)).cast("int").alias("h1"),
         F.least(
@@ -174,7 +171,7 @@ def q_markov_next_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: successor pairs come from one lead() window per user
     (partitioned, no global order); train/eval are |types|²-bounded
     aggregates; the modal pick is a |types|-partitioned rank."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
         ev.select("user_id", "ts", "event_id", "event_type")
@@ -285,7 +282,7 @@ def q_fano_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one (type, hour) count + a broadcast 1-row hour span
     crossed with the type list; moments reduce hours-bounded rows."""
-    ev = _events(spark, sf_dir).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("h")
     )
     span = ev.agg(
@@ -404,8 +401,8 @@ def q_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one (type, hour) aggregate, one broadcast type×24 profile
     join, one moments reduction; the rank runs over 24 rows per
     type."""
-    hourly = (
-        _events(spark, sf_dir)
+    hourly = pin(
+        load_table(spark, sf_dir, "events")
         .groupBy(
             "event_type", F.date_trunc("hour", F.col("ts")).alias("h")
         )
@@ -416,8 +413,6 @@ def q_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("y")
         )
         .withColumn("hod", F.hour("h").cast("int"))
-        # pin-bounded: 24-row hour-of-day grid x types
-        .localCheckpoint(eager=False)
     )
     prof = hourly.groupBy("event_type", "hod").agg(
         (
@@ -543,7 +538,7 @@ def q_pinball_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one ranked pick per (type, τ) from the first half, one
     broadcast of the |types|×3 predictor grid, one integer
     reduction over the second half."""
-    ev = _events(spark, sf_dir).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         "ts",
         "event_id",

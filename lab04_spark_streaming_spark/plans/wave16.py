@@ -21,12 +21,8 @@ from lab04_spark_streaming_spark.functions.guards import (
     sql_stable_round,
     stable_round,
 )
-from lab04_spark_streaming_spark.operators.pinning import PIN_SER as _PIN_SER
+from lab04_spark_streaming_spark.operators.pinning import pin
 from lab04_spark_streaming_spark.sources.files import load_table
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events")
 
 
 def _part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -79,7 +75,7 @@ def q_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one per-(user, type) aggregate, one per-user self-join
     bounded by |types|² per user, then all iterations run on the
     broadcastable |types|²-relation."""
-    per_ut = _events(spark, sf_dir).groupBy("user_id", "event_type").agg(
+    per_ut = load_table(spark, sf_dir, "events").groupBy("user_id", "event_type").agg(
         (
             F.sum(F.col("value").cast("decimal(30,6)")).cast("double")
             / F.count(F.lit(1)).cast("double")
@@ -103,7 +99,7 @@ def q_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("winner").alias("i"), F.col("loser").alias("j")
     ).agg(F.count(F.lit(1)).alias("w_ij"))
     # symmetric pair totals n_ij and per-type win totals W_i
-    n_pair = (
+    n_pair = pin(
         wins.select("i", "j", "w_ij")
         .unionByName(
             wins.select(
@@ -112,8 +108,6 @@ def q_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("i", "j")
         .agg(F.sum("w_ij").alias("n_ij"))
-        # pin-bounded: |types|^2 comparison-pair rows
-        .localCheckpoint(eager=False)
     )
     wr_ = wins.select(
         F.col("i").alias("wi"), F.col("j").alias("wj"),
@@ -245,11 +239,8 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     join shuffles on node keys; moments reduce the 2|E| endpoint
     rows map-side. The edge pin is ~2 edges per lineitem row — the
     SAME relation whose deserialized pin OOM'd triangle_count's 100x
-    probe — so it stores serialized (operators/dedup._PIN_SER; r13
-    triage)."""
-    edges = _part_edges(spark, sf_dir).localCheckpoint(
-        eager=False, storageLevel=_PIN_SER
-    )
+    probe."""
+    edges = pin(_part_edges(spark, sf_dir))
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionByName(edges.select(F.col("v").alias("node")))
@@ -325,19 +316,15 @@ def q_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the degree relation shuffles on node keys once; the
     4-row threshold grid broadcast-joins against it; edges stream
-    map-side against the broadcast hub flags. Both pins store
-    serialized (r13 triage): edges is the triangle-count OOM
-    relation (~2 per lineitem row), and deg is |parts|-proportional
-    — smaller, but still a row-scaling relation read three times."""
-    edges = _part_edges(spark, sf_dir).localCheckpoint(
-        eager=False, storageLevel=_PIN_SER
-    )
-    deg = (
+    map-side against the broadcast hub flags. Both relations are
+    pinned: edges is the triangle-count OOM relation (~2 per lineitem
+    row), and deg is |parts|-proportional and read three times."""
+    edges = pin(_part_edges(spark, sf_dir))
+    deg = pin(
         edges.select(F.col("u").alias("node"))
         .unionByName(edges.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     ks = spark.createDataFrame([(k,) for k in _RICH_KS], "k long")
     nk = (
@@ -438,7 +425,7 @@ def q_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     (purchases × preceding-hour events, bounded by per-user activity,
     the same shape as last-touch attribution); the census is 8 rows;
     the credit arithmetic is constant work."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         F.col("user_id").alias("pu"),
         F.col("ts").alias("pts"),

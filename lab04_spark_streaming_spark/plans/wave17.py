@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lab04_spark_streaming_spark.operators.pinning import PIN_SER as _PIN_SER
+from lab04_spark_streaming_spark.operators.pinning import pin
 from lab04_spark_streaming_spark.functions.guards import (
     sql_stable_round,
     stable_round,
@@ -31,22 +31,17 @@ from lab04_spark_streaming_spark.sources.files import load_table
 _K = 8
 
 
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings")
-
-
 def _dists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cid, dist): exact integer squared L2 to every trained
     centroid — the d2 relation of the kmeans oracle chain."""
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     pos = _kmeans_pos(emb, "vec_id", "embedding")
     cent = kmeans_centroids(emb, k=_K, updates=1)
     diff = F.col("x") - F.col("c")
-    return (
+    return pin(
         pos.join(F.broadcast(cent), "pos")
         .groupBy("vec_id", "cid")
         .agg(F.sum(diff * diff).alias("dist"))
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
 
 
@@ -163,7 +158,7 @@ def q_calinski_harabasz(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: W falls out of the k-bounded argmin; B is k·d work over
     the broadcast centroid relation."""
-    emb = _emb(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
     pos = _kmeans_pos(emb, "vec_id", "embedding")
     cent = kmeans_centroids(emb, k=_K, updates=1)
     diff = F.col("x") - F.col("c")
@@ -172,13 +167,15 @@ def q_calinski_harabasz(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id", "cid")
         .agg(F.sum(diff * diff).alias("dist"))
     )
-    own = d.groupBy("vec_id").agg(
-        F.min(F.struct("dist", "cid")).alias("_p")
-    ).select(
-        "vec_id",
-        F.col("_p.cid").alias("cluster"),
-        F.col("_p.dist").alias("a2"),
-    ).localCheckpoint(eager=False, storageLevel=_PIN_SER)
+    own = pin(
+        d.groupBy("vec_id").agg(
+            F.min(F.struct("dist", "cid")).alias("_p")
+        ).select(
+            "vec_id",
+            F.col("_p.cid").alias("cluster"),
+            F.col("_p.dist").alias("a2"),
+        )
+    )
     w_tot = own.agg(
         F.sum("a2").alias("w_ssq"), F.count(F.lit(1)).alias("n")
     )

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lab04_spark_streaming_spark.operators.pinning import PIN_SER as _PIN_SER
+from lab04_spark_streaming_spark.operators.pinning import pin
 from lab04_spark_streaming_spark.functions.guards import (
     sql_stable_round,
     stable_round,
@@ -31,10 +31,6 @@ from lab04_spark_streaming_spark.sources.files import load_table
 
 _SPARK_TOKS = expr_tokens("text")
 _TOKS = sql_tokens("text")
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
 
 
 # --- Croston intermittent-demand forecast ---------------------------------------
@@ -171,17 +167,15 @@ def q_bigram_heldout_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: counts shuffle on word/bigram keys (vocab-bounded); the
     eval pass is one explode + two key joins; nothing global."""
     half = float(_HELDOUT_SMOOTH_NUM) / float(_HELDOUT_SMOOTH_DEN)
-    toks = (
-        _docs(spark, sf_dir)
+    toks = pin(
+        load_table(spark, sf_dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .select("doc_id", F.expr(_SPARK_TOKS).alias("toks"))
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     train_w = toks.filter(F.col("doc_id") % 2 == 0).select(
         "doc_id", F.posexplode("toks").alias("i", "w")
     )
-    # pin-bounded: vocab-bounded distinct words
-    vocab = train_w.select("w").distinct().localCheckpoint(eager=False)
+    vocab = pin(train_w.select("w").distinct())
     v_size = vocab.agg((F.count(F.lit(1)) + 1).alias("v"))  # +1: <unk>
     w_next = Window.partitionBy("doc_id").orderBy("i")
     train_bg = (
@@ -314,7 +308,7 @@ def q_fairness_parity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two grouped counts; the audit arithmetic runs on the
     |sources|-row relation against one broadcast total."""
-    per_doc = _docs(spark, sf_dir).select(
+    per_doc = load_table(spark, sf_dir, "documents").select(
         "source",
         (F.expr(f"size({_SPARK_TOKS})") >= 100).cast("int").alias("pos"),
     )
@@ -405,7 +399,7 @@ def q_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     books = pq_codebooks(emb, m=4, k=16, updates=1)
-    enc = pq_encode(emb, books, sub_dim=16).localCheckpoint(eager=False, storageLevel=_PIN_SER)
+    enc = pin(pq_encode(emb, books, sub_dim=16))
     per_sub = enc.groupBy("sub").agg(
         F.count(F.lit(1)).alias("n_vecs"),
         F.sum("sqdist").alias("ssq"),
@@ -514,12 +508,11 @@ def q_rec_hitrate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").alias("ok"),
         (F.col("o_orderdate") < F.lit(_REC_SPLIT)).alias("is_train"),
     )
-    basket = (
+    basket = pin(
         li.join(orders, "ok")
         .select("ok", "pk", "is_train")
         .distinct()
         .repartition(spark.sparkContext.defaultParallelism, "ok")
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     train = basket.filter(F.col("is_train"))
     pairs = (

@@ -24,9 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from lab04_spark_streaming_spark.operators.pinning import PIN_SER as _PIN_SER
+from lab04_spark_streaming_spark.operators.pinning import pin
 from lab04_spark_streaming_spark.functions.guards import (
     sql_stable_round,
     stable_round,
@@ -39,10 +38,6 @@ from lab04_spark_streaming_spark.sources.files import load_table
 
 _SPARK_TOKS = expr_tokens("text")
 _TOKS = sql_tokens("text")
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
 
 
 # --- per-source unigram KL drift -------------------------------------------
@@ -58,17 +53,15 @@ def q_source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the (source, word) and (word) relations are vocab-bounded;
     the join key is the word; sources are the output (tiny). Two
     aggregations, no window, nothing unbounded in one task."""
-    toks = _docs(spark, sf_dir).select(
+    toks = load_table(spark, sf_dir, "documents").select(
         "source", F.explode(F.expr(_SPARK_TOKS)).alias("w")
     )
     # ns / cw / n are all derivable from sw — one tokenize+explode pass,
     # pinned with a lazy checkpoint so the three consumers don't replay
     # it (the jaccard_prefix_join lesson, mining.py).
-    sw = (
+    sw = pin(
         toks.groupBy("source", "w")
         .agg(F.count(F.lit(1)).alias("cs"))
-        # pin-bounded: sources x vocab-bounded counts
-        .localCheckpoint(eager=False)
     )
     ns = sw.groupBy("source").agg(F.sum("cs").alias("ns"))
     cw = sw.groupBy("w").agg(F.sum("cs").alias("c"))
@@ -165,7 +158,7 @@ def q_length_theil_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     document contributes the limit term 0 explicitly — x·ln(x) → 0 —
     because DuckDB's ln(0) is a hard error while Spark's returns NULL
     (silently dropping the row); stable_round(4)."""
-    d = _docs(spark, sf_dir).select("source", "n_chars")
+    d = load_table(spark, sf_dir, "documents").select("source", "n_chars")
     tot = d.groupBy("source").agg(
         F.sum("n_chars").alias("s"), F.count(F.lit(1)).alias("n")
     )
@@ -229,16 +222,10 @@ def q_copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # C(13,2) structs/order worst case.  n_orders falls out as a plain
     # count of the pinned rows (no distinct pass).  Same pairs, same
     # marginals, same oracle — re-proven vs DuckDB after the rewrite.
-    # Pin storage: orders-proportional rows (~13 ints payload each) —
-    # SERIALIZED (PySpark's MEMORY_AND_DISK; the r10 100x probe flagged
-    # the deserialized default's unroll pressure on this very pin).
-    basket = (
+    basket = pin(
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("_parts"))
-        .localCheckpoint(
-            eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
     )
     n_orders = basket.agg(F.count(F.lit(1)).alias("n_orders"))
     marg = (
@@ -324,10 +311,9 @@ def q_bpe_encode_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pure integers + one division — hash-exact."""
     # ONE tokenize+explode pass feeds both the trainer (word counts)
     # and the per-doc encode join — pinned with a lazy checkpoint.
-    toks = (
-        _docs(spark, sf_dir)
+    toks = pin(
+        load_table(spark, sf_dir, "documents")
         .select("doc_id", F.explode(F.expr(_SPARK_TOKS)).alias("w"))
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     wc = toks.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
 
@@ -600,7 +586,7 @@ def q_cross_source_duplication(spark: SparkSession, sf_dir: str) -> DataFrame:
     here; capped by the source catalog at any scale, never by corpus
     size). Exact integers, deterministic."""
     ds = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .select("source", F.expr(_SPARK_NORM_H).alias("digest"))
         .distinct()
     )
@@ -639,10 +625,9 @@ def q_vocab_novelty_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vocab-bounded shuffle, no broadcast hint — AQE decides). Exact
     integers + single divisions."""
     # ONE tokenize pass for both snapshot halves (lazy checkpoint).
-    toks = (
-        _docs(spark, sf_dir)
+    toks = pin(
+        load_table(spark, sf_dir, "documents")
         .select("doc_id", F.explode(F.expr(_SPARK_TOKS)).alias("w"))
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     base_vocab = (
         toks.filter(F.col("doc_id") % 2 == 0).select("w").distinct()

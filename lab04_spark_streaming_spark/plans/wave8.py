@@ -33,19 +33,11 @@ from lab04_spark_streaming_spark.operators.textops import (
     expr_tokens,
     sql_tokens,
 )
-from lab04_spark_streaming_spark.operators.pinning import PIN_SER as _PIN_SER
+from lab04_spark_streaming_spark.operators.pinning import pin
 from lab04_spark_streaming_spark.sources.files import load_table
 
 _SPARK_TOKS = expr_tokens("text")
 _TOKS = sql_tokens("text")
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events")
 
 
 # --- PMI collocations -------------------------------------------------------
@@ -85,26 +77,25 @@ def q_pmi_word_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle, documented as a different statistic) or a positional
     window (bigram PMI, kneser_ney's relation), both of which bound
     pairs linearly in tokens."""
-    t = (
-        _docs(spark, sf_dir)
+    t = pin(
+        load_table(spark, sf_dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .select(
             "doc_id",
             F.explode(F.expr(f"array_distinct({_SPARK_TOKS})")).alias("w"),
         )
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
-    marg = (
+    marg = pin(
         t.groupBy("w")
         .agg(F.count(F.lit(1)).alias("nw"))
-        # pin-bounded: vocab-bounded (w, nw) counts
-        .localCheckpoint(eager=False)
     )
-    t2 = t.join(
-        marg.filter(F.col("nw") >= _PMI_MIN_DOCS).select("w"),
-        "w",
-        "left_semi",
-    ).localCheckpoint(eager=False, storageLevel=_PIN_SER)
+    t2 = pin(
+        t.join(
+            marg.filter(F.col("nw") >= _PMI_MIN_DOCS).select("w"),
+            "w",
+            "left_semi",
+        )
+    )
     pairs = (
         t2.alias("a")
         .join(t2.alias("b"), "doc_id")
@@ -113,7 +104,7 @@ def q_pmi_word_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n12"))
         .filter(F.col("n12") >= _PMI_MIN_DOCS)
     )
-    nd = _docs(spark, sf_dir).agg(F.count(F.lit(1)).alias("n_docs"))
+    nd = load_table(spark, sf_dir, "documents").agg(F.count(F.lit(1)).alias("n_docs"))
     return (
         pairs.join(marg.select(F.col("w").alias("w1"), F.col("nw").alias("n1")), "w1")
         .join(marg.select(F.col("w").alias("w2"), F.col("nw").alias("n2")), "w2")
@@ -180,24 +171,23 @@ def q_chi2_terms_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the (source, term) relation is vocab×sources-bounded; the
     rank window is partitioned by source. N is a broadcast scalar."""
-    t = (
-        _docs(spark, sf_dir)
+    t = pin(
+        load_table(spark, sf_dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .select(
             "doc_id",
             "source",
             F.explode(F.expr(f"array_distinct({_SPARK_TOKS})")).alias("w"),
         )
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     sw = t.groupBy("source", "w").agg(F.count(F.lit(1)).alias("a"))
     nw = sw.groupBy("w").agg(F.sum("a").alias("nw"))
     ns = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("ns"))
     )
-    nd = _docs(spark, sf_dir).agg(F.count(F.lit(1)).alias("n_docs"))
+    nd = load_table(spark, sf_dir, "documents").agg(F.count(F.lit(1)).alias("n_docs"))
     cells = (
         sw.join(nw, "w")
         .join(F.broadcast(ns), "source")
@@ -311,7 +301,7 @@ def q_zipf_slope_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source rank window is partitioned by source; the regression
     aggregates ≤100 rows per source. No scalar cross-joins."""
     tc = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .select("source", F.explode(F.expr(_SPARK_TOKS)).alias("w"))
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -400,7 +390,7 @@ def q_mixing_weights_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one column-pruned scan (source, n_chars), one |sources|-row
     aggregate, a broadcast 1-row total. Nothing else."""
     per = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -490,7 +480,7 @@ def q_concurrent_active_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     the trailing counts but never emit. Probes are 24 rows per
     (type, day) from a distinct aggregate, never per-event. Day tasks
     are independent; no unbounded timeline ever sits in one task."""
-    ev = _events(spark, sf_dir).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.col("ts").cast("long").alias("ep"),
         F.to_date("ts").alias("day"),
@@ -614,7 +604,7 @@ def q_missing_hours_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the grid explode is (span-hours)-bounded PER TYPE from a
     1-row-per-type aggregate — never a per-event explode; the anti
     join keys are (type, hour)."""
-    ev = _events(spark, sf_dir).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("hr")
     )
     obs = ev.distinct()
@@ -768,17 +758,13 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # Both pins are row/pair-proportional -> serialized (r13 triage;
-    # operators/dedup._PIN_SER): assign is n x (id, cluster), pairs is
-    # the within-cell pair relation read by both union branches.
-    assign = (
+    # assign is n x (id, cluster); pairs is the within-cell pair
+    # relation read by both union branches.
+    assign = pin(
         kmeans_assign_packed(emb, k=8, iters=2)
         .select("vec_id", F.col("cluster").alias("kcluster"))
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
-    pairs = cell_pair_cosines(emb, assign).localCheckpoint(
-        eager=False, storageLevel=_PIN_SER
-    )
+    pairs = pin(cell_pair_cosines(emb, assign))
     labels = emb.select("vec_id", F.col("label").cast("int").alias("label"))
     sym = pairs.select(
         F.col("id_a").alias("anchor"), F.col("id_b").alias("other"), "cos"
@@ -867,7 +853,7 @@ def q_debounce_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: every window is partitioned by (user, type); state per
     partition is one lag + one running sum."""
-    ev = _events(spark, sf_dir).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_type",
         "event_id",
@@ -963,7 +949,7 @@ def q_interval_union_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the running max and island numbering are per-user
     partitioned windows (lag-1 state); island aggregation re-shuffles
     on the same user key. No global order anywhere."""
-    ev = _events(spark, sf_dir).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         F.col("ts").cast("long").alias("s"),
         (F.col("ts").cast("long") + _ACTIVITY_SPAN_S).alias("e"),
@@ -1049,14 +1035,12 @@ def q_vocab_coverage_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: vocab-bounded count relation, per-partition top-k heaps, a
     broadcast 1-row total. Never a global sort of the vocabulary."""
-    tc = (
-        _docs(spark, sf_dir)
+    tc = pin(
+        load_table(spark, sf_dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .select(F.explode(F.expr(_SPARK_TOKS)).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
-        # pin-bounded: vocab-bounded (w, c) counts
-        .localCheckpoint(eager=False)
     )
     tot = tc.agg(
         # empty vocabulary (all-empty corpus): 0, not NULL
@@ -1152,7 +1136,7 @@ def q_deseasonal_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: (type, hod) grid is broadcast; two grouped percentile
     passes on the type key. No windows."""
-    ev = _events(spark, sf_dir).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_type", F.hour("ts").alias("hod"), "value"
     )
     hm = ev.groupBy("event_type", "hod").agg(
@@ -1272,17 +1256,13 @@ def q_label_noise_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # Both pins are row/pair-proportional -> serialized (r13 triage;
-    # operators/dedup._PIN_SER): assign is n x (id, cluster), pairs is
-    # the within-cell pair relation read by both union branches.
-    assign = (
+    # assign is n x (id, cluster); pairs is the within-cell pair
+    # relation read by both union branches.
+    assign = pin(
         kmeans_assign_packed(emb, k=8, iters=2)
         .select("vec_id", F.col("cluster").alias("kcluster"))
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
-    pairs = cell_pair_cosines(emb, assign).localCheckpoint(
-        eager=False, storageLevel=_PIN_SER
-    )
+    pairs = pin(cell_pair_cosines(emb, assign))
     labels = emb.select("vec_id", F.col("label").cast("int").alias("label"))
     sym = pairs.select(
         F.col("id_a").alias("anchor"), F.col("id_b").alias("other")
@@ -1383,15 +1363,14 @@ def q_simhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lab04_spark_streaming_spark.operators import dedup as dd
     from lab04_spark_streaming_spark.operators.textops import expr_tokens
 
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     pairs = dd.simhash_pairs(docs)
     toks = expr_tokens("text")
-    sets = (
+    sets = pin(
         docs.filter(F.expr(f"size(array_distinct({toks})) > 0"))
         .select(
             "doc_id", F.expr(f"array_distinct({toks})").alias("s")
         )
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     xa = sets.select(F.col("doc_id").alias("id_a"), F.col("s").alias("sa"))
     xb = sets.select(F.col("doc_id").alias("id_b"), F.col("s").alias("sb"))
@@ -1470,7 +1449,7 @@ def q_props_variant_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: parse + extract are per-row codegen expressions; one
     bounded-key shuffle. The variant never leaves the plan — only
     typed scalars are emitted."""
-    ev = _events(spark, sf_dir).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.expr("variant_get(parse_json(props), '$.k', 'int')").alias("k"),
     )
@@ -1513,7 +1492,7 @@ def q_ab_test_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one shuffle on user, one |arms|-row aggregate."""
     per_user = (
-        _events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(
             F.sum(F.col("value").cast("decimal(30,4)"))
@@ -1623,7 +1602,7 @@ def q_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     variances are identical doubles; display at stable_round(6).
 
     Scale: one shuffle on user, one 1-row moment aggregate."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     per_user = (
         ev.groupBy("user_id")
         .agg(
@@ -1741,7 +1720,7 @@ def q_cdc_apply_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one shuffle on the key; at 100 TB this is the per-key
     last-writer-wins compaction (Delta/Iceberg MERGE INTO shape)."""
-    ev = _events(spark, sf_dir).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "event_id", "ts", "value"
     )
     w = Window.partitionBy("user_id").orderBy(
@@ -1788,7 +1767,7 @@ def q_funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines; avg is one exact-integer division.
 
     Scale: two per-user min-aggregates and a |1|-row summary."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     first_view = (
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")

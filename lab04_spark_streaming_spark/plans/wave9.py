@@ -29,7 +29,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from lab04_spark_streaming_spark.functions.guards import (
     sql_stable_round,
@@ -42,7 +41,7 @@ from lab04_spark_streaming_spark.operators.textops import (
     sql_norm_digest,
     sql_tokens,
 )
-from lab04_spark_streaming_spark.operators.pinning import PIN_SER as _PIN_SER
+from lab04_spark_streaming_spark.operators.pinning import pin
 from lab04_spark_streaming_spark.operators.splits import restore_splits
 from lab04_spark_streaming_spark.sources.files import (
     load_table,
@@ -51,18 +50,6 @@ from lab04_spark_streaming_spark.sources.files import (
 
 _SPARK_TOKS = expr_tokens("text")
 _TOKS = sql_tokens("text")
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events")
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
-def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings")
 
 
 # --- two-sample Kolmogorov–Smirnov ----------------------------------------
@@ -82,7 +69,7 @@ def q_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned by pair. Pair tagging is two broadcast equi-joins
     (types² pair relation), never an OR-join (which would force a
     nested-loop over the fact)."""
-    ev = _events(spark, sf_dir).select("event_type", "value")
+    ev = load_table(spark, sf_dir, "events").select("event_type", "value")
     types = ev.select(F.col("event_type").alias("t")).distinct()
     pairs = (
         types.alias("a")
@@ -182,7 +169,7 @@ def q_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical shape to the KS query — per-pair distinct-value
     grid, partitioned window, broadcast pair relation; the rank scan
     never touches raw rows."""
-    ev = _events(spark, sf_dir).select("event_type", "value")
+    ev = load_table(spark, sf_dir, "events").select("event_type", "value")
     types = ev.select(F.col("event_type").alias("t")).distinct()
     pairs = (
         types.alias("a")
@@ -303,7 +290,7 @@ def q_randomization_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side ×P expansion feeding one partial-aggregated groupBy(p) —
     shuffle rows = P, not P·n."""
     ev = (
-        _events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .filter(F.col("event_type").isin(_RAND_TEST_A, _RAND_TEST_B))
         .select("event_id", "event_type", "value")
     )
@@ -407,7 +394,7 @@ def q_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the window ranks USERS (bounded: one row per (type, user)
     after the pre-aggregation), partitioned by event type."""
     ucnt = (
-        _events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .groupBy("event_type", "user_id")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -486,7 +473,7 @@ def q_kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks only the ≤ sources·k surviving sketch rows — the raw token
     relation is never re-scanned, which is the whole point."""
     toks = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .select(
             "source",
             F.explode(
@@ -635,7 +622,7 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one broadcast 1-row total, one scan, no shuffle for the
     filter itself. π_i > 1 docs (w_i > Σw/n_target) are always kept —
     the min(1, ·) branch falls out of the same inequality."""
-    docs = _docs(spark, sf_dir).select("doc_id", "source", "n_chars")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
     tot = docs.agg(
         F.sum("n_chars").alias("sw"), F.count(F.lit(1)).alias("n_docs")
     )
@@ -784,8 +771,8 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     slower, never wrong.
 
     Honesty note on "action-free": with AQE enabled, even a LAZY
-    localCheckpoint materializes its upstream shuffle stages at the
-    .localCheckpoint() call (AdaptiveSparkPlanExec.execute() runs
+    pin materializes its upstream shuffle stages when ``pin`` is
+    called (AdaptiveSparkPlanExec.execute() runs
     the query stages; only the final result stage is deferred), so
     CONSTRUCTING this query still runs jobs — measured 9 at
     sf0.001 — as does every checkpointing builder in the package,
@@ -817,22 +804,11 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pairs feeds degree + orientation; oriented feeds the adjacency
     # build AND the intersection pass — pin both (multi-consumer
-    # rule).  The pins store SERIALIZED (MEMORY_AND_DISK_SER): the
-    # default deserialized level buffers each partition as a vector
-    # of row objects before storing — at a 100x upscale (~120M pinned
-    # pair rows) 32 concurrent unroll vectors OOM'd a 24g heap under
-    # GC-locker allocation pressure, while the serialized holder
-    # unrolls through a chunked byte buffer with incremental memory
-    # checks and spills to disk gracefully (observed: OOM -> clean
-    # 100x run from this one change; sf0.1 cost is unmeasurable).
-    # PySpark's MEMORY_AND_DISK is the serialized level (the object
-    # form is MEMORY_AND_DISK_DESER, the localCheckpoint default).
-    _PIN = StorageLevel.MEMORY_AND_DISK
-    pairs = (
+    # rule).
+    pairs = pin(
         baskets.select(F.explode(F.expr(_pair_structs)).alias("_pr"))
         .select(F.col("_pr.u").alias("u"), F.col("_pr.v").alias("v"))
         .distinct()
-        .localCheckpoint(eager=False, storageLevel=_PIN)
     )
     deg = (
         pairs.select(F.col("u").alias("x"))
@@ -840,7 +816,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("x")
         .agg(F.count(F.lit(1)).alias("d"))
     )
-    oriented = (
+    oriented = pin(
         pairs.join(deg.withColumnRenamed("x", "u").withColumnRenamed("d", "du"), "u")
         .join(deg.withColumnRenamed("x", "v").withColumnRenamed("d", "dv"), "v")
         .select(
@@ -853,12 +829,10 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("e")
         )
         .select("e.s", "e.t")
-        .localCheckpoint(eager=False, storageLevel=_PIN)
     )
-    adj = (
+    adj = pin(
         oriented.groupBy("s")
         .agg(F.array_sort(F.collect_list("t")).alias("nbrs"))
-        .localCheckpoint(eager=False, storageLevel=_PIN)
     )
     # Broadcast the adjacency only while it fits. Past the cap the same
     # intersection plan runs as a SHUFFLED-HASH join on s then t — at
@@ -990,7 +964,7 @@ def q_compaction_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: partitioned window over (source) ordered by doc_id; at
     petabyte scale the same shape rides the chunked prefix-sum carry
     pattern (README 'running scans')."""
-    docs = _docs(spark, sf_dir).select("doc_id", "source", "n_chars")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
     w = (
         Window.partitionBy("source")
         .orderBy("doc_id")
@@ -1047,7 +1021,7 @@ def q_zonemap_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     the threshold grid is a broadcast literal relation — the fact
     table is scanned once regardless of grid size."""
     stats = (
-        _events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .groupBy(F.to_date("ts").alias("day"))
         .agg(
             F.max("value").alias("vmax"),
@@ -1126,7 +1100,7 @@ def q_blocking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinatorics replace the pair join entirely — this is how you
     evaluate blocking on a corpus where materializing candidates
     would already be the expensive step."""
-    docs = _docs(spark, sf_dir).select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.expr(expr_norm_digest("text")).alias("dg"),
         F.substring("text", 1, _BLOCK_PREFIX_CHARS).alias("blk"),
@@ -1240,8 +1214,8 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     tgt_list = ", ".join(f"'{s}'" for s in _DSIR_TARGET_SOURCES)
     # the bucketed token stream feeds the LM counts AND the scoring
     # join — split-restore + pin it once (multi-consumer rule)
-    toks = (
-        _docs(spark, sf_dir)
+    toks = pin(
+        load_table(spark, sf_dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .select(
             "doc_id",
@@ -1258,7 +1232,6 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f" {_DSIR_BUCKETS})"
             ).alias("b"),
         )
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     lm = toks.groupBy("b").agg(
         F.sum(F.when(F.col("is_tgt"), 1).otherwise(0)).alias("ct"),
@@ -1341,7 +1314,7 @@ def q_sax_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     time range, not the row count); the heavy reduction is the
     map-side-combined hourly aggregate."""
     hourly = (
-        _events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .groupBy(
             "event_type", F.date_trunc("hour", "ts").alias("hour")
         )
@@ -1423,7 +1396,7 @@ def q_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation, and the rank window runs over only the k survivors."""
     stop_arr = ", ".join(f"'{w}'" for w in _RAKE_STOPWORDS)
     toks = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .select(
             "doc_id",
@@ -1434,7 +1407,7 @@ def q_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     wd = Window.partitionBy("doc_id").orderBy("pos")
     # phrase bodies feed the phrase-length aggregate AND the word
     # stats join — pin the segmented relation once
-    phr = (
+    phr = pin(
         toks.withColumn(
             "phrase_id",
             F.sum(F.when(F.col("is_stop"), 1).otherwise(0)).over(
@@ -1442,7 +1415,6 @@ def q_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .filter(~F.col("is_stop"))
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     plen = phr.groupBy("doc_id", "phrase_id").agg(
         F.count(F.lit(1)).alias("phrase_len")
@@ -1540,7 +1512,7 @@ def q_l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one grouped aggregate on the bounded (type, day) release
     key; countDistinct is exact (the release decision can't ride an
     approximation) and partial-aggregates map-side."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy("event_type", F.to_date("ts").alias("day"))
         .agg(
@@ -1587,7 +1559,7 @@ def q_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: probe set is a fixed small relation (vec_id <
     {q}) broadcast against the corpus — probes·N pair work, the
     brute-force baseline the IVF/PQ queries compare against."""
-    emb = _embeddings(spark, sf_dir).select("vec_id", "embedding")
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     pos = emb.select(
         "vec_id",
         F.posexplode(F.col("embedding")).alias("pos", "xf"),
@@ -1737,7 +1709,7 @@ def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-task window over the per-document relation (one row per
     doc ≈ 10^10 rows on a web corpus). Bit-identical to the oracle's
     ntile."""
-    toks = _docs(spark, sf_dir).select(
+    toks = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.explode(F.expr(_SPARK_TOKS)).alias("w")
     )
     freq = toks.groupBy("w").agg(F.count(F.lit(1)).alias("tf"))
@@ -1823,7 +1795,7 @@ def q_sequence_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-user partitioned sessionization windows; the pattern
     relation is a broadcast literal; session strings are bounded by
     session length (the 30-min gap bounds them in practice)."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     sess = (
         ev.select(
@@ -1970,7 +1942,7 @@ def q_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: fan-out ×{r} is map-side; the only shuffle carries {r}
     partial aggregates per partition. The rank window sees {r} rows."""
-    ev = _events(spark, sf_dir).filter(F.col("event_type") == _BOOT_TYPE)
+    ev = load_table(spark, sf_dir, "events").filter(F.col("event_type") == _BOOT_TYPE)
     reps = spark.range(_BOOT_REPS).select(F.col("id").alias("rep"))
     # Split restoration (r14 opt round, guide §2.5 input skew): the
     # type-filtered slice of a one/few-row-group events file arrives as
@@ -2108,7 +2080,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     k1, b = _BM25_K1, _BM25_B
     terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
-    docs = _docs(spark, sf_dir).select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.expr(_SPARK_TOKS).alias("_toks")
     )
     dl = docs.select(
@@ -2159,7 +2131,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("r_lex") <= _RRF_DEPTH)
         .select("doc_id", "r_lex")
     )
-    emb = _embeddings(spark, sf_dir).select("vec_id", "embedding")
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     pos = emb.select(
         "vec_id", F.posexplode("embedding").alias("pos", "xf")
     ).select(
@@ -2328,7 +2300,7 @@ def q_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     panel, never raw tokens."""
     srcs = ", ".join(f"'{s}'" for s in _JS_SOURCES)
     wc = (
-        _docs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents")
         .filter(F.expr(f"source in ({srcs})"))
         .select("source", F.explode(F.expr(_SPARK_TOKS)).alias("w"))
         .groupBy("source", "w")
@@ -2473,13 +2445,12 @@ def q_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         _expr_quantize,
     )
 
-    emb = _embeddings(spark, sf_dir).select("vec_id", "embedding")
-    vecs = (
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    vecs = pin(
         emb.select(
             "vec_id", F.expr(_expr_quantize("embedding")).alias("qv")
         )
         .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     d2 = (
         "aggregate(zip_with(qv, carr, (x, y) -> (x - y) * (x - y)), "
@@ -2500,19 +2471,15 @@ def q_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     c0 = vecs.filter(F.col("vec_id") == 0).select(
         F.col("qv").alias("carr")
     )
-    mind = dist_to(c0).withColumnRenamed("dnew", "mind").localCheckpoint(
-        eager=False, storageLevel=_PIN_SER
-    )
+    mind = pin(dist_to(c0).withColumnRenamed("dnew", "mind"))
     selected = spark.createDataFrame(
         [(0, 0, None)], "step int, vec_id long, radius_sq long"
     )
     for step in range(1, _KCENTER_K):
-        arg = (
+        arg = pin(
             mind.orderBy(F.desc("mind"), "vec_id")
             .limit(1)
             .select("vec_id", F.col("mind").alias("radius_sq"))
-            # pin-bounded: ONE row (the argmax pick)
-            .localCheckpoint(eager=False)
         )
         selected = selected.unionByName(
             arg.select(
@@ -2522,12 +2489,11 @@ def q_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         cvec = vecs.join(
             F.broadcast(arg.select("vec_id")), "vec_id"
         ).select(F.col("qv").alias("carr"))
-        mind = (
+        mind = pin(
             mind.join(dist_to(cvec), "vec_id")
             .select(
                 "vec_id", F.least("mind", "dnew").alias("mind")
             )
-            .localCheckpoint(eager=False, storageLevel=_PIN_SER)
         )
     return selected
 
@@ -2603,10 +2569,10 @@ def q_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs."""
     from lab04_spark_streaming_spark.operators.textops import expr_shingles
 
-    docs = _docs(spark, sf_dir).repartition(
+    docs = load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )
-    sh = (
+    sh = pin(
         docs.withColumn("_toks", F.expr(_SPARK_TOKS))
         .select(
             "doc_id",
@@ -2614,13 +2580,12 @@ def q_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr(f"array_distinct({expr_shingles('_toks', 3)})")
             ).alias("shingle"),
         )
-        .localCheckpoint(eager=False, storageLevel=_PIN_SER)
     )
     rare = sh.groupBy("shingle").agg(
         F.count(F.lit(1)).alias("_df")
     ).filter(F.col("_df") <= _LSH_DF_CAP)
     shc = sh.join(rare.select("shingle"), "shingle", "left_semi")
-    shc = shc.localCheckpoint(eager=False, storageLevel=_PIN_SER)
+    shc = pin(shc)
     sizes = shc.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     inter = (
         shc.alias("a")

@@ -23,7 +23,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 # --- A1: raw price tick (topic `btc-price`) --------------------------------
@@ -31,15 +30,6 @@ from pyspark.sql.types import (
 # (reference: main.py:105-110). Transform consumers deliberately omit
 # data_age_ms — schema projection == column pruning at the parse
 # (reference: moving_statistic.py:25-29).
-TICK_WIRE_SCHEMA = StructType(
-    [
-        StructField("symbol", StringType()),
-        StructField("price", DoubleType()),
-        StructField("event_time", StringType()),
-        StructField("data_age_ms", IntegerType()),
-    ]
-)
-
 TICK_SCHEMA = StructType(
     [
         StructField("symbol", StringType()),
@@ -85,17 +75,6 @@ ZSCORE_SCHEMA = StructType(
 )
 
 # --- B: driver star schema (FIXTURES.md §B) --------------------------------
-EVENTS_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
-)
-
 # events.props JSON payload ({"k": <int>}).
 EVENT_PROPS_SCHEMA = StructType([StructField("k", IntegerType())])
 

@@ -27,6 +27,14 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from lab04_spark_streaming_spark.streaming.sources import (
+    TOPIC_HIGHER,
+    TOPIC_LOWER,
+    TOPIC_MOVING,
+    TOPIC_PRICE,
+    TOPIC_ZSCORE,
+)
+
 
 @dataclass(frozen=True)
 class TopicSpec:
@@ -38,11 +46,11 @@ class TopicSpec:
 
 # Reference topic set (setup_transform.py:126-131).
 PIPELINE_TOPICS: tuple[TopicSpec, ...] = (
-    TopicSpec("btc-price", description="Input topic from Extract phase"),
-    TopicSpec("btc-price-moving", description="Output topic for moving statistics"),
-    TopicSpec("btc-price-zscore", description="Output topic for Z-scores"),
-    TopicSpec("btc-price-higher", description="Bonus: Higher price windows"),
-    TopicSpec("btc-price-lower", description="Bonus: Lower price windows"),
+    TopicSpec(TOPIC_PRICE, description="Input topic from Extract phase"),
+    TopicSpec(TOPIC_MOVING, description="Output topic for moving statistics"),
+    TopicSpec(TOPIC_ZSCORE, description="Output topic for Z-scores"),
+    TopicSpec(TOPIC_HIGHER, description="Bonus: Higher price windows"),
+    TopicSpec(TOPIC_LOWER, description="Bonus: Lower price windows"),
 )
 
 

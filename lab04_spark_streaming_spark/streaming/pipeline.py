@@ -42,6 +42,8 @@ from lab04_spark_streaming_spark.operators.zscore import (
     nest_zscores,
     zscore_exact_grid,
 )
+from lab04_spark_streaming_spark.schemas import MOVING_STATS_SCHEMA, ZSCORE_SCHEMA
+from lab04_spark_streaming_spark.streaming.sources import decode_json
 
 WATERMARK = "10 seconds"  # reference: moving_statistic.py:47
 KAFKA_TRIGGER = "5 seconds"  # reference: moving_statistic.py:129
@@ -81,9 +83,12 @@ def stage2_moving_stats(
 
 
 def stage2_wire(ticks: DataFrame, **kwargs) -> DataFrame:
-    """Stage-2 output in the reference wire shape: timestamp cast to
-    string (Spark default format — reference moving_statistic.py:109),
-    JSON value ready for Kafka.
+    """Stage-2 output as `btc-price-moving` JSON values, in the
+    reference wire shape ``MOVING_STATS_SCHEMA``: timestamp cast to
+    string (Spark default format — reference moving_statistic.py:109)
+    and ``windows: [{window, avg_price, std_price}]``. The struct cast
+    renames the fields at this boundary only; the batch and streaming
+    operators keep ``avg_value``/``std_value``.
 
     Streaming callers note: the nested shape chains stats-agg →
     collect_list-agg (two stateful operators), which Spark's
@@ -93,15 +98,25 @@ def stage2_wire(ticks: DataFrame, **kwargs) -> DataFrame:
     (``stage2_moving_stats(nested=False)``) needs no such flag and is
     the recommended streaming output and the shape stage 3 consumes."""
     nested = stage2_moving_stats(ticks, **kwargs)
-    key_cols = [c for c in nested.columns if c not in ("timestamp", "windows")]
     return nested.select(
         F.to_json(
-            F.struct(
-                F.col("timestamp").cast("string").alias("timestamp"),
-                *[F.col(k) for k in key_cols],
-                F.col("windows"),
-            )
+            F.struct("timestamp", "symbol", "windows").cast(MOVING_STATS_SCHEMA)
         ).alias("value")
+    )
+
+
+def decode_moving_stats(raw: DataFrame) -> DataFrame:
+    """`btc-price-moving` values (:func:`stage2_wire`) → the flat stats
+    rows stage 3 joins on: (timestamp, symbol, window, avg_value,
+    std_value), as ``stage2_moving_stats(nested=False)`` emits them."""
+    return (
+        decode_json(raw, MOVING_STATS_SCHEMA)
+        .select(
+            F.to_timestamp("timestamp").alias("timestamp"),
+            "symbol",
+            F.inline("windows"),
+        )
+        .withColumnsRenamed({"avg_price": "avg_value", "std_price": "std_value"})
     )
 
 
@@ -125,6 +140,19 @@ def stage3_zscore(
     flat = zscore_exact_grid(ticks, stats_flat, ts_col, list(key_cols), value_col)
     out = nest_zscores(flat, list(key_cols)) if nested else flat
     return out
+
+
+def stage3_wire(ticks: DataFrame, stats_flat: DataFrame, **kwargs) -> DataFrame:
+    """Stage-3 output as `btc-price-zscore` JSON values, in the
+    reference wire shape ``ZSCORE_SCHEMA``: timestamp cast to string
+    (reference zscore_calculator.py:151) and
+    ``zscores: [{window, zscore_price}]``."""
+    nested = stage3_zscore(ticks, stats_flat, **kwargs)
+    return nested.select(
+        F.to_json(
+            F.struct("timestamp", "symbol", "zscores").cast(ZSCORE_SCHEMA)
+        ).alias("value")
+    )
 
 
 def stream_stream_outer_join(

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from lab04_spark_streaming_spark.operators.pinning import PIN_SER as _PIN_SER
+from lab04_spark_streaming_spark.operators.pinning import pin
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -77,9 +77,8 @@ def first_crossing_batch(
     # Both join sides consume base; without this the scan + dedup
     # shuffle runs twice (broadcast vs shuffle exchange types defeat
     # ReuseExchange). Lazy local checkpoint materializes it once at
-    # first action and shares the partitions. key x ts rows
-    # (row-proportional) -> serialized (r13 triage).
-    base = base.localCheckpoint(eager=False, storageLevel=_PIN_SER)
+    # first action and shares the partitions.
+    base = pin(base)
     left = base.select(
         *key_cols,
         "ts",

@@ -46,11 +46,12 @@ def run_local(duration: int) -> None:
 
 
 def run_kafka(bootstrap: str, checkpoint_root: str) -> None:
-    from lab04_spark_streaming_spark.schemas import TICK_SCHEMA, WINDOW_STATS_SCHEMA
+    from lab04_spark_streaming_spark.schemas import TICK_SCHEMA
     from lab04_spark_streaming_spark.streaming.pipeline import (
+        decode_moving_stats,
         kafka_sink,
         stage2_wire,
-        stage3_zscore,
+        stage3_wire,
         strict_parity_conf,
     )
     from lab04_spark_streaming_spark.streaming.sources import (
@@ -61,7 +62,6 @@ def run_kafka(bootstrap: str, checkpoint_root: str) -> None:
         kafka_source,
     )
     from pyspark.sql import functions as F
-    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
     spark = get_spark(app_name="lab04-pipeline")
     strict_parity_conf(spark)  # reference runs multi-stateful chains
@@ -77,28 +77,9 @@ def run_kafka(bootstrap: str, checkpoint_root: str) -> None:
         "update",
     ).start()
 
-    moving_schema = StructType(
-        [
-            StructField("timestamp", StringType()),
-            StructField("symbol", StringType()),
-            StructField("windows", ArrayType(WINDOW_STATS_SCHEMA)),
-        ]
-    )
-    stats_nested = decode_json(
-        kafka_source(spark, bootstrap, TOPIC_MOVING), moving_schema
-    ).withColumn("timestamp", F.to_timestamp("timestamp"))
-    stats_flat = stats_nested.select(
-        "timestamp", "symbol", F.explode("windows").alias("w")
-    ).select(
-        "timestamp",
-        "symbol",
-        F.col("w.window").alias("window"),
-        F.col("w.avg_price").alias("avg_value"),
-        F.col("w.std_price").alias("std_value"),
-    )
-    z = stage3_zscore(ticks, stats_flat, "event_time", ["symbol"], "price")
+    stats_flat = decode_moving_stats(kafka_source(spark, bootstrap, TOPIC_MOVING))
     s3 = kafka_sink(
-        z.select(F.to_json(F.struct("timestamp", "symbol", "zscores")).alias("value")),
+        stage3_wire(ticks, stats_flat),
         bootstrap,
         TOPIC_ZSCORE,
         os.path.join(checkpoint_root, "stage3"),

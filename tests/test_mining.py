@@ -278,10 +278,13 @@ def test_rep_docs_one_representative_per_cluster(spark, sf_dir):
     n_chars, doc_id tie-break), every unclustered doc survives, and no
     doc appears twice."""
     from lab04_spark_streaming_spark.plans.llm import q_dedup_clusters
+    from lab04_spark_streaming_spark.sources.files import load_table
 
     docs = {
         r["doc_id"]: r["n_chars"]
-        for r in mining._docs(spark, sf_dir).select("doc_id", "n_chars").collect()
+        for r in load_table(spark, sf_dir, "documents")
+        .select("doc_id", "n_chars")
+        .collect()
     }
     clusters = defaultdict(list)
     for r in q_dedup_clusters(spark, sf_dir).collect():

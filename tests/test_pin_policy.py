@@ -1,72 +1,39 @@
-"""Pin-storage policy enforcement (r13, closing the r12 verdict's
-item 2): every ``localCheckpoint`` in the package either
+"""Pin policy: every ``localCheckpoint`` in the package goes through
+``operators/pinning.pin``, so every pin stores serialized. The
+deserialized default buffers each partition as a vector of row objects
+while unrolling, which ran a 24 GB heap out of memory at the 100x scale
+tier twice (triangle_count, dedup_clusters).
 
-* stores **serialized** (``storageLevel=_PIN_SER`` /
-  ``StorageLevel.MEMORY_AND_DISK``) — required for any relation whose
-  row count grows with input size (rows, tokens, pairs, edges,
-  nodes): the deserialized default buffers each partition as a vector
-  of row objects while unrolling, which OOM'd a 24 GB heap at the
-  100x scale tier twice (triangle_count r11, dedup_clusters r12); or
-* keeps the fast deserialized default and carries a ``pin-bounded:``
-  comment within the preceding 8 lines stating WHAT bounds it (a
-  parameter like k·d codebook rows, a schema property like |types|²,
-  the time-span slot grid, or sublinear vocab growth).
-
-This is a source-scan test so the classification can never silently
-rot: a new unclassified pin fails CI until it is either serialized or
-justified."""
+A source check over the syntax tree, so a new direct call fails CI
+wherever it is written."""
 
 from __future__ import annotations
 
+import ast
 import glob
 import os
-import re
 
 PKG = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "lab04_spark_streaming_spark",
 )
+PINNING = os.path.join(PKG, "operators", "pinning.py")
 
 
-def _pin_sites():
-    for path in sorted(glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)):
-        lines = open(path).read().splitlines()
-        for i, line in enumerate(lines):
-            if "localCheckpoint(" not in line or line.strip().startswith("#"):
-                continue
-            # join the statement until the call's parentheses balance
-            # (a fixed line window silently skips or misclassifies a
-            # call whose kwargs land further down — r13 advisor note)
-            start = line.index("localCheckpoint(")
-            depth = 0
-            parts = []
-            for j in range(i, min(i + 40, len(lines))):
-                seg = lines[j][start:] if j == i else lines[j]
-                parts.append(seg)
-                depth += seg.count("(") - seg.count(")")
-                if depth <= 0 and j > i or (j == i and depth == 0):
-                    break
-            stmt = " ".join(parts)
-            # only real pin calls (docstring mentions carry no eager=)
-            if "eager=" not in stmt:
-                continue
-            yield path, i + 1, lines, i, stmt
-
-
-def test_every_pin_serialized_or_bounded():
+def test_only_pinning_calls_local_checkpoint():
     violations = []
-    for path, lineno, lines, i, stmt in _pin_sites():
-        if "storageLevel" in stmt:
+    for path in sorted(glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)):
+        if path == PINNING:
             continue
-        ctx = lines[max(0, i - 8) : i + 1]
-        if any("pin-bounded:" in c for c in ctx):
-            continue
-        rel = os.path.relpath(path, os.path.dirname(PKG))
-        violations.append(f"{rel}:{lineno}: {lines[i].strip()}")
+        for node in ast.walk(ast.parse(open(path).read(), path)):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "localCheckpoint"
+            ):
+                violations.append(f"{os.path.relpath(path, PKG)}:{node.lineno}")
     assert not violations, (
-        "unclassified deserialized pins (add storageLevel=_PIN_SER for "
-        "row-proportional relations, or a `# pin-bounded: <reason>` "
-        "comment within 8 lines for genuinely bounded ones):\n"
+        "localCheckpoint called outside operators/pinning.py (use pin):\n"
         + "\n".join(violations)
     )
 
@@ -75,8 +42,6 @@ def test_pin_ser_is_the_serialized_level():
     """Guard the naming trap: in PySpark, MEMORY_AND_DISK is the
     SERIALIZED level (deserialized is MEMORY_AND_DISK_DESER, the
     localCheckpoint default)."""
-    from lab04_spark_streaming_spark.operators.dedup import _PIN_SER
     from lab04_spark_streaming_spark.operators.pinning import PIN_SER
 
     assert PIN_SER.deserialized is False
-    assert _PIN_SER is PIN_SER  # the dedup alias stays wired

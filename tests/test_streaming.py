@@ -5,7 +5,9 @@ watermark/state semantics must behave (late drop, first-crossing)."""
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,11 +20,17 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from lab04_spark_streaming_spark.operators.moving_stats import moving_stats_flat
+from lab04_spark_streaming_spark.operators.moving_stats import (
+    REFERENCE_WINDOWS,
+    moving_stats_flat,
+)
 from lab04_spark_streaming_spark.streaming.pipeline import (
+    decode_moving_stats,
     memory_sink_once,
     stage2_moving_stats,
     stage2_wire,
+    stage3_wire,
+    stage3_zscore,
 )
 from lab04_spark_streaming_spark.streaming.sources import file_stream
 from lab04_spark_streaming_spark.streaming.state import (
@@ -68,8 +76,6 @@ def test_stage2_stream_equals_batch(spark, tmp_path):
     """Stage 2 as a stream emits the rows of the batch window() union
     over the same ticks (the three short reference windows: the batch
     side's 1h window() alone plans a 360-way Expand)."""
-    from lab04_spark_streaming_spark.operators.moving_stats import REFERENCE_WINDOWS
-
     rows = _ticks(n=40)
     path = str(tmp_path / "ticks")
     spark.createDataFrame(rows, TICK_SCHEMA).coalesce(1).write.parquet(path)
@@ -106,14 +112,41 @@ def test_stage2_wire_shape(spark, tick_dir):
         )
     rows = spark.table("stage2_wire").collect()
     assert rows, "no wire output"
-    import json
-
     msg = json.loads(rows[0].value)
     assert set(msg) == {"timestamp", "symbol", "windows"}
     assert isinstance(msg["windows"], list) and msg["windows"]
-    assert set(msg["windows"][0]) == {"window", "avg_value", "std_value"}
+    assert set(msg["windows"][0]) == {"window", "avg_price", "std_price"}
     # reference wire format: Spark default timestamp string, no 'T'
     assert "T" not in msg["timestamp"]
+
+
+def test_kafka_codec_round_trip(spark):
+    """Stage 3 fed through the `btc-price-moving` codec gives the
+    z-scores of stage 3 fed the flat stats directly. Decoding that topic
+    by other field names than stage 2 encodes leaves every avg/std NULL,
+    and every z-score 0.0."""
+    ticks = spark.createDataFrame(_ticks(n=400), TICK_SCHEMA)
+    windows = REFERENCE_WINDOWS[:2]
+    cols = ["timestamp", "symbol", "window", "avg_value", "std_value"]
+    flat = stage2_moving_stats(ticks, windows=windows, nested=False).select(cols)
+    decoded = decode_moving_stats(stage2_wire(ticks, windows=windows))
+    assert decoded.columns == cols
+    assert Counter(decoded.collect()) == Counter(flat.collect())
+
+    direct = stage3_zscore(ticks, flat, nested=False).collect()
+    assert any(r.zscore_value != 0.0 for r in direct)
+    via_wire = stage3_zscore(ticks, decoded, nested=False).collect()
+    assert Counter(via_wire) == Counter(direct)
+
+    # stage3_wire: reference names, timestamp as Spark's string cast
+    msgs = [json.loads(r.value) for r in stage3_wire(ticks, decoded).collect()]
+    got = Counter(
+        (m["timestamp"], m["symbol"], z["window"], z["zscore_price"])
+        for m in msgs
+        for z in m["zscores"]
+    )
+    want = Counter((str(r.timestamp), r.symbol, r.window, r.zscore_value) for r in direct)
+    assert got == want
 
 
 def _write_feed(spark, path, blocks, first=0):
@@ -171,8 +204,6 @@ def test_watermark_drops_late_rows(spark, tmp_path):
 def _per_batch(df, checkpoint):
     """Stream ``df`` to completion in update mode; returns
     {batch id: Counter of emitted rows} and the query progress."""
-    from collections import Counter
-
     out = {}
 
     def collect(batch_df, batch_id):
@@ -196,7 +227,6 @@ def test_stage2_one_aggregate_matches_window_union_per_batch(spark, tmp_path):
     over the same watermarked feed. Batch 2 carries ticks 5-14 s behind
     the watermark (some of their windows still open) and ticks ~12 min
     behind it (every window closed); batch 3 ticks 50-59 s behind."""
-    from lab04_spark_streaming_spark.operators.moving_stats import REFERENCE_WINDOWS
     from lab04_spark_streaming_spark.streaming.pipeline import WATERMARK
 
     def at(s):
@@ -260,8 +290,6 @@ def test_stage2_restarts_on_its_checkpoint(spark, tmp_path):
     before the stop and another right after the restart, where only the
     restored watermark can cut it. The session writes checkpoint files
     through the FileSystem API (no delete before a rename)."""
-    from lab04_spark_streaming_spark.operators.moving_stats import REFERENCE_WINDOWS
-
     manager = spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
     assert manager.endswith(".FileSystemBasedCheckpointFileManager")
 
@@ -360,7 +388,6 @@ def _stage3_inputs(spark, tick_rows, stats_rows, tmp_path):
     grid, and batch stage-2 output (three windows) over ``stats_rows``,
     materialized and re-streamed. Returns them, the tick directory and
     the expected z-score rows for ``stats_rows`` joined with themselves."""
-    from lab04_spark_streaming_spark.operators.moving_stats import REFERENCE_WINDOWS
     from lab04_spark_streaming_spark.operators.zscore import zscore_exact_grid
 
     tick_dir = str(tmp_path / "t3_ticks")
@@ -385,8 +412,6 @@ def _stage3_inputs(spark, tick_rows, stats_rows, tmp_path):
 def _zscore_rows(df):
     """The multiset of a z-score relation's (timestamp, symbol, window,
     zscore_value) rows."""
-    from collections import Counter
-
     return Counter(
         (r.timestamp, r.symbol, r.window, r.zscore_value) for r in df.collect()
     )

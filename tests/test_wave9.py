@@ -359,29 +359,22 @@ def test_triangle_pins_store_serialized(spark, sf_dir, monkeypatch):
 
     monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
     try:
-        # Every ROW-PROPORTIONAL pin on these paths must store
-        # serialized (r11/r12 triage + the r13 package-wide sweep;
-        # tests/test_pin_policy.py enforces the same rule statically).
-        # The allowance counts the KNOWN bounded deserialized pins a
-        # path legitimately keeps at the fast default:
-        #   - q_semdedup_keep_best: kmeans_assign_packed's 1-row
-        #     packed-codebook pin (iters=2 -> fires once);
-        #   - q_hard_negative_mining / q_label_noise_knn:
-        #     kmeans_assign's k*d-row centroid pin (iters=2 -> once).
-        for fn, allowed_deser in (
-            (wave9.q_triangle_count, 0),
-            (wave7.q_copurchase_lift, 0),
-            (llm.q_dedup_clusters, 0),
-            (pipeline_extras.q_dedup_keep_best, 0),
-            (wave10.q_item_item_cosine, 0),
-            (llm.q_decontamination_containment, 0),
-            (wave16.q_graph_assortativity, 0),
-            (wave16.q_rich_club, 0),
-            (wave13.q_heaps_law, 0),
-            (wave13.q_tukey_fences, 0),
-            (pipeline_extras.q_semdedup_keep_best, 1),
-            (wave8.q_hard_negative_mining, 1),
-            (wave8.q_label_noise_knn, 1),
+        # Every pin on these paths must store serialized
+        # (tests/test_pin_policy.py enforces the same rule statically).
+        for fn in (
+            wave9.q_triangle_count,
+            wave7.q_copurchase_lift,
+            llm.q_dedup_clusters,
+            pipeline_extras.q_dedup_keep_best,
+            wave10.q_item_item_cosine,
+            llm.q_decontamination_containment,
+            wave16.q_graph_assortativity,
+            wave16.q_rich_club,
+            wave13.q_heaps_law,
+            wave13.q_tukey_fences,
+            pipeline_extras.q_semdedup_keep_best,
+            wave8.q_hard_negative_mining,
+            wave8.q_label_noise_knn,
         ):
             got = set(pin_ids)
             fn(spark, sf_dir).count()
@@ -396,10 +389,7 @@ def test_triangle_pins_store_serialized(spark, sf_dir, monkeypatch):
             deser = [
                 i.name() for i in cached if i.storageLevel().deserialized()
             ]
-            assert len(deser) <= allowed_deser, (
-                f"{fn.__name__} deserialized pins (allowed "
-                f"{allowed_deser}): {deser}"
-            )
+            assert not deser, f"{fn.__name__} deserialized pins: {deser}"
     finally:
         jmap = sc._jsc.getPersistentRDDs()
         for rid in sorted(pin_ids):
