@@ -18,6 +18,11 @@ This module computes identical results from per-slot prefix sums:
                 an as-of lookup into the sparse slot axis, implemented
                 as union + last_value(ignoreNulls) — still no expansion.
 
+The two ordered passes (cumsum, as-of fill) run either once per key or,
+with ``chunk_slots``, as two-level scans over slot-range chunks. The
+registry's queries chunk only when the parquet footer says their time
+axis spans at least two chunks (plans/reference_parity._chunk_slots).
+
 Moments and avg/std come from functions/guards.exact_moments and
 stats_from_moments — the same arithmetic as the window() union — so
 results are bit-identical to it (asserted in tests and against the
@@ -52,7 +57,10 @@ from lab04_spark_streaming_spark.operators.pinning import pin
 # keys and a long time axis most cores idle. Chunking by slot range
 # restores parallelism: each (key, chunk) sorts independently, and a
 # tiny per-chunk summary table (one row per chunk) carries the running
-# state across chunk boundaries. 16384 slots ≈ 1.9 days at 10 s.
+# state across chunk boundaries. 16384 slots ≈ 1.9 days at 10 s. On an
+# axis shorter than two chunks the carry stages buy at most a sliver of
+# parallelism, so the registry's queries then run one pass per key
+# (plans/reference_parity._chunk_slots).
 CHUNK_SLOTS = 16384
 
 # Moment suffixes: bucket columns _n/_s/_sq, running sums _cn/_cs/_csq.
@@ -99,9 +107,9 @@ def cumulative_moments(
     (key, N-slot chunk) cumsums independently, and an exclusive running
     total over the tiny per-chunk summary relation (one row per chunk)
     is broadcast back as the chunk's carry-in, so parallelism follows
-    the time axis. Costs ~3 extra small stages — callers pick by their
-    known time span (see plans/reference_parity._stats_flat for the
-    same cost-based-picker pattern)."""
+    the time axis. Costs ~3 extra small stages — the registry's queries
+    chunk only when the parquet footer's ts span covers at least two
+    chunks (plans/reference_parity._chunk_slots)."""
     if chunk_slots is None:
         w = (
             Window.partitionBy(*key_cols)
@@ -166,7 +174,8 @@ def asof_cum_lookup(
     last_value(ignoreNulls) — no expansion.
 
     ``chunk_slots=None``: one fill pass per key (serializes on key
-    cardinality — fine for short slot axes). ``chunk_slots=N``: each
+    cardinality — fine for short slot axes; the registry's queries pick
+    by plans/reference_parity._chunk_slots). ``chunk_slots=N``: each
     (key, N-slot chunk) fills independently in parallel; probes that
     precede their chunk's first bucket are patched from a per-chunk
     carry (the last bucket cum of any earlier chunk — an exclusive
@@ -283,9 +292,10 @@ def moving_stats_flat_fast(
     enumerated from each key's [min_slot, max_slot] range — work bounded
     by time-range/slide × keys × windows, independent of row count.
 
-    Both ordered passes (cumsum, as-of fill) are slot-range chunked
-    (CHUNK_SLOTS two-level scans), so parallelism follows the time axis
-    rather than the key cardinality."""
+    By default both ordered passes (cumsum, as-of fill) run once per
+    key; with ``chunk_slots`` they are slot-range chunked (two-level
+    scans), so parallelism follows the time axis rather than the key
+    cardinality."""
     buckets = bucket_moments(df, ts_col, key_cols, value_col, slide_s)
     cums = cumulative_moments(buckets, key_cols, chunk_slots=chunk_slots)
     dmax = max(_duration_seconds(d) // slide_s for _, d in windows)
@@ -387,11 +397,13 @@ def zscore_asof_fast(
                      sides hash-partitioned on the same key, one
                      shuffle each.
 
-    The fill pass is slot-range chunked (CHUNK_SLOTS): each (key,
-    chunk) fills independently and a per-chunk carry (last bucket cum
-    before the chunk — a tiny summary window) patches probes that
-    precede their chunk's first bucket, so parallelism scales with the
-    time axis instead of the key count. Output verified bit-equal to
+    With ``chunk_slots`` (default CHUNK_SLOTS) the cumsum and fill
+    passes are slot-range chunked: each (key, chunk) fills independently
+    and a per-chunk carry (last bucket cum before the chunk — a tiny
+    summary window) patches probes that precede their chunk's first
+    bucket, so parallelism scales with the time axis instead of the key
+    count. ``chunk_slots=None`` runs each pass once per key, the cheaper
+    plan below two chunks. Output verified bit-equal to
     the naive operator (tests/test_fast_path.py) and to the DuckDB
     oracle."""
     buckets = bucket_moments(ticks, ts_col, key_cols, value_col, slide_s)

@@ -26,9 +26,14 @@ from lab04_spark_streaming_spark.operators.moving_stats import (
     moving_stats_flat,
     nest_window_stats,
 )
+from lab04_spark_streaming_spark.operators.moving_stats_fast import (
+    CHUNK_SLOTS,
+    moving_stats_flat_fast,
+    zscore_asof_fast,
+)
 from lab04_spark_streaming_spark.operators.splits import restore_splits
 from lab04_spark_streaming_spark.schemas import EVENT_PROPS_SCHEMA
-from lab04_spark_streaming_spark.sources.files import load_table
+from lab04_spark_streaming_spark.sources.files import load_table, parquet_ts_span_s
 
 # Window subsets. Oracle queries bound their OUTPUT size so they stay
 # collectable under the driver's plain (default-heap) SparkSession at
@@ -87,6 +92,19 @@ def _events(
     return df
 
 
+def _chunk_slots(sf_dir: str, until: str | None = None) -> int | None:
+    """``chunk_slots`` for a prefix-sum query over ``events`` (10 s
+    slots) before ``until``: ``CHUNK_SLOTS`` when the footer's ts span
+    covers at least two full chunks, or when the footer has no
+    statistics; ``None`` (one ordered pass per key) otherwise. Below two
+    chunks the carry stages (two pins, two per-chunk summary windows,
+    two broadcast carry joins) buy at most a sliver of parallelism."""
+    span_s = parquet_ts_span_s(sf_dir, "events", "ts", until=until)
+    if span_s is None or span_s // 10 >= 2 * CHUNK_SLOTS:
+        return CHUNK_SLOTS
+    return None
+
+
 def _stats_flat(
     spark: SparkSession,
     sf_dir: str,
@@ -101,26 +119,19 @@ def _stats_flat(
 
     Measured at sf0.1: short windows over the full month favor naive
     (4.5 s vs 10.6 s), the 6-window set favors prefix sums (2.7 s vs
-    15.2 s) — so pick by the expansion factor Σ(D/S). The measurements
+    15.2 s) — so pick by the expansion factor Σ(D/S). The prefix-sum
+    path chunks its scans by :func:`_chunk_slots`. The measurements
     behind each branch are in OPTIMIZATION_r14.md and OPTIMIZATION_r15.md."""
-    from lab04_spark_streaming_spark.operators.moving_stats_fast import (
-        CHUNK_SLOTS,
-        moving_stats_flat_fast,
-    )
-
     ev = _events(spark, sf_dir, until)
     expansion = sum(_duration_seconds(dur) // 10 for _, dur in windows)
     if expansion >= 100:
-        # Chunk the prefix scans only when the slot axis is long enough
-        # to amortize the extra two-level-scan stages: an `until`-bounded
-        # slice spans ≤ a couple of chunks, so per-key passes are cheaper.
         return moving_stats_flat_fast(
             ev,
             "ts",
             ["event_type"],
             "value",
             windows=windows,
-            chunk_slots=None if until else CHUNK_SLOTS,
+            chunk_slots=_chunk_slots(sf_dir, until),
         )
     # The window() union expands through allocation-free codegen Expand
     # (the exploded form allocates an array per row and scaled worse at
@@ -180,10 +191,6 @@ def q_zscore_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sibling (moving_stats_flat_fast) OOMs a 1 GiB session on the
     # full month. Equality with the naive grid join is asserted in
     # tests/test_fast_path.py.
-    from lab04_spark_streaming_spark.operators.moving_stats_fast import (
-        zscore_asof_fast,
-    )
-
     out = zscore_asof_fast(
         ticks,
         "ts",
@@ -191,6 +198,7 @@ def q_zscore_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         max_stale_slots=0,
         id_col="event_id",
+        chunk_slots=_chunk_slots(sf_dir),
     )
     return out.select("timestamp", "event_type", "window", "zscore_value")
 
@@ -216,11 +224,8 @@ def q_zscore_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     moving_stats_fast.py) — bit-identical to the naive
     operators/zscore.zscore_asof (asserted in tests/test_fast_path.py)
     but without the 669-way sliding-window row expansion; the naive
-    plan is 5-6x slower at sf0.1 and widens with scale."""
-    from lab04_spark_streaming_spark.operators.moving_stats_fast import (
-        zscore_asof_fast,
-    )
-
+    plan is 5-6x slower at sf0.1 and widens with scale. Its scans chunk
+    by :func:`_chunk_slots`."""
     out = zscore_asof_fast(
         _events(spark, sf_dir),
         "ts",
@@ -229,6 +234,7 @@ def q_zscore_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         slide_s=10,
         max_stale_slots=1,
         id_col="event_id",
+        chunk_slots=_chunk_slots(sf_dir),
     )
     return out.select(
         "event_id", "timestamp", "event_type", "window", "zscore_value"

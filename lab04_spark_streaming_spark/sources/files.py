@@ -10,6 +10,8 @@ NOT break pushdown (no opaque UDF between scan and filter).
 
 from __future__ import annotations
 
+import datetime as dt
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,6 +35,21 @@ from lab04_spark_streaming_spark.schemas import STAR_TABLES
 _TS_COLS = {"events": ["ts"]}
 
 
+def _footers(sf_dir: str, name: str):
+    """The parquet footer (``FileMetaData``) of ``{sf_dir}/{name}.parquet``,
+    or of each part file when that path is a directory."""
+    import pyarrow.parquet as pq
+
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if not os.path.isdir(path):
+        yield pq.ParquetFile(path).metadata
+        return
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            if f.endswith(".parquet"):
+                yield pq.ParquetFile(os.path.join(root, f)).metadata
+
+
 def parquet_row_count(sf_dir: str, name: str) -> int:
     """Exact row count of ``{sf_dir}/{name}.parquet`` from the parquet
     FOOTER metadata — O(footer bytes), no Spark job, so query builders
@@ -45,17 +62,47 @@ def parquet_row_count(sf_dir: str, name: str) -> int:
     see q_triangle_count's honesty note.)
     Handles both a single file and a directory of part files; on a real
     cluster the same numbers come from the catalog / file listing."""
-    import pyarrow.parquet as pq
+    return sum(md.num_rows for md in _footers(sf_dir, name))
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(path):
-        return sum(
-            pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-            for root, _dirs, files in os.walk(path)
-            for f in files
-            if f.endswith(".parquet")
+
+# Ticks per second of each parquet TIMESTAMP unit.
+_TS_UNITS = {"milliseconds": 10**3, "microseconds": 10**6, "nanoseconds": 10**9}
+
+
+def parquet_ts_span_s(
+    sf_dir: str, name: str, col: str, until: str | None = None
+) -> float | None:
+    """Seconds between the earliest and the latest ``col`` value of
+    ``{sf_dir}/{name}.parquet``, read from the row-group min/max
+    statistics of its footers — no Spark job. With ``until`` (a UTC
+    timestamp string, the bound of a ``col < until`` filter) the latest
+    value is clamped to it. Every TIMESTAMP encoding
+    :func:`load_table` normalises reads alike (ms/µs/ns,
+    ``isAdjustedToUTC`` either way: naive values read as UTC).
+
+    ``None`` when any row group carries no min/max for ``col``, or the
+    column is not a parquet TIMESTAMP (e.g. Spark's legacy INT96):
+    callers then plan as for an unknown span."""
+    lo = hi = None
+    for md in _footers(sf_dir, name):
+        idx = [md.schema.column(i).path for i in range(len(md.schema))].index(col)
+        unit = _TS_UNITS.get(
+            json.loads(md.schema.column(idx).logical_type.to_json()).get("timeUnit")
         )
-    return pq.ParquetFile(path).metadata.num_rows
+        if unit is None:
+            return None
+        for g in range(md.num_row_groups):
+            st = md.row_group(g).column(idx).statistics
+            if st is None or not st.has_min_max:
+                return None
+            lo = st.min_raw / unit if lo is None else min(lo, st.min_raw / unit)
+            hi = st.max_raw / unit if hi is None else max(hi, st.max_raw / unit)
+    if lo is None:
+        return None
+    if until is not None:
+        bound = dt.datetime.fromisoformat(until).replace(tzinfo=dt.timezone.utc)
+        hi = min(hi, bound.timestamp())
+    return max(0.0, hi - lo)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

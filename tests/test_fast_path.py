@@ -47,28 +47,39 @@ def _btc_ticks(spark):
     )
 
 
+# The three short reference windows: the 1h window()'s 360-way Expand
+# alone would cost ~10 s per naive plan here.
+_BTC_WINDOWS = REFERENCE_WINDOWS[:3]
+
+
 def test_fast_paths_equal_naive_on_btc_prices(spark):
     """On BTCUSDT prices (:func:`_btc_ticks`), the exploded single
-    aggregate and both prefix-sum paths must match the naive operators
-    row for row."""
+    aggregate and the prefix-sum path must match the naive operator row
+    for row."""
     ev = _btc_ticks(spark)
-    # The three short reference windows: the 1h window()'s 360-way
-    # Expand alone would cost ~10 s per naive plan here.
-    wins = REFERENCE_WINDOWS[:3]
-    naive = moving_stats_flat(ev, "ts", ["event_type"], "value", windows=wins)
-    naive_rows = naive.collect()
-    s = Counter(tuple(r) for r in naive_rows)
+    naive = moving_stats_flat(ev, "ts", ["event_type"], "value", windows=_BTC_WINDOWS)
+    s = Counter(tuple(r) for r in naive.collect())
     assert sum(s.values()) > 0
     for other in (moving_stats_flat_fast, moving_stats_exploded):
-        df = other(ev, "ts", ["event_type"], "value", windows=wins)
+        df = other(ev, "ts", ["event_type"], "value", windows=_BTC_WINDOWS)
         assert s == Counter(tuple(r) for r in df.collect()), other.__name__
 
-    stats = spark.createDataFrame(naive_rows, naive.schema)
+
+@pytest.mark.parametrize("chunk_slots", [None, 4])
+def test_zscore_asof_fast_equals_naive_on_btc_prices(spark, chunk_slots):
+    """The prefix-sum z-score must match the naive as-of join on BTCUSDT
+    prices both unchunked (the plan the registry picks for short spans)
+    and chunked; ``chunk_slots=4`` makes the 95 s fixture's running
+    sums and as-of fills carry across several chunks."""
+    ev = _btc_ticks(spark)
+    naive = moving_stats_flat(ev, "ts", ["event_type"], "value", windows=_BTC_WINDOWS)
+    stats = spark.createDataFrame(naive.collect(), naive.schema)
     naive_z = zscore_asof(
         ev, stats, "ts", ["event_type"], "value", id_col="event_id"
     )
     fast_z = zscore_asof_fast(
-        ev, "ts", ["event_type"], "value", windows=wins, id_col="event_id"
+        ev, "ts", ["event_type"], "value", windows=_BTC_WINDOWS,
+        id_col="event_id", chunk_slots=chunk_slots,
     )
     z = Counter(tuple(r) for r in naive_z.collect())
     assert z == Counter(tuple(r) for r in fast_z.collect())
