@@ -17,6 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_type
 from pyspark.sql.types import (
     LongType,
     StructType,
@@ -24,7 +25,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from lab04_spark_streaming_spark.schemas import STAR_TABLES
+from lab04_spark_streaming_spark.schemas import STAR_TABLE_CONTRACT, STAR_TABLES
 
 # Timestamp columns whose physical parquet encoding has drifted across
 # testdata generations: TIMESTAMP(NANOS) (read as long via legacy conf),
@@ -69,6 +70,12 @@ def parquet_row_count(sf_dir: str, name: str) -> int:
 _TS_UNITS = {"milliseconds": 10**3, "microseconds": 10**6, "nanoseconds": 10**9}
 
 
+def _time_unit(column) -> str | None:
+    """The TIMESTAMP unit of a footer's leaf ``column`` ("nanoseconds",
+    ...), ``None`` when it is not a parquet TIMESTAMP (e.g. INT96)."""
+    return json.loads(column.logical_type.to_json()).get("timeUnit")
+
+
 def parquet_ts_span_s(
     sf_dir: str, name: str, col: str, until: str | None = None
 ) -> float | None:
@@ -86,9 +93,7 @@ def parquet_ts_span_s(
     lo = hi = None
     for md in _footers(sf_dir, name):
         idx = [md.schema.column(i).path for i in range(len(md.schema))].index(col)
-        unit = _TS_UNITS.get(
-            json.loads(md.schema.column(idx).logical_type.to_json()).get("timeUnit")
-        )
+        unit = _TS_UNITS.get(_time_unit(md.schema.column(idx)))
         if unit is None:
             return None
         for g in range(md.num_row_groups):
@@ -105,13 +110,47 @@ def parquet_ts_span_s(
     return max(0.0, hi - lo)
 
 
+def _read_schema(sf_dir: str, name: str) -> str | None:
+    """DDL read schema of ``{sf_dir}/{name}.parquet``: its footer's
+    columns, in footer order, typed by ``STAR_TABLE_CONTRACT`` — a
+    TIMESTAMP(NANOS) contract timestamp reads as the long it is stored
+    as. ``None`` (the read then infers the schema) when the path is
+    missing or holds no parquet file, or when a footer column is not in
+    the contract or its type has drifted away from it: a declared type
+    that disagrees with the file fails the scan."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    md = next(_footers(sf_dir, name), None) if os.path.exists(path) else None
+    if md is None:
+        return None
+    contract = dict(STAR_TABLE_CONTRACT.get(name, ()))
+    nanos = {
+        md.schema.column(i).path
+        for i in range(len(md.schema))
+        if _time_unit(md.schema.column(i)) == "nanoseconds"
+    }
+    fields = []
+    for f in md.schema.to_arrow_schema():
+        typ = contract.get(f.name)
+        if f.name in nanos and typ == "timestamp":
+            typ = "bigint"
+        elif typ is None or from_arrow_type(f.type).simpleString() != typ:
+            return None
+        fields.append(f"`{f.name}` {typ}")
+    return ", ".join(fields)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one star-schema table from ``{sf_dir}/{name}.parquet``."""
+    """Load one star-schema table from ``{sf_dir}/{name}.parquet``.
+
+    The read schema is declared (:func:`_read_schema`), so no
+    schema-inference job runs."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # NTZ inference off: timestamp[us] isAdjustedToUTC=false then reads
     # as plain TimestampType (session tz is UTC), bit-identical values.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    schema = _read_schema(sf_dir, name)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     for c in _TS_COLS.get(name, []):
         field = df.schema[c]
         if isinstance(field.dataType, LongType):

@@ -1,5 +1,8 @@
 """Session-factory guards (VERDICT r11 stretch (a) + advisor items).
 
+The driver JVM also runs with one C2 compiler thread
+(``-XX:CICompilerCount=2``); the same precedence rule applies to it.
+
 The GCLocker-retry JVM flag fixed a real spurious-OOM class at the
 100x/1000x scale tiers (JDK-8192647; see session.py) — these tests pin
 it so a session.py refactor can't silently drop it, and pin the r11
@@ -52,6 +55,38 @@ def test_user_gclocker_setting_wins(monkeypatch):
     opts = driver_java_options()
     assert opts.count("GCLockerRetryAllocationCount") == 1
     assert "GCLockerRetryAllocationCount=7" in opts
+
+
+def test_compiler_cap_present_by_default(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_JAVA_OPTS", raising=False)
+    assert "-XX:CICompilerCount=2" in driver_java_options().split()
+
+
+def test_user_compiler_count_wins(monkeypatch):
+    """A user's own CICompilerCount replaces the cap and appears once;
+    the GCLocker guard is still added."""
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_JAVA_OPTS", "-XX:CICompilerCount=4")
+    opts = driver_java_options()
+    assert opts.count("CICompilerCount") == 1
+    assert "-XX:CICompilerCount=4" in opts.split()
+    assert "-XX:GCLockerRetryAllocationCount=100" in opts
+
+
+def test_similar_flag_name_keeps_cap(monkeypatch):
+    """Only the flag itself counts as naming it, not an option whose
+    name merely starts with it."""
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_JAVA_OPTS", "-XX:-CICompilerCountPerCPU")
+    assert "-XX:CICompilerCount=2" in driver_java_options().split()
+
+
+def test_driver_jvm_runs_with_library_flags(spark):
+    """The driver JVM's own input arguments, read through py4j, carry
+    every option driver_java_options() builds, the compiler cap
+    included: ``spark.conf`` only shows what was asked for."""
+    jvm = spark.sparkContext._jvm
+    args = set(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
+    assert "-XX:CICompilerCount=2" in args
+    assert set(driver_java_options().split()) <= args
 
 
 def test_live_session_carries_guard(spark):

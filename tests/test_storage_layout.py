@@ -3,6 +3,11 @@ shuffle-free joins, asserted at the physical-plan level."""
 
 from __future__ import annotations
 
+import datetime as dt
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from lab04_spark_streaming_spark.sources.files import (
@@ -81,6 +86,55 @@ def test_star_table_schema_contract(spark, sf_dir):
         df = load_table(spark, sf_dir, name)
         got = tuple((f.name, f.dataType.simpleString()) for f in df.schema.fields)
         assert got == STAR_TABLE_CONTRACT[name], name
+
+
+@pytest.mark.parametrize(
+    "ts_type",
+    [pa.timestamp("us", tz="UTC"), pa.timestamp("us"), pa.timestamp("ns")],
+    ids=["us_utc", "us_ntz", "ns"],
+)
+def test_load_table_declares_schema_for_every_ts_encoding(spark, tmp_path, ts_type):
+    """``load_table`` reads events with a declared schema, so no Spark
+    job runs, and every ts encoding reads as the same microsecond
+    timestamps. A table holding a subset of the contract's columns
+    reads just those columns."""
+    t0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    ts_us = [int(t0.timestamp()) * 10**6 + k * 1_234_567 for k in range(5)]
+    per = 1000 if ts_type.unit == "ns" else 1
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(5), pa.int64()),
+            "ts": pa.array([u * per for u in ts_us], pa.int64()).cast(ts_type),
+        }),
+        str(tmp_path / "events.parquet"),
+    )
+    sc = spark.sparkContext
+    group = f"load-table-{tmp_path.name}"
+    sc.setJobGroup(group, "load_table")
+    try:
+        df = load_table(spark, str(tmp_path), "events")
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(jobs) == []
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema.fields] == [
+        ("event_id", "bigint"), ("ts", "timestamp"),
+    ]
+    got = [r["us"] for r in df.select(F.unix_micros("ts").alias("us")).orderBy("us").collect()]
+    assert got == ts_us
+
+
+def test_load_table_infers_a_drifted_table(spark, tmp_path):
+    """A footer whose types drift away from the contract reads with the
+    schema parquet infers instead of failing the scan."""
+    pq.write_table(
+        pa.table({"r_regionkey": pa.array([1, 2], pa.int64()), "r_name": ["a", "b"]}),
+        str(tmp_path / "region.parquet"),
+    )
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.schema["r_regionkey"].dataType.simpleString() == "bigint"
+    assert sorted(r["r_regionkey"] for r in df.collect()) == [1, 2]
 
 
 def test_zorder_layout_narrows_file_stats(spark, sf_dir, tmp_path):
