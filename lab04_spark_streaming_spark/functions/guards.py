@@ -9,9 +9,9 @@ The reference guards every statistic it emits (sample stddev over a
   * z    → ``when(std bad, 0.0).otherwise((price-avg)/std)``
                                            (zscore_calculator.py:127-133)
 
-:func:`exact_avg`/:func:`exact_std` keep the avg/std guards' semantics
-but compute from exact decimal moments. This module is the only place
-that knows the moment format (:func:`moment_terms`, summed by
+:func:`exact_avg` and :func:`sql_exact_std` keep the avg/std guards'
+semantics but compute from exact decimal moments. This module is the
+only place that knows the moment format (:func:`moment_terms`, summed by
 :func:`moment_sums`; :func:`exact_moments` composes the two) and the
 avg/std-from-moments arithmetic (:func:`stats_from_moments`): the
 window() union, the exploded variant and both prefix-sum paths
@@ -101,12 +101,6 @@ def exact_avg(c: Column) -> Column:
     return stats_from_moments(*exact_moments(c))[0]
 
 
-def exact_std(c: Column) -> Column:
-    """Order-independent sample stddev with the reference's guard (1-row
-    or empty group → 0.0)."""
-    return stats_from_moments(*exact_moments(c))[1]
-
-
 def sql_exact_avg(col: str) -> str:
     """DuckDB SQL mirroring :func:`exact_avg` expression-for-expression."""
     return (
@@ -135,7 +129,8 @@ def sql_stable_round(col: str, digits: int = 4) -> str:
 
 
 def sql_exact_std(col: str) -> str:
-    """DuckDB SQL mirroring :func:`exact_std` expression-for-expression."""
+    """DuckDB SQL of the sample stddev of :func:`stats_from_moments`
+    over :func:`exact_moments`, expression for expression."""
     s = f"CAST(SUM(CAST({col} AS {_V_DEC})) AS DOUBLE)"
     sq = f"CAST(SUM(CAST({col} * {col} AS {_SQ_DEC})) AS DOUBLE)"
     n = f"COUNT({col})"

@@ -94,15 +94,11 @@ def minhash_signatures(
         f"array_min(transform(_hs, h -> pmod({a}L * h + {b}L, {MINHASH_P}L)))"
         for a, b in MINHASH_COEFFS[:k]
     )
-    # Split restoration (r14): the signature pipeline is the CPU-dense
-    # part (tokenize → shingle → k hashes per doc, all interpreted
-    # higher-order exprs) and a single-row-group corpus scan is ONE
-    # input split — measured 1.2 s single-task at sf0.1.  Hash on the
-    # id (deterministic, no round-robin pre-sort), sized to the
-    # session parallelism, same pattern as simhash_pairs /
-    # jaccard_ngram_pairs below.  r15 (verdict item 4): conditional —
-    # multi-split cluster inputs must not pay an ADDED full shuffle of
-    # the document text in front of the pipeline.
+    # Split restoration: the signature pipeline is the CPU-dense part
+    # (tokenize → shingle → k hashes per doc, all interpreted
+    # higher-order exprs), and a one-row-group corpus scan runs it as
+    # ONE task (measured 1.2 s single-task at sf0.1). A scan that
+    # arrives split keeps its splits rather than shuffle the text.
     df = restore_splits(df, id_col)
     return (
         df.select(
@@ -226,9 +222,8 @@ def simhash_pairs(
     )
     # The banded relation feeds BOTH self-join sides; the expensive part
     # (tokenize + 32-bit aggregate per doc) must run once, in parallel —
-    # restore split parallelism off a single-row-group scan (r15:
-    # conditional — a no-op on multi-split cluster inputs), then pin
-    # the tiny (id, simhash, band, band_val) relation (the
+    # restore split parallelism off a one-row-group scan, then pin the
+    # tiny (id, simhash, band, band_val) relation (the
     # jaccard_prefix_join lesson; was ~27 s of replays at sf0.1).
     sh = simhash(restore_splits(nonempty, id_col), text_col, id_col)
     bands = pin(
@@ -438,15 +433,13 @@ def jaccard_pairs(
     the cap with a synthetic hot shingle).
 
     The exploded shingle relation feeds THREE consumers (sizes + both
-    self-join sides; four with the df cap) — it is repartitioned off
-    the scan (split restoration: the fixture corpus is one parquet
-    row group = one input split) and PINNED once, serialized, so the
-    tokenize→shingle pass runs once in parallel instead of once
-    single-threaded PER CONSUMER. r12: the first 10x probe of
-    dedup_clusters measured exponent 1.45 — nearly all of it this
-    replay (3 single-threaded tokenize passes over 10x the corpus,
-    measured 138 s vs 17 s with the pin); same lesson as
-    jaccard_prefix_join / decontamination (r6)."""
+    self-join sides; four with the df cap) — its scan is spread over
+    the cores (:func:`restore_splits`: a one-row-group corpus is one
+    input split) and PINNED once, serialized, so the tokenize→shingle
+    pass runs once in parallel instead of once single-threaded PER
+    CONSUMER. The first 10x probe of dedup_clusters measured exponent
+    1.45, nearly all of it this replay (3 single-threaded tokenize
+    passes over 10x the corpus: 138 s against 17 s with the pin)."""
     sh0 = pin(
         restore_splits(df, id_col)
         .select(F.col(id_col), F.expr(expr_tokens(text_col)).alias("_toks"))

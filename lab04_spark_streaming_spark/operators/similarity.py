@@ -3,7 +3,7 @@
 Two paths:
 
 * **Brute-force cosine top-k** — the exact baseline. The JVM fast path
-  (:func:`cosine_to_query`) is a single zip_with/aggregate expression:
+  (:func:`cosine_topk_vs_id_fold`) is a single zip_with/aggregate fold:
   per-row, zero shuffle, pipelined into the scan; top-k via
   TakeOrderedAndProject. At 100 TB you fan this out by partition and
   it is embarrassingly parallel.
@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lab04_spark_streaming_spark.operators.pinning import pin
+from lab04_spark_streaming_spark.operators.splits import restore_splits
 from lab04_spark_streaming_spark.operators.textops import expr_hash_int
 
 
@@ -47,28 +48,6 @@ def srp_plane_signs(band: int, plane: int, dim: int) -> list[int]:
         1 if _hash_int(f"band{band}p{plane}|{i}") % 2 == 1 else -1
         for i in range(dim)
     ]
-
-
-def cosine_to_query(
-    df: DataFrame,
-    query_vec: list[float],
-    vec_col: str = "embedding",
-    out_col: str = "cosine",
-) -> DataFrame:
-    """JVM-side cosine against a literal query vector: one pass, no
-    shuffle, no UDF. (Pandas-UDF variants lose here at this vector
-    width — Arrow transfer cost exceeds the fold's cost.)"""
-    q = "array(" + ", ".join(f"cast({x!r} as double)" for x in query_vec) + ")"
-    dot = (
-        f"aggregate(zip_with({vec_col}, {q}, (x, y) -> cast(x as double) * y), "
-        f"0D, (acc, v) -> acc + v)"
-    )
-    n1 = (
-        f"aggregate({vec_col}, 0D, "
-        f"(acc, x) -> acc + cast(x as double) * cast(x as double))"
-    )
-    n2 = sum(x * x for x in query_vec)
-    return df.withColumn(out_col, F.expr(f"{dot} / (sqrt({n1}) * sqrt({n2!r}))"))
 
 
 def exact_cosine_topk_vs_id(
@@ -180,10 +159,10 @@ def embedding_near_dup_pairs(
     moment aggregation → norm joins.
 
     This is the O(n²·d) exact stage: at 100 TB you run it only on the
-    candidate pairs emitted by :func:`ann_bucket_pairs` (LSH) — swap
-    the position self-join for a semi-join against the candidate set;
-    kept all-pairs here because the fixture corpus is small and it
-    makes the operator oracle-checkable end to end."""
+    candidate pairs emitted by :func:`srp_banded_pairs` (LSH), as
+    :func:`embedding_near_dup_pairs_lsh` does; kept all-pairs here
+    because the fixture corpus is small and it makes the operator
+    oracle-checkable end to end."""
     q = 10_000_000.0
     pos = emb.select(
         F.col(id_col),
@@ -237,28 +216,6 @@ def srp_buckets(
         for p in range(planes)
     )
     return emb.select(F.col(id_col), F.expr(f"cast({bits} as int)").alias("bucket"))
-
-
-def ann_bucket_pairs(
-    emb: DataFrame,
-    planes: int = 8,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Candidate ANN pairs = same SRP bucket. One shuffle on bucket."""
-    b = srp_buckets(emb, planes, id_col)
-    a, c = b.alias("a"), b.alias("b")
-    return (
-        a.join(
-            c,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.bucket").alias("bucket"),
-        )
-    )
 
 
 _QUANT = "10000000.0"
@@ -346,9 +303,7 @@ def srp_banded_pairs(
     # (id, band, band_key) relation (the jaccard_prefix_join lesson).
     b = pin(
         srp_banded_buckets(
-            emb.repartition(
-                emb.sparkSession.sparkContext.defaultParallelism, id_col
-            ),
+            restore_splits(emb, id_col),
             planes_per_band,
             bands,
             dim,
@@ -537,12 +492,16 @@ def kmeans_assign_packed(
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
     # Split restoration (higher-order functions evaluate interpreted,
-    # so per-row cost is k·d interpreted ops — a one-row-group parquet
-    # fixture would run the whole fold on 1-2 threads; production
-    # inputs arrive pre-split). Checkpointed: every round reuses it.
+    # so per-row cost is k·d interpreted ops — a one-row-group scan
+    # would run the whole fold on one thread). Checkpointed: every
+    # round reuses it.
     vecs = pin(
-        emb.select(F.col(id_col), F.expr(_expr_quantize(vec_col)).alias("qv"))
-        .repartition(emb.sparkSession.sparkContext.defaultParallelism)
+        restore_splits(
+            emb.select(
+                F.col(id_col), F.expr(_expr_quantize(vec_col)).alias("qv")
+            ),
+            id_col,
+        )
     )
 
     d2 = (

@@ -1,40 +1,49 @@
-"""Conditional split restoration (r15, from the r14 verdict).
+"""Split restoration: the one place a scan is spread over the cores.
 
-Several CPU-dense pipelines (minhash/simhash/jaccard shingling, the
-bootstrap replicate fan-out) read relations that on the local fixtures
-arrive as ONE parquet row group = one input split, serializing the
-expensive pass on a single task.  r14 fixed that with unconditional
-``repartition(defaultParallelism, id)`` calls — correct locally, but at
-cluster scale inputs arrive multi-split and the repartition ADDS a full
-shuffle of row-proportional payloads (document text) in front of the
-pipeline for nothing.
+Spark reads a parquet row group as one unit, so a table stored as one
+row group is read by one task however many cores the session has.
+CPU-dense pipelines over such a scan (tokenize → shingle → hash, the
+bootstrap replicate fan-out, higher-order-function folds over vectors)
+then run single-threaded, and once per consumer when the relation is
+not pinned.
 
-``restore_splits`` applies the repartition only when the relation's
-actual partition count cannot feed the session's cores, mirroring the
-guard ``plans/reference_parity.py`` uses for the moving-stats union: a
-no-op on multi-split cluster inputs, the same plan as before on the
-one-row-group local fixture.  The key is hashed DETERMINISTICALLY (the
-column itself, never round-robin) so task retries reproduce the same
-row placement (guide §2.5 / SPARK-38388) and no sort-before-repartition
-is paid.
+``restore_splits`` hash-repartitions the relation to
+``defaultParallelism`` only when its parquet input files hold fewer row
+groups than there are cores. Inputs that arrive split (a multi-file or
+multi-row-group table) keep their scan: there the repartition would add
+a full shuffle of row-proportional payloads (document text) in front of
+the pipeline for nothing.
 
-``df.rdd.getNumPartitions()`` is eager driver-side work at plan-build
-time; for the scan(+filter) plans it is applied to here it is a cheap
-metadata conversion (r14 ADVICE adjudication — acceptable for classic
-PySpark; a Spark Connect port would derive the count from file
-metadata instead).
+The row groups are counted from the footers of ``df.inputFiles()``:
+driver-side metadata reads that fire no job and plan no RDD. The scan's
+partition count is not a usable proxy: Spark splits files by bytes, so
+a one-row-group file can be several partitions of which one holds every
+row, and a byte-split scan can look parallel while it is not. A relation
+with no parquet input (in memory, a checkpoint) is returned unchanged:
+Spark already slices it.
+
+The key is hashed (the column itself, never round-robin), so task
+retries reproduce the same row placement (SPARK-38388) and no
+sort-before-repartition is paid.
 """
 
 from __future__ import annotations
 
+from itertools import accumulate
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lab04_spark_streaming_spark.sources.files import parquet_row_groups
+
 
 def restore_splits(df: DataFrame, key: str | Column) -> DataFrame:
-    """Hash-repartition ``df`` to the session parallelism on ``key``,
-    but only when its scan delivers fewer splits than there are cores."""
+    """Hash-repartition ``df`` on ``key`` to the session parallelism when
+    its parquet input files hold fewer row groups than there are cores."""
     cores = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= cores:
+    files = [f for f in df.inputFiles() if f.endswith(".parquet")]
+    if not files or any(
+        n >= cores for n in accumulate(map(parquet_row_groups, files))
+    ):
         return df
     return df.repartition(cores, F.col(key) if isinstance(key, str) else key)

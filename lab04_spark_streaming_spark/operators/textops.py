@@ -14,13 +14,11 @@ operators/dedup.py, where they're documented.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # --- tokenize --------------------------------------------------------------
 # lowercase, split on non-alphanumeric runs, drop empties.
-def tokens(col: str = "text") -> Column:
-    return F.array_remove(F.split(F.lower(F.col(col)), "[^a-z0-9]+"), "")
+def expr_tokens(col: str = "text") -> str:
+    return f"array_remove(split(lower({col}), '[^a-z0-9]+'), '')"
 
 
 def sql_tokens(col: str = "text") -> str:
@@ -54,9 +52,12 @@ def sql_norm_digest(col: str = "text") -> str:
     return f"md5({sql_norm_text(col)})"
 
 
-# Spark-SQL text of the same expression (for use inside F.expr lambdas).
-def expr_tokens(col: str = "text") -> str:
-    return f"array_remove(split(lower({col}), '[^a-z0-9]+'), '')"
+# The corpus documents' token array and normalized digest over their
+# ``text`` column, Spark SQL beside DuckDB.
+SPARK_TOKS = expr_tokens("text")
+SQL_TOKS = sql_tokens("text")
+SPARK_NORM_H = expr_norm_digest("text")
+SQL_NORM_H = sql_norm_digest("text")
 
 
 # --- word shingles ---------------------------------------------------------

@@ -20,22 +20,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lab04_spark_streaming_spark.operators.pinning import pin
+from lab04_spark_streaming_spark.operators.splits import restore_splits
 from lab04_spark_streaming_spark.operators.textops import (
+    SPARK_NORM_H,
+    SPARK_TOKS,
+    SQL_NORM_H,
+    SQL_TOKS,
     expr_hash_int,
-    expr_norm_digest,
-    expr_tokens,
-    sql_norm_digest,
-    sql_tokens,
 )
 from lab04_spark_streaming_spark.sources.files import load_table
-
-_SPARK_TOKS = expr_tokens("text")
-_TOKS = sql_tokens("text")
-
-# The canonical normalized digest (operators/textops) — same identity
-# as dedup_exact_normalized (plans/llm.py).
-_SPARK_NORM_H = expr_norm_digest("text")
-_SQL_NORM_H = sql_norm_digest("text")
 
 
 # --- incremental snapshot dedup --------------------------------------------
@@ -52,11 +45,11 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     base = (
         docs.filter(F.col("doc_id") % 2 == 0)
-        .select(F.expr(_SPARK_NORM_H).alias("digest"))
+        .select(F.expr(SPARK_NORM_H).alias("digest"))
         .distinct()
     )
     incoming = docs.filter(F.col("doc_id") % 2 == 1).select(
-        "doc_id", F.expr(_SPARK_NORM_H).alias("digest")
+        "doc_id", F.expr(SPARK_NORM_H).alias("digest")
     )
     return (
         incoming.join(base, "digest", "left_anti")
@@ -68,11 +61,11 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_DEDUP_INCREMENTAL = f"""
 WITH base AS (
-  SELECT DISTINCT {_SQL_NORM_H} AS digest
+  SELECT DISTINCT {SQL_NORM_H} AS digest
   FROM documents WHERE doc_id % 2 = 0
 ),
 incoming AS (
-  SELECT doc_id, {_SQL_NORM_H} AS digest
+  SELECT doc_id, {SQL_NORM_H} AS digest
   FROM documents WHERE doc_id % 2 = 1
 )
 SELECT MIN(doc_id) AS doc_id, digest
@@ -156,11 +149,10 @@ def q_word_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-join sides, and the fixture corpus is one parquet row-group
     # (the jaccard_prefix_join lesson; measured 8.3 → ~2 s at sf0.1).
     t = pin(
-        load_table(spark, sf_dir, "documents")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        restore_splits(load_table(spark, sf_dir, "documents"), "doc_id")
         .select(
             "doc_id",
-            F.explode(F.expr(f"array_distinct({_SPARK_TOKS})")).alias("w"),
+            F.explode(F.expr(f"array_distinct({SPARK_TOKS})")).alias("w"),
         )
     )
     top = (
@@ -183,7 +175,7 @@ def q_word_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_WORD_COOCCURRENCE = f"""
 WITH t AS (
   SELECT DISTINCT doc_id, w
-  FROM (SELECT doc_id, unnest({_TOKS}) AS w FROM documents)
+  FROM (SELECT doc_id, unnest({SQL_TOKS}) AS w FROM documents)
 ),
 p AS (
   SELECT a.w AS w1, b.w AS w2, COUNT(*) AS n_docs
@@ -212,7 +204,7 @@ def q_word_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     single divisions of exact integers — bit-identical, no rounding."""
     wc = (
         load_table(spark, sf_dir, "documents")
-        .select("doc_id", F.explode(F.expr(_SPARK_TOKS)).alias("w"))
+        .select("doc_id", F.explode(F.expr(SPARK_TOKS)).alias("w"))
         .groupBy("doc_id", "w")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -242,7 +234,7 @@ def q_word_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_WORD_REPETITION = f"""
 WITH wc AS (
   SELECT doc_id, w, COUNT(*) AS cnt
-  FROM (SELECT doc_id, unnest({_TOKS}) AS w FROM documents)
+  FROM (SELECT doc_id, unnest({SQL_TOKS}) AS w FROM documents)
   GROUP BY 1, 2
 ),
 ranked AS (
@@ -291,7 +283,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     k1, b = _BM25_K1, _BM25_B
     terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.expr(_SPARK_TOKS).alias("_toks")
+        "doc_id", F.expr(SPARK_TOKS).alias("_toks")
     )
     dl = docs.select(
         "doc_id", F.expr("cast(size(_toks) as bigint)").alias("dl")
@@ -347,7 +339,7 @@ def _sql_bm25() -> str:
     terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
     return f"""
 WITH toks AS (
-  SELECT doc_id, {_TOKS} AS t FROM documents
+  SELECT doc_id, {SQL_TOKS} AS t FROM documents
 ),
 dl AS (SELECT doc_id, len(t) AS dl FROM toks),
 corpus AS (
@@ -480,7 +472,7 @@ def q_token_budget_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
-        F.expr(f"cast(size({_SPARK_TOKS}) as bigint)").alias("n_tokens"),
+        F.expr(f"cast(size({SPARK_TOKS}) as bigint)").alias("n_tokens"),
     )
     w = (
         Window.partitionBy("source")
@@ -496,7 +488,7 @@ def q_token_budget_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_TOKEN_BUDGET_PACK = f"""
 WITH t AS (
-  SELECT doc_id, source, CAST(len({_TOKS}) AS BIGINT) AS n_tokens
+  SELECT doc_id, source, CAST(len({SQL_TOKS}) AS BIGINT) AS n_tokens
   FROM documents
 )
 SELECT source, doc_id, n_tokens,
@@ -525,7 +517,7 @@ def q_dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lab04_spark_streaming_spark.operators import dedup as dd
 
     docs = load_table(spark, sf_dir, "documents").filter(
-        F.expr(f"size({_SPARK_TOKS}) >= 3")
+        F.expr(f"size({SPARK_TOKS}) >= 3")
     )
     bands = dd.lsh_bands(dd.minhash_signatures(docs))
     base = (
@@ -577,7 +569,7 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lab04_spark_streaming_spark.functions.guards import stable_round
 
     toks = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.explode(F.expr(_SPARK_TOKS)).alias("w")
+        "doc_id", F.explode(F.expr(SPARK_TOKS)).alias("w")
     )
     freq = toks.groupBy("w").agg(F.count(F.lit(1)).alias("tf"))
     total = freq.agg(F.sum("tf").alias("n_total"))
@@ -597,7 +589,7 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_UNIGRAM_LOGPROB = f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_TOKS}) AS w FROM documents
+  SELECT doc_id, unnest({SQL_TOKS}) AS w FROM documents
 ),
 freq AS (SELECT w, COUNT(*) AS tf FROM toks GROUP BY 1),
 total AS (SELECT CAST(SUM(tf) AS BIGINT) AS n_total FROM freq)
@@ -622,7 +614,7 @@ def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic rank (count DESC, pair)."""
     wc = (
         load_table(spark, sf_dir, "documents")
-        .select(F.explode(F.expr(_SPARK_TOKS)).alias("w"))
+        .select(F.explode(F.expr(SPARK_TOKS)).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -653,7 +645,7 @@ def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_BPE_PAIR_COUNTS = f"""
 WITH wc AS (
   SELECT w, COUNT(*) AS cnt
-  FROM (SELECT unnest({_TOKS}) AS w FROM documents)
+  FROM (SELECT unnest({SQL_TOKS}) AS w FROM documents)
   GROUP BY 1
 ),
 p AS (
@@ -694,11 +686,11 @@ def q_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     base = (
         docs.filter(F.col("doc_id") % 2 == 0)
-        .select(F.expr(_SPARK_NORM_H).alias("digest"))
+        .select(F.expr(SPARK_NORM_H).alias("digest"))
         .distinct()
     )
     inc = docs.filter(F.col("doc_id") % 2 == 1).select(
-        "doc_id", F.expr(_SPARK_NORM_H).alias("digest")
+        "doc_id", F.expr(SPARK_NORM_H).alias("digest")
     )
     pos = ", ".join(
         f"{expr_hash_int('digest', seed=j)} % {m}" for j in range(k)
@@ -764,11 +756,11 @@ def _sql_bloom() -> str:
     pos = ", ".join(h(j) for j in range(k))
     return f"""
 WITH base AS (
-  SELECT DISTINCT {_SQL_NORM_H} AS digest
+  SELECT DISTINCT {SQL_NORM_H} AS digest
   FROM documents WHERE doc_id % 2 = 0
 ),
 inc AS (
-  SELECT doc_id, {_SQL_NORM_H} AS digest
+  SELECT doc_id, {SQL_NORM_H} AS digest
   FROM documents WHERE doc_id % 2 = 1
 ),
 bpos AS (
@@ -819,7 +811,7 @@ def q_curation_master(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign = kmeans_assign_packed(emb, k=8, iters=2).select(
         F.col("vec_id").alias("doc_id"), F.col("cluster").alias("kcluster")
     )
-    toks = _SPARK_TOKS
+    toks = SPARK_TOKS
     stop = "array('the', 'a', 'of', 'and', 'to', 'in', 'is', 'it')"
     keep = (
         f"size({toks}) >= 10 "
@@ -839,7 +831,7 @@ def q_curation_master(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "lang",
             F.expr(keep).alias("_keep"),
-            F.expr(_SPARK_NORM_H).alias("_digest"),
+            F.expr(SPARK_NORM_H).alias("_digest"),
         )
         .withColumn("_rep", F.col("doc_id") == F.min("doc_id").over(w))
     )
@@ -876,7 +868,7 @@ a2 AS (
     FROM d2) WHERE rn = 1
 ),
 tok AS (
-  SELECT doc_id, lang, text, {_TOKS} AS toks, {_SQL_NORM_H} AS digest
+  SELECT doc_id, lang, text, {SQL_TOKS} AS toks, {SQL_NORM_H} AS digest
   FROM documents
 ),
 flags AS (
@@ -926,7 +918,7 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     key."""
     t = load_table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.explode(F.expr(f"array_distinct({_SPARK_TOKS})")).alias("w"),
+        F.explode(F.expr(f"array_distinct({SPARK_TOKS})")).alias("w"),
     )
     und = (
         t.alias("a")
@@ -998,7 +990,7 @@ p{i} AS (
     return f"""
 WITH t AS (
   SELECT DISTINCT doc_id, w
-  FROM (SELECT doc_id, unnest({_TOKS}) AS w FROM documents)
+  FROM (SELECT doc_id, unnest({SQL_TOKS}) AS w FROM documents)
 ),
 edges AS (
   SELECT DISTINCT a.w AS src, b.w AS dst
@@ -1031,7 +1023,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab²-bounded — tiny at any corpus scale."""
     t = load_table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.explode(F.expr(f"array_distinct({_SPARK_TOKS})")).alias("w"),
+        F.explode(F.expr(f"array_distinct({SPARK_TOKS})")).alias("w"),
     )
     edges = (
         t.alias("a")
@@ -1081,7 +1073,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_GRAPH_TRIANGLES = f"""
 WITH t AS (
   SELECT DISTINCT doc_id, w
-  FROM (SELECT doc_id, unnest({_TOKS}) AS w FROM documents)
+  FROM (SELECT doc_id, unnest({SQL_TOKS}) AS w FROM documents)
 ),
 edges AS (
   SELECT DISTINCT a.w AS src, b.w AS dst
@@ -1136,7 +1128,7 @@ def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     alongside for the error-bound read-off."""
     m = _HLL_M
     docs = load_table(spark, sf_dir, "documents").select(
-        F.expr(_SPARK_NORM_H).alias("digest")
+        F.expr(SPARK_NORM_H).alias("digest")
     )
     h = "cast(conv(substring(md5(concat('hll|', digest)), 1, 8), 16, 10) as bigint)"
     regs = (
@@ -1221,7 +1213,7 @@ def _sql_hll() -> str:
         f"THEN {m}.0 * ln({m}.0 / zeros) ELSE ({est_raw}) END"
     )
     return f"""
-WITH d AS (SELECT {_SQL_NORM_H} AS digest FROM documents),
+WITH d AS (SELECT {SQL_NORM_H} AS digest FROM documents),
 hashes AS (
   SELECT {h} % {m} AS bucket,
          CASE WHEN ({h} // {m}) = 0 THEN 27
@@ -1272,7 +1264,7 @@ def q_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_, d_ = _CMS_WIDTH, _CMS_DEPTH
     wc = (
         load_table(spark, sf_dir, "documents")
-        .select(F.explode(F.expr(_SPARK_TOKS)).alias("w"))
+        .select(F.explode(F.expr(SPARK_TOKS)).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -1322,7 +1314,7 @@ def _sql_cms() -> str:
     return f"""
 WITH wc AS (
   SELECT w, COUNT(*) AS cnt
-  FROM (SELECT unnest({_TOKS}) AS w FROM documents)
+  FROM (SELECT unnest({SQL_TOKS}) AS w FROM documents)
   GROUP BY 1
 ),
 hashes AS (

@@ -16,19 +16,17 @@ from lab04_spark_streaming_spark.operators import dedup as dd
 from lab04_spark_streaming_spark.operators import multimodal as mm
 from lab04_spark_streaming_spark.operators import similarity as sim
 from lab04_spark_streaming_spark.operators.pinning import pin
+from lab04_spark_streaming_spark.operators.splits import restore_splits
 from lab04_spark_streaming_spark.operators.textops import (
-    expr_norm_digest,
+    SPARK_NORM_H,
+    SPARK_TOKS,
+    SQL_NORM_H,
+    SQL_TOKS,
     expr_shingles,
-    expr_tokens,
     sql_hash_int,
-    sql_norm_digest,
     sql_shingles,
-    sql_tokens,
 )
 from lab04_spark_streaming_spark.sources.files import load_table
-
-_SPARK_TOKS = expr_tokens("text")
-_TOKS = sql_tokens("text")
 
 
 # --- exact dedup -----------------------------------------------------------
@@ -70,7 +68,7 @@ def _sql_minhash_mins() -> str:
 # subscripts sig[i] for banding); the registered signatures oracle
 # below serializes it for the canonicalizer.
 _SQL_MINHASH_SIG_LIST = f"""
-WITH tok AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH tok AS (SELECT doc_id, {SQL_TOKS} AS toks FROM documents),
 sh AS (SELECT doc_id, {sql_shingles('toks')} AS shingles FROM tok t(doc_id, toks)),
 hs AS (SELECT doc_id, list_transform(t.shingles, s -> {sql_hash_int('s')}) AS hs
        FROM sh t(doc_id, shingles))
@@ -120,12 +118,9 @@ JOIN bands b ON a.band = b.band AND a.band_hash = b.band_hash
 
 # --- SimHash ---------------------------------------------------------------
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # split restoration only (single-row-group fixture; pre-split in
-    # production) — the per-doc 32-bit fold is the whole cost.
+    # the per-doc 32-bit fold is the whole cost: spread it over the cores
     return dd.simhash(
-        load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism, "doc_id"
-        )
+        restore_splits(load_table(spark, sf_dir, "documents"), "doc_id")
     )
 
 
@@ -143,7 +138,7 @@ def _sql_simhash() -> str:
 
 
 SQL_SIMHASH = f"""
-WITH tok AS (SELECT doc_id, list_distinct({_TOKS}) AS toks FROM documents)
+WITH tok AS (SELECT doc_id, list_distinct({SQL_TOKS}) AS toks FROM documents)
 SELECT doc_id, CAST({_sql_simhash()} AS BIGINT) AS simhash
 FROM tok
 """
@@ -157,7 +152,7 @@ def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # max_df mirrors dedup.jaccard_pairs' stop-shingle cap (default 1000):
 # shingles in more docs are dropped before the self-join in BOTH engines.
 SQL_JACCARD_PAIRS = f"""
-WITH tok AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH tok AS (SELECT doc_id, {SQL_TOKS} AS toks FROM documents),
 sh0 AS (
   SELECT doc_id, unnest(list_distinct({sql_shingles('toks')})) AS shingle
   FROM tok t(doc_id, toks)
@@ -394,7 +389,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # min reachable id (same semantics as min-label propagation).
 SQL_DEDUP_CLUSTERS = f"""
 WITH RECURSIVE
-tok AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+tok AS (SELECT doc_id, {SQL_TOKS} AS toks FROM documents),
 sh AS (
   SELECT doc_id, unnest(list_distinct({sql_shingles('toks')})) AS shingle
   FROM tok t(doc_id, toks)
@@ -438,7 +433,7 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens/stride, the expansion a chunker inherently produces."""
     return (
         load_table(spark, sf_dir, "documents")
-        .select("doc_id", F.expr(_SPARK_TOKS).alias("_toks"))
+        .select("doc_id", F.expr(SPARK_TOKS).alias("_toks"))
         .select(
             "doc_id",
             F.col("_toks"),
@@ -458,7 +453,7 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_DOC_CHUNKS = f"""
-WITH tok AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH tok AS (SELECT doc_id, {SQL_TOKS} AS toks FROM documents),
 starts AS (
   SELECT doc_id, toks,
          unnest(generate_series(0, greatest(len(toks) - 1, 0), {_STRIDE}))
@@ -498,7 +493,7 @@ def q_text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_TEXT_METRICS = f"""
-WITH tok AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents)
+WITH tok AS (SELECT doc_id, text, {SQL_TOKS} AS toks FROM documents)
 SELECT doc_id, len(toks) AS n_tokens, length(text) AS n_chars_actual,
        CASE WHEN len(toks) = 0 THEN 0.0 ELSE
          list_sum(list_transform(toks, t -> length(t))) / len(toks) END
@@ -576,7 +571,7 @@ def _sql_lang_case() -> str:
 
 
 SQL_LANG_ID = f"""
-WITH tok AS (SELECT doc_id, lang, {_TOKS} AS toks FROM documents)
+WITH tok AS (SELECT doc_id, lang, {SQL_TOKS} AS toks FROM documents)
 SELECT doc_id, {_sql_lang_score('en')} AS score_en,
        {_sql_lang_case()} AS pred_lang, lang
 FROM tok
@@ -591,12 +586,11 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lab04_spark_streaming_spark.operators.textops import (
         expr_hash_int,
         expr_shingles,
-        expr_tokens,
     )
 
     return (
         load_table(spark, sf_dir, "documents")
-        .select("doc_id", F.expr(expr_tokens("text")).alias("_toks"))
+        .select("doc_id", F.expr(SPARK_TOKS).alias("_toks"))
         .select(
             "doc_id",
             F.expr(
@@ -611,7 +605,7 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_FINGERPRINT = f"""
-WITH tok AS (SELECT doc_id, {_TOKS} AS toks FROM documents)
+WITH tok AS (SELECT doc_id, {SQL_TOKS} AS toks FROM documents)
 SELECT doc_id,
        md5(coalesce(array_to_string(list_sort(list_distinct(toks)), ' '), ''))
          AS bow_fingerprint,
@@ -640,7 +634,7 @@ def q_tf_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_TF_DF = f"""
-WITH tok AS (SELECT doc_id, unnest({_TOKS}) AS token FROM documents),
+WITH tok AS (SELECT doc_id, unnest({SQL_TOKS}) AS token FROM documents),
 tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
 dfreq AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY 1)
 SELECT tf.doc_id, tf.token, tf.tf, dfreq.df
@@ -676,7 +670,7 @@ def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_QUALITY_FILTER = f"""
-WITH tok AS (SELECT doc_id, lang, text, {_TOKS} AS toks FROM documents),
+WITH tok AS (SELECT doc_id, lang, text, {SQL_TOKS} AS toks FROM documents),
 m AS (
   SELECT doc_id, lang, len(toks) AS n_tokens,
          CASE WHEN len(toks) = 0 THEN 0.0 ELSE
@@ -874,7 +868,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_TFIDF_TOP_TERMS = f"""
-WITH tok AS (SELECT doc_id, unnest({_TOKS}) AS token FROM documents),
+WITH tok AS (SELECT doc_id, unnest({SQL_TOKS}) AS token FROM documents),
 tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
 dfreq AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY 1),
 n AS (SELECT COUNT(*) AS n_docs FROM documents),
@@ -1018,8 +1012,8 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_SIMHASH_PAIRS = f"""
-WITH tok AS (SELECT doc_id, list_distinct({_TOKS}) AS toks FROM documents
-             WHERE len(list_distinct({_TOKS})) > 0),
+WITH tok AS (SELECT doc_id, list_distinct({SQL_TOKS}) AS toks FROM documents
+             WHERE len(list_distinct({SQL_TOKS})) > 0),
 sh AS (SELECT doc_id, CAST({_sql_simhash()} AS BIGINT) AS simhash FROM tok),
 bands AS (
   SELECT doc_id, simhash, b AS band,
@@ -1055,7 +1049,7 @@ def q_dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle; only the 32-char digest moves, never the text."""
     return (
         load_table(spark, sf_dir, "documents")
-        .groupBy(F.expr(expr_norm_digest("text")).alias("_h"))
+        .groupBy(F.expr(SPARK_NORM_H).alias("_h"))
         .agg(
             F.min("doc_id").alias("doc_id"),
             F.count(F.lit(1)).alias("n_copies"),
@@ -1067,7 +1061,7 @@ def q_dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_DEDUP_EXACT_NORMALIZED = f"""
 SELECT MIN(doc_id) AS doc_id, COUNT(*) AS n_copies
 FROM documents
-GROUP BY {sql_norm_digest('text')}
+GROUP BY {SQL_NORM_H}
 """
 
 
@@ -1086,13 +1080,12 @@ def q_decontamination_containment(spark: SparkSession, sf_dir: str) -> DataFrame
     # tokenize→shingle pass (the jaccard_prefix_join lesson,
     # plans/mining.py: measured 6x single-threaded replays before).
     sh0 = pin(
-        load_table(spark, sf_dir, "documents")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        restore_splits(load_table(spark, sf_dir, "documents"), "doc_id")
         .select(
             "doc_id",
             "source",
             F.explode(
-                F.array_distinct(F.expr(expr_shingles(_SPARK_TOKS, 5)))
+                F.array_distinct(F.expr(expr_shingles(SPARK_TOKS, 5)))
             ).alias("shingle"),
         )
     )
@@ -1129,7 +1122,7 @@ def q_decontamination_containment(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 SQL_DECONTAMINATION_CONTAINMENT = f"""
-WITH tok AS (SELECT doc_id, source, {_TOKS} AS toks FROM documents),
+WITH tok AS (SELECT doc_id, source, {SQL_TOKS} AS toks FROM documents),
 sh0 AS (
   SELECT doc_id, source,
          unnest(list_distinct({sql_shingles('toks', 5)})) AS shingle
@@ -1158,7 +1151,7 @@ WHERE n_shared / least(sa.n_sh, sb.n_sh) >= 0.5
 
 
 SQL_DECONTAMINATION_PAIRS = f"""
-WITH tok AS (SELECT doc_id, source, {_TOKS} AS toks FROM documents),
+WITH tok AS (SELECT doc_id, source, {SQL_TOKS} AS toks FROM documents),
 sh0 AS (
   SELECT doc_id, source,
          unnest(list_distinct({sql_shingles('toks', 5)})) AS shingle
@@ -1246,7 +1239,7 @@ def q_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("n_bpe_tokens"),
-        F.expr(f"cast(size({_SPARK_TOKS}) as bigint)").alias("n_ws_tokens"),
+        F.expr(f"cast(size({SPARK_TOKS}) as bigint)").alias("n_ws_tokens"),
     )
 
 
@@ -1254,7 +1247,7 @@ SQL_TOKEN_COUNT_BPE = f"""
 SELECT doc_id,
        len(regexp_extract_all(lower(text), '{_duck_re(_BPE_PAT)}'))
          AS n_bpe_tokens,
-       len({_TOKS}) AS n_ws_tokens
+       len({SQL_TOKS}) AS n_ws_tokens
 FROM documents
 """
 
@@ -1297,7 +1290,7 @@ def q_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     asc), (2) the tiny vocab broadcast back for a map-side membership
     probe; OOV fraction is an exact int ratio."""
     toks = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.explode(F.expr(_SPARK_TOKS)).alias("tok")
+        "doc_id", F.explode(F.expr(SPARK_TOKS)).alias("tok")
     )
     vocab = (
         toks.groupBy("tok")
@@ -1323,7 +1316,7 @@ def q_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_OOV_RATE = f"""
 WITH tok AS (
-  SELECT doc_id, unnest({_TOKS}) AS tok FROM documents
+  SELECT doc_id, unnest({SQL_TOKS}) AS tok FROM documents
 ),
 vocab AS (
   SELECT tok FROM (

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lab04_spark_streaming_spark.operators.pinning import pin
+from lab04_spark_streaming_spark.operators.splits import restore_splits
 from lab04_spark_streaming_spark.functions.guards import (
     exact_avg,
     sql_exact_avg,
@@ -38,19 +39,18 @@ from lab04_spark_streaming_spark.functions.guards import (
 )
 from lab04_spark_streaming_spark.operators import dedup as dd
 from lab04_spark_streaming_spark.operators.textops import (
+    SPARK_NORM_H,
+    SPARK_TOKS,
+    SQL_NORM_H,
+    SQL_TOKS,
     expr_hash_int,
     expr_norm_text,
     expr_shingles,
-    expr_tokens,
     sql_hash_int,
     sql_norm_text,
     sql_shingles,
-    sql_tokens,
 )
 from lab04_spark_streaming_spark.sources.files import load_table
-
-_SPARK_TOKS = expr_tokens("text")
-_TOKS = sql_tokens("text")
 
 
 # --- C4-style repeated-span removal ----------------------------------------
@@ -94,9 +94,8 @@ def q_span_dedup_c4(spark: SparkSession, sf_dir: str) -> DataFrame:
     # span relation feeds the banned-frequency branch AND the rebuild
     # branch: split-restore + checkpoint = one tokenize/span pass.
     docs = pin(
-        load_table(spark, sf_dir, "documents")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", F.expr(_expr_spans(_SPARK_TOKS)).alias("spans"))
+        restore_splits(load_table(spark, sf_dir, "documents"), "doc_id")
+        .select("doc_id", F.expr(_expr_spans(SPARK_TOKS)).alias("spans"))
     )
     banned = (
         docs.select(F.explode("spans").alias("span"))
@@ -126,7 +125,7 @@ def q_span_dedup_c4(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_SPAN_DEDUP_C4 = f"""
 WITH sp AS (
-  SELECT doc_id, {_sql_spans(_TOKS)} AS spans FROM documents
+  SELECT doc_id, {_sql_spans(SQL_TOKS)} AS spans FROM documents
 ),
 banned AS (
   SELECT coalesce(list(d), []) AS banned FROM (
@@ -185,11 +184,9 @@ def q_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     restore split parallelism) and localCheckpointed so the
     tokenize→shingle→distinct pass runs ONCE (measured 45 s → ~3 s at
     sf0.1, which was six single-threaded recomputations)."""
-    spark_ = spark
     docs = pin(
-        load_table(spark, sf_dir, "documents")
-        .repartition(spark_.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", F.expr(_SPARK_TOKS).alias("toks"))
+        restore_splits(load_table(spark, sf_dir, "documents"), "doc_id")
+        .select("doc_id", F.expr(SPARK_TOKS).alias("toks"))
         .filter(F.expr("size(toks) >= 3"))
         .select(
             "doc_id",
@@ -268,7 +265,7 @@ def q_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_JACCARD_PREFIX_JOIN = f"""
 WITH sets AS (
   SELECT doc_id, list_distinct({sql_shingles('toks')}) AS s
-  FROM (SELECT doc_id, {_TOKS} AS toks FROM documents) t(doc_id, toks)
+  FROM (SELECT doc_id, {SQL_TOKS} AS toks FROM documents) t(doc_id, toks)
   WHERE len(toks) >= 3
 ),
 ex AS (SELECT doc_id, len(s) AS L, u.sh FROM sets, unnest(s) u(sh)),
@@ -317,7 +314,7 @@ def q_minhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact verify touches only LSH survivors, never all pairs."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = dd.minhash_candidate_pairs(docs)
-    eligible = docs.filter(F.expr(f"size({_SPARK_TOKS}) >= 3"))
+    eligible = docs.filter(F.expr(f"size({SPARK_TOKS}) >= 3"))
     # sigs and sets each feed BOTH sides of the pair join — checkpoint
     # so the signature/shingle passes run once per relation.
     sigs = pin(dd.minhash_signatures(eligible))
@@ -325,7 +322,7 @@ def q_minhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     # split into the shingle lambda re-splits per element (see the
     # minhash_signatures docstring, operators/dedup.py).
     sets = pin(
-        eligible.select("doc_id", F.expr(_SPARK_TOKS).alias("toks"))
+        eligible.select("doc_id", F.expr(SPARK_TOKS).alias("toks"))
         .select(
             "doc_id",
             F.expr(f"array_distinct({expr_shingles('toks')})").alias("s"),
@@ -379,7 +376,7 @@ def _sql_minhash_error() -> str:
 
     k = dd.MINHASH_K
     return f"""
-WITH tok AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH tok AS (SELECT doc_id, {SQL_TOKS} AS toks FROM documents),
 sh AS (SELECT doc_id, {sql_shingles('toks')} AS shingles FROM tok t(doc_id, toks)),
 hs AS (SELECT doc_id, list_transform(t.shingles, s -> {sql_hash_int('s')}) AS hs
        FROM sh t(doc_id, shingles)),
@@ -453,9 +450,9 @@ def score_documents(docs: DataFrame) -> DataFrame:
     projection — asserted batch==stream in tests/test_streaming.py)."""
     return docs.select(
         "doc_id",
-        F.expr(f"size({_SPARK_TOKS})").alias("n_tokens"),
+        F.expr(f"size({SPARK_TOKS})").alias("n_tokens"),
         F.expr(
-            f"aggregate(transform({_SPARK_TOKS}, w -> {_weight_expr_spark()}), "
+            f"aggregate(transform({SPARK_TOKS}, w -> {_weight_expr_spark()}), "
             "0L, (acc, x) -> acc + x)"
         ).alias("score_num"),
     ).select(
@@ -484,7 +481,7 @@ SQL_QUALITY_CLASSIFIER = f"""
 WITH scored AS (
   SELECT doc_id, len(toks) AS n_tokens,
          coalesce(list_sum(list_transform(toks, w -> {_weight_expr_sql()})), 0) AS score_num
-  FROM (SELECT doc_id, {_TOKS} AS toks FROM documents) t(doc_id, toks)
+  FROM (SELECT doc_id, {SQL_TOKS} AS toks FROM documents) t(doc_id, toks)
 )
 SELECT doc_id, n_tokens, CAST(score_num AS BIGINT) AS score_num,
        CASE WHEN n_tokens > 0 THEN score_num / CAST(n_tokens AS DOUBLE) ELSE 0.0 END AS score,
@@ -508,9 +505,8 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # split-restore + checkpoint = one tokenize pass (same lineage-cut
     # rationale as q_jaccard_prefix_join).
     toks = pin(
-        load_table(spark, sf_dir, "documents")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", F.expr(_SPARK_TOKS).alias("toks"))
+        restore_splits(load_table(spark, sf_dir, "documents"), "doc_id")
+        .select("doc_id", F.expr(SPARK_TOKS).alias("toks"))
     )
     bg = toks.select(
         "doc_id",
@@ -548,7 +544,7 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_BIGRAM_LOGPROB = f"""
-WITH tok AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH tok AS (SELECT doc_id, {SQL_TOKS} AS toks FROM documents),
 bg AS (
   SELECT doc_id, u.bg,
          string_split(u.bg, ' ')[1] AS w1,
@@ -799,11 +795,12 @@ def _kcore_edges(
     # q_jaccard_prefix_join: the exploded relation feeds both sides of
     # the pair self-join, so the tokenize→shingle pass is checkpointed
     # rather than recomputed per side.  ``docs`` lets the deduped
-    # variants build the graph over a representative subset (r14).
+    # variants build the graph over a representative subset, which may
+    # arrive shuffled: no footer describes its splits.
     ex = pin(
         (docs if docs is not None else load_table(spark, sf_dir, "documents"))
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", F.expr(_SPARK_TOKS).alias("toks"))
+        .select("doc_id", F.expr(SPARK_TOKS).alias("toks"))
         .filter(F.expr("size(toks) >= 3"))
         .select(
             "doc_id",
@@ -937,7 +934,7 @@ def _sql_doc_graph_base(src: str = "documents") -> str:
 ex AS MATERIALIZED (
   SELECT doc_id, u.sh
   FROM (SELECT doc_id, list_distinct({sql_shingles('toks')}) AS s
-        FROM (SELECT doc_id, {_TOKS} AS toks FROM {src}) t(doc_id, toks)
+        FROM (SELECT doc_id, {SQL_TOKS} AS toks FROM {src}) t(doc_id, toks)
         WHERE len(toks) >= 3) q, unnest(s) u(sh)
 ),
 shf AS MATERIALIZED (
@@ -1191,10 +1188,8 @@ def _hll_estimate(full: DataFrame, key: str) -> DataFrame:
 
 
 def q_hll_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from lab04_spark_streaming_spark.plans.corpus import _SPARK_NORM_H
-
     docs = load_table(spark, sf_dir, "documents").select(
-        "source", F.expr(_SPARK_NORM_H).alias("digest")
+        "source", F.expr(SPARK_NORM_H).alias("digest")
     )
     regs = (
         docs.select("source", *_hll_rows("digest"))
@@ -1235,8 +1230,6 @@ def q_hll_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_hll_by_source() -> str:
-    from lab04_spark_streaming_spark.plans.corpus import _SQL_NORM_H
-
     m = _HLLM
     h = "CAST(('0x' || substring(md5('hll|' || digest), 1, 8)) AS BIGINT)"
     est_raw = (
@@ -1248,7 +1241,7 @@ def _sql_hll_by_source() -> str:
         f"ELSE ({est_raw}) END"
     )
     return f"""
-WITH d AS (SELECT source, {_SQL_NORM_H} AS digest FROM documents),
+WITH d AS (SELECT source, {SQL_NORM_H} AS digest FROM documents),
 regs AS (
   SELECT source, {h} % {m} AS bucket,
          MAX(CASE WHEN ({h} // {m}) = 0 THEN 27
@@ -1316,7 +1309,7 @@ def q_snm_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     window and the neighbor self-join."""
     docs = (
         load_table(spark, sf_dir, "documents")
-        .select("doc_id", F.expr(_SPARK_TOKS).alias("toks"))
+        .select("doc_id", F.expr(SPARK_TOKS).alias("toks"))
         .filter(F.expr("size(toks) >= 3"))
         .select(
             "doc_id",
@@ -1363,7 +1356,7 @@ SQL_SNM_CANDIDATES = f"""
 WITH d AS (
   SELECT doc_id, toks[1] AS blk, array_to_string(toks, ' ') AS skey,
          list_distinct({sql_shingles('toks')}) AS s
-  FROM (SELECT doc_id, {_TOKS} AS toks FROM documents) t(doc_id, toks)
+  FROM (SELECT doc_id, {SQL_TOKS} AS toks FROM documents) t(doc_id, toks)
   WHERE len(toks) >= 3
 ),
 pos AS (
@@ -1959,7 +1952,7 @@ ASOF LEFT JOIN hist h
 def q_bpe_second_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     wc = (
         load_table(spark, sf_dir, "documents")
-        .select(F.explode(F.expr(_SPARK_TOKS)).alias("w"))
+        .select(F.explode(F.expr(SPARK_TOKS)).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -2014,7 +2007,7 @@ def _sql_bpe_second() -> str:
     return f"""
 WITH wc AS (
   SELECT w, COUNT(*) AS cnt
-  FROM (SELECT unnest({_TOKS}) AS w FROM documents)
+  FROM (SELECT unnest({SQL_TOKS}) AS w FROM documents)
   GROUP BY 1
 ),
 first AS (

@@ -23,19 +23,17 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lab04_spark_streaming_spark.operators.pinning import pin
+from lab04_spark_streaming_spark.operators.splits import restore_splits
 from lab04_spark_streaming_spark.operators.similarity import _expr_quantize
 from lab04_spark_streaming_spark.operators.textops import (
+    SPARK_TOKS,
+    SQL_TOKS,
     expr_hash_int,
     expr_shingles,
-    expr_tokens,
     sql_hash_int,
     sql_shingles,
-    sql_tokens,
 )
 from lab04_spark_streaming_spark.sources.files import load_table
-
-_SPARK_TOKS = expr_tokens("text")
-_TOKS = sql_tokens("text")
 
 
 # --- deterministic train/valid/test split ----------------------------------
@@ -119,7 +117,7 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
-        F.expr(f"size({_SPARK_TOKS})").alias("n_tokens"),
+        F.expr(f"size({SPARK_TOKS})").alias("n_tokens"),
     )
     w = (
         Window.partitionBy("source")
@@ -138,7 +136,7 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_SEQUENCE_PACKING = f"""
 WITH t AS (
-  SELECT doc_id, source, len({_TOKS}) AS n_tokens FROM documents
+  SELECT doc_id, source, len({SQL_TOKS}) AS n_tokens FROM documents
 ),
 c AS (
   SELECT doc_id, source, n_tokens,
@@ -174,7 +172,7 @@ def q_ngram_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         load_table(spark, sf_dir, "documents")
-        .select("doc_id", F.expr(_SPARK_TOKS).alias("_toks"))
+        .select("doc_id", F.expr(SPARK_TOKS).alias("_toks"))
         .select(
             "doc_id",
             F.expr(f"size({sh2})").alias("n2"),
@@ -203,7 +201,7 @@ def q_ngram_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 _D2 = sql_shingles("toks", 2)
 _D3 = sql_shingles("toks", 3)
 SQL_NGRAM_REPETITION = f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH t AS (SELECT doc_id, {SQL_TOKS} AS toks FROM documents),
 s AS (
   SELECT doc_id,
          CASE WHEN len(toks) < 2 THEN [] ELSE {_D2} END AS s2,
@@ -458,11 +456,11 @@ def q_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (~19 s at sf0.1); a production corpus arrives pre-split and this
     # exchange disappears from the critical path.
     sh = (
-        docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        restore_splits(docs, "doc_id")
         .select(
             "doc_id",
             F.explode(
-                F.array_distinct(F.expr(expr_shingles(_SPARK_TOKS, 5)))
+                F.array_distinct(F.expr(expr_shingles(SPARK_TOKS, 5)))
             ).alias("shingle"),
         )
     )
@@ -486,7 +484,7 @@ def q_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_BOILERPLATE_NGRAMS = f"""
-WITH tok AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH tok AS (SELECT doc_id, {SQL_TOKS} AS toks FROM documents),
 sh AS (
   SELECT doc_id, unnest(list_distinct({sql_shingles('toks', 5)})) AS shingle
   FROM tok t(doc_id, toks)
@@ -707,12 +705,12 @@ def q_substring_dedup_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the jaccard_prefix_join lesson; was ~40 s of single-threaded
     # replays at sf0.1).
     sh = pin(
-        docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        restore_splits(docs, "doc_id")
         .select(
             "doc_id",
-            F.expr(f"size({_SPARK_TOKS})").alias("n_tokens"),
+            F.expr(f"size({SPARK_TOKS})").alias("n_tokens"),
             F.posexplode_outer(
-                F.expr(expr_shingles(_SPARK_TOKS, n))
+                F.expr(expr_shingles(SPARK_TOKS, n))
             ).alias("pos", "shingle"),
         )
     )
@@ -749,7 +747,7 @@ def q_substring_dedup_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_SUBSTRING_DEDUP_COVERAGE = f"""
-WITH tok AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH tok AS (SELECT doc_id, {SQL_TOKS} AS toks FROM documents),
 sh AS (
   SELECT doc_id, len(toks) AS n_tokens,
          unnest({sql_shingles('toks', 5)}) AS shingle,
@@ -767,7 +765,7 @@ covered AS (
              unnest([0, 1, 2, 3, 4]) u(i))
   GROUP BY doc_id
 ),
-base AS (SELECT doc_id, len({_TOKS}) AS n_tokens FROM documents)
+base AS (SELECT doc_id, len({SQL_TOKS}) AS n_tokens FROM documents)
 SELECT b.doc_id, b.n_tokens,
        COALESCE(c.covered_tokens, 0) AS covered_tokens,
        CAST(COALESCE(c.covered_tokens, 0) AS DOUBLE)

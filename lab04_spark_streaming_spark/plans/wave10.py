@@ -260,6 +260,7 @@ def q_item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(orders, "ok")
         .select("ck", "pk")
         .distinct()
+        # co-partitions the pin on the self-join key for the join below
         .repartition(spark.sparkContext.defaultParallelism, "ck")
     )
     marg = cp.groupBy("pk").agg(F.count(F.lit(1)).alias("n_u"))

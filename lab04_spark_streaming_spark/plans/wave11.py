@@ -24,20 +24,18 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lab04_spark_streaming_spark.operators.pinning import pin
+from lab04_spark_streaming_spark.operators.splits import restore_splits
 from lab04_spark_streaming_spark.functions.guards import (
     sql_stable_round,
     stable_round,
 )
 from lab04_spark_streaming_spark.operators.textops import (
-    expr_norm_digest,
-    expr_tokens,
-    sql_norm_digest,
-    sql_tokens,
+    SPARK_NORM_H,
+    SPARK_TOKS,
+    SQL_NORM_H,
+    SQL_TOKS,
 )
 from lab04_spark_streaming_spark.sources.files import load_table
-
-_SPARK_TOKS = expr_tokens("text")
-_TOKS = sql_tokens("text")
 
 
 # --- shared co-purchase graph ------------------------------------------------
@@ -49,6 +47,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
         )
+        # co-partitions on the join key: the distinct and join reuse it
         .repartition(spark.sparkContext.defaultParallelism, "ok")
         .distinct()
     )
@@ -312,10 +311,8 @@ def q_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fingerprint relation is the bounded selected set."""
     from lab04_spark_streaming_spark.operators.textops import expr_shingles
 
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
-    grams = docs.withColumn("_toks", F.expr(_SPARK_TOKS)).select(
+    docs = restore_splits(load_table(spark, sf_dir, "documents"), "doc_id")
+    grams = docs.withColumn("_toks", F.expr(SPARK_TOKS)).select(
         "doc_id",
         F.posexplode(F.expr(expr_shingles("_toks", _WINNOW_NGRAM))).alias(
             "pos", "g"
@@ -380,7 +377,7 @@ def _sql_winnowing_fingerprints() -> str:
     from lab04_spark_streaming_spark.operators.textops import sql_shingles
 
     return f"""
-WITH tok AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH tok AS (SELECT doc_id, {SQL_TOKS} AS toks FROM documents),
 grams AS (
   SELECT doc_id, pos - 1 AS pos,
          CAST(('0x' || substring(md5(g), 1, 8)) AS BIGINT) AS h
@@ -596,13 +593,13 @@ def q_fs_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = pin(
         load_table(spark, sf_dir, "documents").select(
             "doc_id",
-            F.expr(expr_norm_digest("text")).alias("dg"),
+            F.expr(SPARK_NORM_H).alias("dg"),
             F.substring("text", 1, _FS_BLOCK_CHARS).alias("blk"),
             (F.col("n_chars") / _FS_LEN_BUCKET).cast("long").alias("lenb"),
-            (F.expr(f"size({_SPARK_TOKS})") / _FS_TOK_BUCKET)
+            (F.expr(f"size({SPARK_TOKS})") / _FS_TOK_BUCKET)
             .cast("long")
             .alias("tokb"),
-            F.expr(f"try_element_at({_SPARK_TOKS}, 1)").alias("w1"),
+            F.expr(f"try_element_at({SPARK_TOKS}, 1)").alias("w1"),
         )
     )
     pairs = pin(
@@ -673,11 +670,11 @@ def _sql_fs_linkage() -> str:
     lr = " * ".join(ratio(g) for g in ("g1", "g2", "g3"))
     return f"""
 WITH d AS (
-  SELECT doc_id, {sql_norm_digest("text")} AS dg,
+  SELECT doc_id, {SQL_NORM_H} AS dg,
          substring(text, 1, {_FS_BLOCK_CHARS}) AS blk,
          CAST(n_chars // {_FS_LEN_BUCKET} AS BIGINT) AS lenb,
-         CAST(len({_TOKS}) // {_FS_TOK_BUCKET} AS BIGINT) AS tokb,
-         {_TOKS}[1] AS w1
+         CAST(len({SQL_TOKS}) // {_FS_TOK_BUCKET} AS BIGINT) AS tokb,
+         {SQL_TOKS}[1] AS w1
   FROM documents
 ),
 pairs AS (
@@ -730,9 +727,9 @@ def q_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: bigram fan-out is one per adjacent token pair; all LM
     relations are vocab- or bigram-type-bounded; continuation counts
     are two grouped aggregates on the bigram-type relation."""
-    toks = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    ).withColumn("_toks", F.expr(_SPARK_TOKS))
+    toks = restore_splits(
+        load_table(spark, sf_dir, "documents"), "doc_id"
+    ).withColumn("_toks", F.expr(SPARK_TOKS))
     bi = pin(
         toks.select(
             F.explode(
@@ -784,7 +781,7 @@ q_kneser_ney_bigram.__doc__ = q_kneser_ney_bigram.__doc__.format(k=_KN_TOP)
 
 
 SQL_KNESER_NEY_BIGRAM = f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {SQL_TOKS} AS t FROM documents),
 bi AS (
   SELECT t[i] AS w1, t[i + 1] AS w2, CAST(COUNT(*) AS BIGINT) AS c12
   FROM (
@@ -840,9 +837,7 @@ def q_media_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     media = media_from_documents(
-        load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism, "doc_id"
-        )
+        restore_splits(load_table(spark, sf_dir, "documents"), "doc_id")
     )
     ph = pin(phash_stub(media))
     bands = ph.select(

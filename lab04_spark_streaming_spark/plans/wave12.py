@@ -25,13 +25,10 @@ from lab04_spark_streaming_spark.functions.guards import (
 )
 from lab04_spark_streaming_spark.operators.ranks import global_ntile
 from lab04_spark_streaming_spark.operators.textops import (
-    expr_tokens,
-    sql_tokens,
+    SPARK_TOKS,
+    SQL_TOKS,
 )
 from lab04_spark_streaming_spark.sources.files import load_table
-
-_SPARK_TOKS = expr_tokens("text")
-_TOKS = sql_tokens("text")
 
 
 # --- sample-ratio-mismatch check ---------------------------------------------
@@ -476,7 +473,7 @@ def q_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
     docs = pin(
         load_table(spark, sf_dir, "documents").select(
-            "doc_id", F.expr(_SPARK_TOKS).alias("_toks")
+            "doc_id", F.expr(SPARK_TOKS).alias("_toks")
         )
     )
     rel = pin(
@@ -610,7 +607,7 @@ def _sql_retrieval_eval() -> str:
     k1, b = _BM25_K1, _BM25_B
     terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
     return f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {SQL_TOKS} AS t FROM documents),
 rel AS (
   SELECT doc_id,
          CAST(len(list_intersect(list_distinct(t), [{terms}])) AS BIGINT)

@@ -21,14 +21,12 @@ from lab04_spark_streaming_spark.functions.guards import (
     stable_round,
 )
 from lab04_spark_streaming_spark.operators.pinning import pin
+from lab04_spark_streaming_spark.operators.splits import restore_splits
 from lab04_spark_streaming_spark.operators.textops import (
-    expr_tokens,
-    sql_tokens,
+    SPARK_TOKS,
+    SQL_TOKS,
 )
 from lab04_spark_streaming_spark.sources.files import load_table
-
-_SPARK_TOKS = expr_tokens("text")
-_TOKS = sql_tokens("text")
 
 
 # --- Good–Turing frequency smoothing -----------------------------------------
@@ -50,9 +48,8 @@ def q_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # wc feeds N_r AND the token total; nr feeds the filter AND its
     # own shifted self — pin both (multi-consumer rule)
     wc = pin(
-        load_table(spark, sf_dir, "documents")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        .select(F.explode(F.expr(_SPARK_TOKS)).alias("w"))
+        restore_splits(load_table(spark, sf_dir, "documents"), "doc_id")
+        .select(F.explode(F.expr(SPARK_TOKS)).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("r"))
     )
@@ -97,7 +94,7 @@ q_good_turing.__doc__ = q_good_turing.__doc__.format(r=_GT_MAX_R)
 SQL_GOOD_TURING = f"""
 WITH wc AS (
   SELECT w, CAST(COUNT(*) AS BIGINT) AS r
-  FROM (SELECT unnest({_TOKS}) AS w FROM documents)
+  FROM (SELECT unnest({SQL_TOKS}) AS w FROM documents)
   GROUP BY w
 ),
 nr AS (SELECT r, CAST(COUNT(*) AS BIGINT) AS n_r FROM wc GROUP BY r),
@@ -140,14 +137,14 @@ def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the token stream feeds first-decile AND per-decile counts —
     # split-restore + pin once.
     toks = pin(
-        docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        restore_splits(docs, "doc_id")
         .crossJoin(F.broadcast(n_docs))
         .select(
             F.least(
                 F.lit(_HEAPS_SNAPSHOTS - 1).cast("long"),
                 F.expr(f"(doc_id * {_HEAPS_SNAPSHOTS}) div nd"),
             ).alias("dec"),
-            F.explode(F.expr(_SPARK_TOKS)).alias("w"),
+            F.explode(F.expr(SPARK_TOKS)).alias("w"),
         )
     )
     first_dec = toks.groupBy("w").agg(F.min("dec").alias("fd"))
@@ -214,7 +211,7 @@ WITH nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS nd FROM documents),
 toks AS (
   SELECT LEAST(CAST({_HEAPS_SNAPSHOTS - 1} AS BIGINT),
                (doc_id * {_HEAPS_SNAPSHOTS}) // nd.nd) AS dec,
-         unnest({_TOKS}) AS w
+         unnest({SQL_TOKS}) AS w
   FROM documents, nd
 ),
 first_dec AS (SELECT w, MIN(dec) AS fd FROM toks GROUP BY w),

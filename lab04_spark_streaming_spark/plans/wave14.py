@@ -28,13 +28,10 @@ from lab04_spark_streaming_spark.functions.guards import (
 )
 from lab04_spark_streaming_spark.operators.ranks import global_ntile
 from lab04_spark_streaming_spark.operators.textops import (
-    expr_tokens,
-    sql_tokens,
+    SPARK_TOKS,
+    SQL_TOKS,
 )
 from lab04_spark_streaming_spark.sources.files import load_table
-
-_SPARK_TOKS = expr_tokens("text")
-_TOKS = sql_tokens("text")
 
 
 # --- Lorenz concentration curve ---------------------------------------------
@@ -808,7 +805,7 @@ def q_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
     docs = pin(
         load_table(spark, sf_dir, "documents").select(
-            "doc_id", F.expr(_SPARK_TOKS).alias("_toks")
+            "doc_id", F.expr(SPARK_TOKS).alias("_toks")
         )
     )
     rel = docs.select(
@@ -905,7 +902,7 @@ def _sql_mrr_eval() -> str:
     k1, b = _BM25_K1, _BM25_B
     terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
     return f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {SQL_TOKS} AS t FROM documents),
 rel AS (
   SELECT doc_id,
          CAST(len(list_intersect(list_distinct(t), [{terms}])) AS BIGINT)
@@ -985,7 +982,7 @@ def q_ql_dirichlet_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
     docs = pin(
         load_table(spark, sf_dir, "documents").select(
-            "doc_id", F.expr(_SPARK_TOKS).alias("_toks")
+            "doc_id", F.expr(SPARK_TOKS).alias("_toks")
         )
     )
     dl = docs.select(
@@ -1056,7 +1053,7 @@ def _sql_ql_dirichlet_topk() -> str:
 
     terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
     return f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {SQL_TOKS} AS t FROM documents),
 dl AS (SELECT doc_id, len(t) AS dl FROM toks),
 alltok AS (SELECT unnest(t) AS w FROM toks),
 coll AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS cf FROM alltok GROUP BY w),
@@ -1119,9 +1116,9 @@ def q_ece_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
     per_doc = load_table(spark, sf_dir, "documents").select(
-        F.expr(f"cast(size({_SPARK_TOKS}) as bigint)").alias("dl"),
+        F.expr(f"cast(size({SPARK_TOKS}) as bigint)").alias("dl"),
         F.expr(
-            f"cast(size(array_intersect(array_distinct({_SPARK_TOKS}),"
+            f"cast(size(array_intersect(array_distinct({SPARK_TOKS}),"
             f" array({terms}))) > 0 as int)"
         ).alias("label"),
     ).select(
@@ -1194,8 +1191,8 @@ WITH per_doc AS (
          LEAST(GREATEST((dl - 60) // 10, 0), {_ECE_BINS - 1}) AS bin,
          1.0 / (1.0 + exp(-CAST(dl - 100 AS DOUBLE) / 20.0)) AS p
   FROM (
-    SELECT CAST(len({_TOKS}) AS BIGINT) AS dl,
-           CAST(len(list_intersect(list_distinct({_TOKS}),
+    SELECT CAST(len({SQL_TOKS}) AS BIGINT) AS dl,
+           CAST(len(list_intersect(list_distinct({SQL_TOKS}),
                 [{terms}])) > 0 AS INTEGER) AS label
     FROM documents
   )

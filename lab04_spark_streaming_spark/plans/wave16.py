@@ -35,6 +35,7 @@ def _part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
         )
+        # co-partitions on the join key: the distinct and join reuse it
         .repartition(spark.sparkContext.defaultParallelism, "ok")
         .distinct()
     )

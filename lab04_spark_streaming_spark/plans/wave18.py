@@ -19,18 +19,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lab04_spark_streaming_spark.operators.pinning import pin
+from lab04_spark_streaming_spark.operators.splits import restore_splits
 from lab04_spark_streaming_spark.functions.guards import (
     sql_stable_round,
     stable_round,
 )
 from lab04_spark_streaming_spark.operators.textops import (
-    expr_tokens,
-    sql_tokens,
+    SPARK_TOKS,
+    SQL_TOKS,
 )
 from lab04_spark_streaming_spark.sources.files import load_table
-
-_SPARK_TOKS = expr_tokens("text")
-_TOKS = sql_tokens("text")
 
 
 # --- Croston intermittent-demand forecast ---------------------------------------
@@ -168,9 +166,8 @@ def q_bigram_heldout_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval pass is one explode + two key joins; nothing global."""
     half = float(_HELDOUT_SMOOTH_NUM) / float(_HELDOUT_SMOOTH_DEN)
     toks = pin(
-        load_table(spark, sf_dir, "documents")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", F.expr(_SPARK_TOKS).alias("toks"))
+        restore_splits(load_table(spark, sf_dir, "documents"), "doc_id")
+        .select("doc_id", F.expr(SPARK_TOKS).alias("toks"))
     )
     train_w = toks.filter(F.col("doc_id") % 2 == 0).select(
         "doc_id", F.posexplode("toks").alias("i", "w")
@@ -235,7 +232,7 @@ def q_bigram_heldout_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_BIGRAM_HELDOUT_PPL = f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH toks AS (SELECT doc_id, {SQL_TOKS} AS toks FROM documents),
 train_w AS (
   SELECT doc_id, generate_subscripts(toks, 1) AS i, unnest(toks) AS w
   FROM toks WHERE doc_id % 2 = 0
@@ -310,7 +307,7 @@ def q_fairness_parity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     |sources|-row relation against one broadcast total."""
     per_doc = load_table(spark, sf_dir, "documents").select(
         "source",
-        (F.expr(f"size({_SPARK_TOKS})") >= 100).cast("int").alias("pos"),
+        (F.expr(f"size({SPARK_TOKS})") >= 100).cast("int").alias("pos"),
     )
     by_src = per_doc.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_s"),
@@ -350,7 +347,7 @@ q_fairness_parity_audit.__doc__ = q_fairness_parity_audit.__doc__.format(
 SQL_FAIRNESS_PARITY_AUDIT = f"""
 WITH per_doc AS (
   SELECT source,
-         CAST(len({_TOKS}) >= 100 AS INTEGER) AS pos
+         CAST(len({SQL_TOKS}) >= 100 AS INTEGER) AS pos
   FROM documents
 ),
 by_src AS (
@@ -512,6 +509,7 @@ def q_rec_hitrate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(orders, "ok")
         .select("ok", "pk", "is_train")
         .distinct()
+        # co-partitions the pin on the self-join key for the join below
         .repartition(spark.sparkContext.defaultParallelism, "ok")
     )
     train = basket.filter(F.col("is_train"))

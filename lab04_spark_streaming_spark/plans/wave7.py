@@ -31,13 +31,12 @@ from lab04_spark_streaming_spark.functions.guards import (
     stable_round,
 )
 from lab04_spark_streaming_spark.operators.textops import (
-    expr_tokens,
-    sql_tokens,
+    SPARK_NORM_H,
+    SPARK_TOKS,
+    SQL_NORM_H,
+    SQL_TOKS,
 )
 from lab04_spark_streaming_spark.sources.files import load_table
-
-_SPARK_TOKS = expr_tokens("text")
-_TOKS = sql_tokens("text")
 
 
 # --- per-source unigram KL drift -------------------------------------------
@@ -54,7 +53,7 @@ def q_source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join key is the word; sources are the output (tiny). Two
     aggregations, no window, nothing unbounded in one task."""
     toks = load_table(spark, sf_dir, "documents").select(
-        "source", F.explode(F.expr(_SPARK_TOKS)).alias("w")
+        "source", F.explode(F.expr(SPARK_TOKS)).alias("w")
     )
     # ns / cw / n are all derivable from sw — one tokenize+explode pass,
     # pinned with a lazy checkpoint so the three consumers don't replay
@@ -85,7 +84,7 @@ def q_source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_SOURCE_KL = f"""
 WITH toks AS (
-  SELECT source, unnest({_TOKS}) AS w FROM documents
+  SELECT source, unnest({SQL_TOKS}) AS w FROM documents
 ),
 sw AS (SELECT source, w, COUNT(*) AS cs FROM toks GROUP BY 1, 2),
 ns AS (SELECT source, CAST(SUM(cs) AS BIGINT) AS ns FROM sw GROUP BY 1),
@@ -313,7 +312,7 @@ def q_bpe_encode_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the per-doc encode join — pinned with a lazy checkpoint.
     toks = pin(
         load_table(spark, sf_dir, "documents")
-        .select("doc_id", F.explode(F.expr(_SPARK_TOKS)).alias("w"))
+        .select("doc_id", F.explode(F.expr(SPARK_TOKS)).alias("w"))
     )
     wc = toks.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
 
@@ -370,7 +369,7 @@ def q_bpe_encode_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_BPE_ENCODE_APPLY = f"""
 WITH wc AS (
   SELECT w, COUNT(*) AS cnt
-  FROM (SELECT unnest({_TOKS}) AS w FROM documents)
+  FROM (SELECT unnest({SQL_TOKS}) AS w FROM documents)
   GROUP BY 1
 ),
 m1 AS (
@@ -397,7 +396,7 @@ m2 AS (
 enc2 AS (
   SELECT w, replace(w2, (SELECT pair FROM m2), chr(2)) AS w3 FROM enc1
 ),
-toks AS (SELECT doc_id, unnest({_TOKS}) AS w FROM documents)
+toks AS (SELECT doc_id, unnest({SQL_TOKS}) AS w FROM documents)
 SELECT t.doc_id,
        CAST(SUM(length(t.w)) AS BIGINT) AS n_units_char,
        CAST(SUM(length(e.w3)) AS BIGINT) AS n_units_bpe2,
@@ -565,17 +564,6 @@ WHERE NOT EXISTS (
 
 
 # --- cross-source duplication matrix ---------------------------------------
-# The canonical normalized digest (operators/textops) — same identity
-# as dedup_exact_normalized (plans/llm.py).
-from lab04_spark_streaming_spark.operators.textops import (  # noqa: E402
-    expr_norm_digest,
-    sql_norm_digest,
-)
-
-_SPARK_NORM_H = expr_norm_digest("text")
-_SQL_NORM_H = sql_norm_digest("text")
-
-
 def q_cross_source_duplication(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source exact-duplication matrix — which source PAIRS share
     normalized content (mirror sites, syndication, scraper overlap):
@@ -587,7 +575,7 @@ def q_cross_source_duplication(spark: SparkSession, sf_dir: str) -> DataFrame:
     size). Exact integers, deterministic."""
     ds = (
         load_table(spark, sf_dir, "documents")
-        .select("source", F.expr(_SPARK_NORM_H).alias("digest"))
+        .select("source", F.expr(SPARK_NORM_H).alias("digest"))
         .distinct()
     )
     return (
@@ -604,7 +592,7 @@ def q_cross_source_duplication(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_CROSS_SOURCE_DUPLICATION = f"""
 WITH ds AS (
-  SELECT DISTINCT source, {_SQL_NORM_H} AS digest FROM documents
+  SELECT DISTINCT source, {SQL_NORM_H} AS digest FROM documents
 )
 SELECT a.source AS source_a, b.source AS source_b,
        COUNT(*) AS n_shared_digests
@@ -627,7 +615,7 @@ def q_vocab_novelty_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE tokenize pass for both snapshot halves (lazy checkpoint).
     toks = pin(
         load_table(spark, sf_dir, "documents")
-        .select("doc_id", F.explode(F.expr(_SPARK_TOKS)).alias("w"))
+        .select("doc_id", F.explode(F.expr(SPARK_TOKS)).alias("w"))
     )
     base_vocab = (
         toks.filter(F.col("doc_id") % 2 == 0).select("w").distinct()
@@ -669,7 +657,7 @@ def q_vocab_novelty_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_VOCAB_NOVELTY = f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_TOKS}) AS w FROM documents
+  SELECT doc_id, unnest({SQL_TOKS}) AS w FROM documents
 ),
 base_vocab AS (
   SELECT DISTINCT w FROM toks WHERE doc_id % 2 = 0

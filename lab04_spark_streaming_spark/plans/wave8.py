@@ -30,14 +30,12 @@ from lab04_spark_streaming_spark.functions.guards import (
     stable_round,
 )
 from lab04_spark_streaming_spark.operators.textops import (
-    expr_tokens,
-    sql_tokens,
+    SPARK_TOKS,
+    SQL_TOKS,
 )
 from lab04_spark_streaming_spark.operators.pinning import pin
+from lab04_spark_streaming_spark.operators.splits import restore_splits
 from lab04_spark_streaming_spark.sources.files import load_table
-
-_SPARK_TOKS = expr_tokens("text")
-_TOKS = sql_tokens("text")
 
 
 # --- PMI collocations -------------------------------------------------------
@@ -78,11 +76,10 @@ def q_pmi_word_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     window (bigram PMI, kneser_ney's relation), both of which bound
     pairs linearly in tokens."""
     t = pin(
-        load_table(spark, sf_dir, "documents")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        restore_splits(load_table(spark, sf_dir, "documents"), "doc_id")
         .select(
             "doc_id",
-            F.explode(F.expr(f"array_distinct({_SPARK_TOKS})")).alias("w"),
+            F.explode(F.expr(f"array_distinct({SPARK_TOKS})")).alias("w"),
         )
     )
     marg = pin(
@@ -130,7 +127,7 @@ def q_pmi_word_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_PMI_WORD_PAIRS = f"""
 WITH t AS (
   SELECT DISTINCT doc_id, w
-  FROM (SELECT doc_id, unnest({_TOKS}) AS w FROM documents)
+  FROM (SELECT doc_id, unnest({SQL_TOKS}) AS w FROM documents)
 ),
 p AS (
   SELECT a.w AS w1, b.w AS w2, COUNT(*) AS n12
@@ -172,12 +169,11 @@ def q_chi2_terms_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the (source, term) relation is vocab×sources-bounded; the
     rank window is partitioned by source. N is a broadcast scalar."""
     t = pin(
-        load_table(spark, sf_dir, "documents")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        restore_splits(load_table(spark, sf_dir, "documents"), "doc_id")
         .select(
             "doc_id",
             "source",
-            F.explode(F.expr(f"array_distinct({_SPARK_TOKS})")).alias("w"),
+            F.explode(F.expr(f"array_distinct({SPARK_TOKS})")).alias("w"),
         )
     )
     sw = t.groupBy("source", "w").agg(F.count(F.lit(1)).alias("a"))
@@ -248,7 +244,7 @@ def q_chi2_terms_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_CHI2_TERMS = f"""
 WITH t AS (
   SELECT DISTINCT doc_id, source, w
-  FROM (SELECT doc_id, source, unnest({_TOKS}) AS w FROM documents)
+  FROM (SELECT doc_id, source, unnest({SQL_TOKS}) AS w FROM documents)
 ),
 sw AS (SELECT source, w, COUNT(*) AS a FROM t GROUP BY 1, 2),
 nw AS (SELECT w, CAST(SUM(a) AS BIGINT) AS nw FROM sw GROUP BY 1),
@@ -302,7 +298,7 @@ def q_zipf_slope_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates ≤100 rows per source. No scalar cross-joins."""
     tc = (
         load_table(spark, sf_dir, "documents")
-        .select("source", F.explode(F.expr(_SPARK_TOKS)).alias("w"))
+        .select("source", F.explode(F.expr(SPARK_TOKS)).alias("w"))
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -344,7 +340,7 @@ def q_zipf_slope_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_ZIPF_SLOPE = f"""
 WITH tc AS (
   SELECT source, w, COUNT(*) AS c
-  FROM (SELECT source, unnest({_TOKS}) AS w FROM documents)
+  FROM (SELECT source, unnest({SQL_TOKS}) AS w FROM documents)
   GROUP BY 1, 2
 ),
 top AS (
@@ -1036,9 +1032,8 @@ def q_vocab_coverage_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: vocab-bounded count relation, per-partition top-k heaps, a
     broadcast 1-row total. Never a global sort of the vocabulary."""
     tc = pin(
-        load_table(spark, sf_dir, "documents")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        .select(F.explode(F.expr(_SPARK_TOKS)).alias("w"))
+        restore_splits(load_table(spark, sf_dir, "documents"), "doc_id")
+        .select(F.explode(F.expr(SPARK_TOKS)).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -1095,7 +1090,7 @@ def q_vocab_coverage_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_VOCAB_COVERAGE = f"""
 WITH tc AS (
   SELECT w, COUNT(*) AS c
-  FROM (SELECT unnest({_TOKS}) AS w FROM documents)
+  FROM (SELECT unnest({SQL_TOKS}) AS w FROM documents)
   GROUP BY 1
 ),
 tot AS (
@@ -1361,15 +1356,13 @@ def q_simhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     error is hash-checked cross-engine. Candidate-bounded: the exact
     verify touches only band survivors, never all pairs."""
     from lab04_spark_streaming_spark.operators import dedup as dd
-    from lab04_spark_streaming_spark.operators.textops import expr_tokens
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = dd.simhash_pairs(docs)
-    toks = expr_tokens("text")
     sets = pin(
-        docs.filter(F.expr(f"size(array_distinct({toks})) > 0"))
+        docs.filter(F.expr(f"size(array_distinct({SPARK_TOKS})) > 0"))
         .select(
-            "doc_id", F.expr(f"array_distinct({toks})").alias("s")
+            "doc_id", F.expr(f"array_distinct({SPARK_TOKS})").alias("s")
         )
     )
     xa = sets.select(F.col("doc_id").alias("id_a"), F.col("s").alias("sa"))
@@ -1405,8 +1398,8 @@ def _sql_simhash_error() -> str:
     from lab04_spark_streaming_spark.plans.llm import _sql_simhash
 
     return f"""
-WITH tok AS (SELECT doc_id, list_distinct({_TOKS}) AS toks FROM documents
-             WHERE len(list_distinct({_TOKS})) > 0),
+WITH tok AS (SELECT doc_id, list_distinct({SQL_TOKS}) AS toks FROM documents
+             WHERE len(list_distinct({SQL_TOKS})) > 0),
 sh AS (SELECT doc_id, CAST({_sql_simhash()} AS BIGINT) AS simhash FROM tok),
 bands AS (
   SELECT doc_id, simhash, b AS band,

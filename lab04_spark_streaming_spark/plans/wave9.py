@@ -36,10 +36,10 @@ from lab04_spark_streaming_spark.functions.guards import (
 )
 from lab04_spark_streaming_spark.operators.ranks import global_ntile
 from lab04_spark_streaming_spark.operators.textops import (
-    expr_norm_digest,
-    expr_tokens,
-    sql_norm_digest,
-    sql_tokens,
+    SPARK_NORM_H,
+    SPARK_TOKS,
+    SQL_NORM_H,
+    SQL_TOKS,
 )
 from lab04_spark_streaming_spark.operators.pinning import pin
 from lab04_spark_streaming_spark.operators.splits import restore_splits
@@ -47,9 +47,6 @@ from lab04_spark_streaming_spark.sources.files import (
     load_table,
     parquet_row_count,
 )
-
-_SPARK_TOKS = expr_tokens("text")
-_TOKS = sql_tokens("text")
 
 
 # --- two-sample Kolmogorov–Smirnov ----------------------------------------
@@ -1102,7 +1099,7 @@ def q_blocking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     would already be the expensive step."""
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.expr(expr_norm_digest("text")).alias("dg"),
+        F.expr(SPARK_NORM_H).alias("dg"),
         F.substring("text", 1, _BLOCK_PREFIX_CHARS).alias("blk"),
     )
     n_tot = docs.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -1159,7 +1156,7 @@ q_blocking_eval.__doc__ = q_blocking_eval.__doc__.format(
 
 SQL_BLOCKING_EVAL = f"""
 WITH d AS (
-  SELECT doc_id, {sql_norm_digest("text")} AS dg,
+  SELECT doc_id, {SQL_NORM_H} AS dg,
          substring(text, 1, {_BLOCK_PREFIX_CHARS}) AS blk
   FROM documents
 ),
@@ -1215,13 +1212,12 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the bucketed token stream feeds the LM counts AND the scoring
     # join — split-restore + pin it once (multi-consumer rule)
     toks = pin(
-        load_table(spark, sf_dir, "documents")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        restore_splits(load_table(spark, sf_dir, "documents"), "doc_id")
         .select(
             "doc_id",
             "source",
             F.expr(f"source in ({tgt_list})").alias("is_tgt"),
-            F.explode(F.expr(_SPARK_TOKS)).alias("w"),
+            F.explode(F.expr(SPARK_TOKS)).alias("w"),
         )
         .select(
             "doc_id",
@@ -1272,7 +1268,7 @@ WITH toks AS (
   SELECT doc_id, source,
          source IN ({", ".join(f"'{s}'" for s in _DSIR_TARGET_SOURCES)}) AS is_tgt,
          CAST(('0x' || substring(md5(w), 1, 8)) AS BIGINT) % {_DSIR_BUCKETS} AS b
-  FROM (SELECT doc_id, source, unnest({_TOKS}) AS w FROM documents)
+  FROM (SELECT doc_id, source, unnest({SQL_TOKS}) AS w FROM documents)
 ),
 lm AS (
   SELECT b,
@@ -1396,11 +1392,10 @@ def q_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation, and the rank window runs over only the k survivors."""
     stop_arr = ", ".join(f"'{w}'" for w in _RAKE_STOPWORDS)
     toks = (
-        load_table(spark, sf_dir, "documents")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        restore_splits(load_table(spark, sf_dir, "documents"), "doc_id")
         .select(
             "doc_id",
-            F.posexplode(F.expr(_SPARK_TOKS)).alias("pos", "w"),
+            F.posexplode(F.expr(SPARK_TOKS)).alias("pos", "w"),
         )
         .withColumn("is_stop", F.expr(f"w in ({stop_arr})"))
     )
@@ -1458,8 +1453,8 @@ WITH toks AS (
          w IN ({", ".join(f"'{w}'" for w in _RAKE_STOPWORDS)}) AS is_stop
   FROM (
     SELECT doc_id,
-           generate_subscripts({_TOKS}, 1) - 1 AS pos,
-           unnest({_TOKS}) AS w
+           generate_subscripts({SQL_TOKS}, 1) - 1 AS pos,
+           unnest({SQL_TOKS}) AS w
     FROM documents
   )
 ),
@@ -1710,7 +1705,7 @@ def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc ≈ 10^10 rows on a web corpus). Bit-identical to the oracle's
     ntile."""
     toks = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.explode(F.expr(_SPARK_TOKS)).alias("w")
+        "doc_id", F.explode(F.expr(SPARK_TOKS)).alias("w")
     )
     freq = toks.groupBy("w").agg(F.count(F.lit(1)).alias("tf"))
     total = freq.agg(F.sum("tf").alias("n_total"))
@@ -1747,7 +1742,7 @@ def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_PERPLEXITY_BUCKETS = f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_TOKS}) AS w FROM documents
+  SELECT doc_id, unnest({SQL_TOKS}) AS w FROM documents
 ),
 freq AS (SELECT w, COUNT(*) AS tf FROM toks GROUP BY 1),
 total AS (SELECT CAST(SUM(tf) AS BIGINT) AS n_total FROM freq),
@@ -1944,17 +1939,13 @@ def q_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial aggregates per partition. The rank window sees {r} rows."""
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_type") == _BOOT_TYPE)
     reps = spark.range(_BOOT_REPS).select(F.col("id").alias("rep"))
-    # Split restoration (r14 opt round, guide §2.5 input skew): the
-    # type-filtered slice of a one/few-row-group events file arrives as
-    # a single input split, so the x{r} replicate fan-out (a per-(rep,
-    # event_id) md5 + threshold ladder — the query's entire compute)
-    # ran as ONE task (measured 1.8 s of a 2.1 s sf0.1 profile).  Hash
-    # on the id (deterministic — no round-robin re-sort) sized to the
-    # session parallelism; the n-row shuffle is ~1/{r}th of the
-    # expansion work it parallelizes at any scale.  Decimal partial
+    # Split restoration: the type-filtered slice of a one-row-group
+    # events file arrives as a single input split, so the x{r}
+    # replicate fan-out (a per-(rep, event_id) md5 + threshold ladder —
+    # the query's entire compute) ran as ONE task (measured 1.8 s of a
+    # 2.1 s sf0.1 profile). The n-row shuffle is ~1/{r}th of the
+    # expansion work it parallelizes at any scale. Decimal partial
     # aggregation is order-independent, so results are unchanged.
-    # r15 (verdict item 4): conditional on the scan's actual split
-    # count — multi-split cluster inputs skip the shuffle entirely.
     par = restore_splits(ev, "event_id") if _BOOT_REPS >= 10 else ev
     h = F.expr(
         "cast(conv(substring(md5(concat('boot|', cast(rep as string), '|',"
@@ -2081,7 +2072,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     k1, b = _BM25_K1, _BM25_B
     terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.expr(_SPARK_TOKS).alias("_toks")
+        "doc_id", F.expr(SPARK_TOKS).alias("_toks")
     )
     dl = docs.select(
         "doc_id", F.expr("cast(size(_toks) as bigint)").alias("dl")
@@ -2206,7 +2197,7 @@ def _sql_rrf_fusion() -> str:
     k1, b = _BM25_K1, _BM25_B
     terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
     return f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {SQL_TOKS} AS t FROM documents),
 dl AS (SELECT doc_id, len(t) AS dl FROM toks),
 corpus AS (
   SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl
@@ -2302,7 +2293,7 @@ def q_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     wc = (
         load_table(spark, sf_dir, "documents")
         .filter(F.expr(f"source in ({srcs})"))
-        .select("source", F.explode(F.expr(_SPARK_TOKS)).alias("w"))
+        .select("source", F.explode(F.expr(SPARK_TOKS)).alias("w"))
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -2369,7 +2360,7 @@ def _sql_js_divergence() -> str:
     return f"""
 WITH wc AS (
   SELECT source, w, CAST(COUNT(*) AS BIGINT) AS c
-  FROM (SELECT source, unnest({_TOKS}) AS w FROM documents
+  FROM (SELECT source, unnest({SQL_TOKS}) AS w FROM documents
         WHERE source IN ({srcs}))
   GROUP BY source, w
 ),
@@ -2447,10 +2438,10 @@ def q_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     vecs = pin(
-        emb.select(
-            "vec_id", F.expr(_expr_quantize("embedding")).alias("qv")
+        restore_splits(
+            emb.select("vec_id", F.expr(_expr_quantize("embedding")).alias("qv")),
+            "vec_id",
         )
-        .repartition(spark.sparkContext.defaultParallelism)
     )
     d2 = (
         "aggregate(zip_with(qv, carr, (x, y) -> (x - y) * (x - y)), "
@@ -2569,11 +2560,9 @@ def q_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs."""
     from lab04_spark_streaming_spark.operators.textops import expr_shingles
 
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    docs = restore_splits(load_table(spark, sf_dir, "documents"), "doc_id")
     sh = pin(
-        docs.withColumn("_toks", F.expr(_SPARK_TOKS))
+        docs.withColumn("_toks", F.expr(SPARK_TOKS))
         .select(
             "doc_id",
             F.explode(

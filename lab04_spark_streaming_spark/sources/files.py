@@ -36,19 +36,23 @@ from lab04_spark_streaming_spark.schemas import STAR_TABLE_CONTRACT, STAR_TABLES
 _TS_COLS = {"events": ["ts"]}
 
 
-def _footers(sf_dir: str, name: str):
-    """The parquet footer (``FileMetaData``) of ``{sf_dir}/{name}.parquet``,
-    or of each part file when that path is a directory."""
+def _table_path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def _footers(path: str):
+    """The parquet footer (``FileMetaData``) of the file at ``path`` (a
+    local path or a URI, as ``DataFrame.inputFiles()`` lists them), or
+    of each part file when ``path`` is a local directory."""
     import pyarrow.parquet as pq
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
     if not os.path.isdir(path):
-        yield pq.ParquetFile(path).metadata
+        yield pq.read_metadata(path)
         return
     for root, _dirs, files in os.walk(path):
         for f in files:
             if f.endswith(".parquet"):
-                yield pq.ParquetFile(os.path.join(root, f)).metadata
+                yield pq.read_metadata(os.path.join(root, f))
 
 
 def parquet_row_count(sf_dir: str, name: str) -> int:
@@ -63,7 +67,13 @@ def parquet_row_count(sf_dir: str, name: str) -> int:
     see q_triangle_count's honesty note.)
     Handles both a single file and a directory of part files; on a real
     cluster the same numbers come from the catalog / file listing."""
-    return sum(md.num_rows for md in _footers(sf_dir, name))
+    return sum(md.num_rows for md in _footers(_table_path(sf_dir, name)))
+
+
+def parquet_row_groups(path: str) -> int:
+    """Row groups in the parquet file (or directory of part files) at
+    ``path``, summed from the footers — no Spark job."""
+    return sum(md.num_row_groups for md in _footers(path))
 
 
 # Ticks per second of each parquet TIMESTAMP unit.
@@ -91,7 +101,7 @@ def parquet_ts_span_s(
     column is not a parquet TIMESTAMP (e.g. Spark's legacy INT96):
     callers then plan as for an unknown span."""
     lo = hi = None
-    for md in _footers(sf_dir, name):
+    for md in _footers(_table_path(sf_dir, name)):
         idx = [md.schema.column(i).path for i in range(len(md.schema))].index(col)
         unit = _TS_UNITS.get(_time_unit(md.schema.column(idx)))
         if unit is None:
@@ -118,8 +128,8 @@ def _read_schema(sf_dir: str, name: str) -> str | None:
     missing or holds no parquet file, or when a footer column is not in
     the contract or its type has drifted away from it: a declared type
     that disagrees with the file fails the scan."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    md = next(_footers(sf_dir, name), None) if os.path.exists(path) else None
+    path = _table_path(sf_dir, name)
+    md = next(_footers(path), None) if os.path.exists(path) else None
     if md is None:
         return None
     contract = dict(STAR_TABLE_CONTRACT.get(name, ()))
@@ -150,7 +160,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     schema = _read_schema(sf_dir, name)
     reader = spark.read if schema is None else spark.read.schema(schema)
-    df = reader.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = reader.parquet(_table_path(sf_dir, name))
     for c in _TS_COLS.get(name, []):
         field = df.schema[c]
         if isinstance(field.dataType, LongType):
@@ -214,8 +224,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     identical schemas for the same table."""
     out: dict[str, DataFrame] = {}
     for name in STAR_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
+        if os.path.exists(_table_path(sf_dir, name)):
             out[name] = load_table(spark, sf_dir, name)
     return out
 

@@ -486,15 +486,15 @@ def cms_counters(df: DataFrame, depth: int = 4, width: int = 256) -> DataFrame:
     unsupported in streaming — the per-token stack here lands on the
     IDENTICAL counters (asserted in tests/test_streaming.py)."""
     from lab04_spark_streaming_spark.operators.textops import (
+        SPARK_TOKS,
         expr_hash_int,
-        expr_tokens,
     )
 
     stack_args = ", ".join(
         f"{j}, {expr_hash_int('w', seed=j)} % {width}" for j in range(depth)
     )
     return (
-        df.select(F.explode(F.expr(expr_tokens("text"))).alias("w"))
+        df.select(F.explode(F.expr(SPARK_TOKS)).alias("w"))
         .select(F.expr(f"stack({depth}, {stack_args}) as (j, bucket)"))
         .groupBy("j", "bucket")
         .agg(F.count(F.lit(1)).alias("c"))
